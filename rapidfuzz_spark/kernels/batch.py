@@ -4,14 +4,23 @@ This is the Spark analogue of the reference's ``BatchComparator`` one×many
 caching (/root/reference/src/distance/levenshtein.rs:1625-1657,
 Readme.md:100-106), applied *within* an Arrow batch of a pandas UDF:
 
-- pairs whose pattern fits one machine word (len <= 64) are scored by a
-  **NumPy-vectorized Myers/Hyyrö kernel across pairs** (any codepoints —
-  alphabets are densely remapped per batch): the char loop runs over text positions, each step processing
-  every still-active pair with uint64 SIMD-ish ops. Pairs are sorted by
-  text length so the active set is a shrinking prefix (no wasted lanes).
-- remaining pairs take the arbitrary-precision Python-int kernels with a
+- one routing pass (``_route``) reduces every pair to its core: equal
+  pairs short-cut, the common affix is stripped (not for Jaro, which is
+  not affix-invariant), and the shorter side becomes the pattern. Pairs
+  with an empty core are scored from the core lengths alone.
+- patterns of up to 64*_BLOCK_MAX_WORDS chars are grouped by word count
+  W and scored by **NumPy-vectorized blockwise Myers/Hyyrö kernels
+  across pairs** (any codepoints — alphabets are densely remapped per
+  batch); patterns of <= 64 chars are simply the W=1 group. The char
+  loop runs over text positions, each step processing every still-active
+  pair with uint64 ops. Pairs are sorted by text length so the active
+  set is a shrinking prefix (no wasted lanes).
+- longer patterns take the arbitrary-precision Python-int kernels with a
   per-batch pattern-mask cache keyed by the pattern string (the
   BatchComparator analogue: pattern state is built once per distinct s1).
+- ``levenshtein_batch`` adds its own selectors on top of the shared
+  pass: mbleven for cutoffs <= 3, the Ukkonen-banded kernel, and the
+  score-hint band schedule.
 
 No per-row Python UDF dispatch ever happens on the Spark side — one UDF
 call scores the whole Arrow batch.
@@ -19,7 +28,7 @@ call scores the whole Arrow batch.
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import NamedTuple
 
 import numpy as np
 
@@ -84,97 +93,6 @@ def _compact_alphabet(pcodes: np.ndarray, tcodes: np.ndarray):
         0,
     )
     return p_new, t_new, nu + 1
-
-
-def _build_pm_word(pats: list, codes, lens, offs, sigma: int = 256) -> np.ndarray:
-    """PM bitmask table, shape (n, sigma) uint64, for patterns of len <= 64."""
-    n = len(pats)
-    pm = np.zeros((n, sigma), dtype=np.uint64)
-    rows = np.repeat(np.arange(n, dtype=np.intp), lens)
-    pos = np.arange(len(codes), dtype=np.int64) - np.repeat(offs[:-1], lens)
-    bits = (np.uint64(1) << pos.astype(np.uint64))
-    np.bitwise_or.at(pm, (rows, codes), bits)
-    return pm
-
-
-def _word_masks(lens: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    mask = np.array([(1 << int(m)) - 1 for m in lens], dtype=np.uint64)
-    last = (np.uint64(1) << (lens.astype(np.uint64) - np.uint64(1)))
-    return mask, last
-
-
-def myers_batch_word(pats: list, texts: list) -> np.ndarray:
-    """Vectorized-across-pairs Myers for patterns with len in [1, 64].
-
-    Returns int64 distances. Any Unicode codepoints; texts non-empty
-    (callers handle the trivial cases).
-    """
-    n = len(pats)
-    pcodes, plens, poffs = _encode_codes(pats)
-    tcodes, tlens, toffs = _encode_codes(texts)
-    pcodes, tcodes, sigma = _compact_alphabet(pcodes, tcodes)
-    # sort by text length desc -> active pairs are a prefix at every step
-    order = np.argsort(-tlens, kind="stable")
-    inv = np.empty(n, dtype=np.intp)
-    inv[order] = np.arange(n, dtype=np.intp)
-    pm = _build_pm_word(pats, pcodes, plens, poffs, sigma)[order]
-    plens_s = plens[order]
-    tlens_s = tlens[order]
-    toffs_s = toffs[:-1][order]
-    mask, last = _word_masks(plens_s)
-    one = np.uint64(1)
-    vp = mask.copy()
-    vn = np.zeros(n, dtype=np.uint64)
-    dist = plens_s.astype(np.int64).copy()
-    max_t = int(tlens_s[0]) if n else 0
-    active = n
-    rows = np.arange(n, dtype=np.intp)
-    for j in range(max_t):
-        # shrink the active prefix
-        while active > 0 and tlens_s[active - 1] <= j:
-            active -= 1
-        a = slice(0, active)
-        cj = tcodes[toffs_s[a] + j]
-        pm_j = pm[rows[a], cj]
-        x = pm_j | vn[a]
-        d0 = (((x & vp[a]) + vp[a]) ^ vp[a]) | x
-        hp = vn[a] | ~(d0 | vp[a])
-        hn = d0 & vp[a]
-        dist[a] += ((hp & last[a]) != 0).astype(np.int64)
-        dist[a] -= ((hn & last[a]) != 0).astype(np.int64)
-        hp = ((hp << one) | one) & mask[a]
-        hn = (hn << one) & mask[a]
-        vp[a] = hn | (~(d0 | hp) & mask[a])
-        vn[a] = hp & d0
-    return dist[inv]
-
-
-def lcs_batch_word(pats: list, texts: list) -> np.ndarray:
-    """Vectorized-across-pairs Hyyrö LCS length for patterns len in [1, 64]."""
-    n = len(pats)
-    pcodes, plens, poffs = _encode_codes(pats)
-    tcodes, tlens, toffs = _encode_codes(texts)
-    pcodes, tcodes, sigma = _compact_alphabet(pcodes, tcodes)
-    order = np.argsort(-tlens, kind="stable")
-    inv = np.empty(n, dtype=np.intp)
-    inv[order] = np.arange(n, dtype=np.intp)
-    pm = _build_pm_word(pats, pcodes, plens, poffs, sigma)[order]
-    plens_s = plens[order]
-    tlens_s = tlens[order]
-    toffs_s = toffs[:-1][order]
-    mask, _ = _word_masks(plens_s)
-    s = mask.copy()
-    max_t = int(tlens_s[0]) if n else 0
-    active = n
-    rows = np.arange(n, dtype=np.intp)
-    for j in range(max_t):
-        while active > 0 and tlens_s[active - 1] <= j:
-            active -= 1
-        a = slice(0, active)
-        m = pm[rows[a], tcodes[toffs_s[a] + j]]
-        u = s[a] & m
-        s[a] = ((s[a] + u) & mask[a]) | (s[a] - u)
-    return plens_s[inv].astype(np.int64) - _popcount_u64(s[inv]).astype(np.int64)
 
 
 def _build_pm_block(
@@ -834,11 +752,7 @@ _BLOCK_CHUNK = 2048
 _BLOCK_CHUNK_WIDE = 1024
 
 
-def _block_chunk_for(W: int) -> int:
-    return _BLOCK_CHUNK if W <= 16 else _BLOCK_CHUNK_WIDE
-
-
-def _block_bucket(plen: int) -> int:
+def _block_bucket(plen):
     """Exact word count — measured better than power-of-two padding:
     padded groups pay extra word-steps on every char, which outweighs the
     per-group numpy overhead they save (kernel is compute-bound, not
@@ -846,127 +760,157 @@ def _block_bucket(plen: int) -> int:
     return (plen + 63) >> 6
 
 
-def _run_block_groups(groups: dict, out: np.ndarray, kernel) -> None:
-    """groups: W -> (indices, pats, texts); runs `kernel` per W in
-    memory-bounded chunks and scatters results into `out`."""
-    for W, (idx, ps, ts) in groups.items():
-        step = _block_chunk_for(W)
-        for lo in range(0, len(idx), step):
-            hi = lo + step
-            out[np.asarray(idx[lo:hi], dtype=np.intp)] = kernel(
-                ps[lo:hi], ts[lo:hi], W
-            )
+class _Cores(NamedTuple):
+    """A batch after the shared routing pass (``_route``).
+
+    Per pair: ``plen``/``tlen`` are the core lengths of the shorter and
+    longer side, ``affix`` the stripped common prefix + suffix length (an
+    equal pair is all affix, with an empty core). Per non-empty core: its
+    batch row, the core strings (object arrays, shorter side first) and
+    the pattern's word count."""
+
+    plen: np.ndarray
+    tlen: np.ndarray
+    affix: np.ndarray
+    rows: np.ndarray
+    pats: np.ndarray
+    texts: np.ndarray
+    words: np.ndarray
 
 
-def _affix_strip_pair(a: str, b: str) -> tuple[str, str, int]:
+def _affix_strip_pair(a: str, b: str) -> tuple[str, str]:
     pfx = common_prefix_len(a, b)
     a, b = a[pfx:], b[pfx:]
     sfx = common_suffix_len(a, b)
     if sfx:
         a, b = a[:-sfx], b[:-sfx]
-    return a, b, pfx + sfx
+    return a, b
 
 
-def _is_word_ok(s: str) -> bool:
-    return len(s) <= 64
+def _route(a_arr, b_arr, strip: bool = True) -> _Cores:
+    """The per-pair routing pass shared by the bit-parallel families:
+    equal-pair short-cut, common-affix strip (``strip``; Jaro is not
+    affix-invariant), and a swap so the pattern is the shorter side.
 
-
-def _short_batch_lens(a_arr, b_arr):
-    """(alens, blens) when EVERY pair is non-empty and one-word sized
-    (<= 64 chars) — the record-linkage hot shape — else None. Such batches
-    skip the per-pair routing/affix loop entirely (measured ~40% of wall
-    at ~20-char names) and go straight to one vectorized kernel call:
-    affix stripping and equal-pair short-circuits are optimizations the
-    word kernels don't need for correctness."""
+    When EVERY pair is non-empty and <= 64 chars (the record-linkage hot
+    shape) the per-pair loop is skipped — it measured ~40% of wall at
+    ~20-char names (BENCH.md §2) — and the whole batch becomes one W=1
+    group: affix stripping and the equal-pair short-cut are optimizations
+    the kernels don't need for correctness."""
     n = len(a_arr)
-    if not n:
-        return None
-    alens = np.fromiter((len(s) for s in a_arr), dtype=np.int64, count=n)
-    blens = np.fromiter((len(s) for s in b_arr), dtype=np.int64, count=n)
-    if (
-        int(alens.min()) > 0
-        and int(blens.min()) > 0
-        and int(alens.max()) <= 64
-        and int(blens.max()) <= 64
-    ):
-        return alens, blens
-    return None
+    la = np.fromiter(map(len, a_arr), dtype=np.int64, count=n)
+    lb = np.fromiter(map(len, b_arr), dtype=np.int64, count=n)
+    if n and min(la.min(), lb.min()) > 0 and max(la.max(), lb.max()) <= 64:
+        swap = la > lb
+        return _Cores(
+            np.minimum(la, lb),
+            np.maximum(la, lb),
+            np.zeros(n, dtype=np.int64),
+            np.arange(n, dtype=np.intp),
+            np.where(swap, b_arr, a_arr),
+            np.where(swap, a_arr, b_arr),
+            np.ones(n, dtype=np.int64),
+        )
+    rows, ps, ts = [], [], []
+    for i in range(n):
+        a, b = a_arr[i], b_arr[i]
+        if a == b:
+            continue
+        if strip:
+            a, b = _affix_strip_pair(a, b)
+        if len(a) > len(b):
+            a, b = b, a
+        rows.append(i)
+        ps.append(a)
+        ts.append(b)
+    rows = np.asarray(rows, dtype=np.intp)
+    plen = np.zeros(n, dtype=np.int64)
+    tlen = np.zeros(n, dtype=np.int64)
+    plen[rows] = np.fromiter(map(len, ps), dtype=np.int64, count=len(ps))
+    tlen[rows] = np.fromiter(map(len, ts), dtype=np.int64, count=len(ts))
+    core = plen[rows] > 0
+    rows = rows[core]
+    return _Cores(
+        plen,
+        tlen,
+        (la + lb - plen - tlen) >> 1,
+        rows,
+        np.array(ps, dtype=object)[core],
+        np.array(ts, dtype=object)[core],
+        _block_bucket(plen[rows]),
+    )
 
 
-def _short_swap(a_arr, b_arr, alens, blens) -> tuple[list, list]:
-    """(patterns, texts) with the shorter string of each pair as pattern."""
-    swap = alens > blens
-    return list(np.where(swap, b_arr, a_arr)), list(np.where(swap, a_arr, b_arr))
+def _score(c: _Cores, out, kernel, scalar=None, sel=None, extra=(), **kw) -> None:
+    """Score the cores ``sel`` (default: all) into ``out`` at their batch
+    rows. Patterns of up to _BLOCK_MAX_WORDS words run the blockwise
+    ``kernel`` once per word count W, in chunks of _BLOCK_CHUNK pairs
+    (_BLOCK_CHUNK_WIDE above W=16), each chunk getting its slice of the
+    ``extra`` per-core arrays (aligned with ``sel``) and ``kw``. Longer
+    patterns run the big-int ``scalar`` kernel with a per-batch pattern
+    cache. The chunk width keeps the per-char working set cache-resident:
+    on ~20-char name pairs 2048-pair chunks measured +53% single-thread
+    and +35% machine-wide under 16 worker processes against whole Arrow
+    batches (BENCH.md §2)."""
+    if sel is None:
+        sel = np.arange(len(c.rows), dtype=np.intp)
+    words = c.words[sel]
+    pm_cache: dict = {}
+    for W in np.unique(words).tolist():
+        m = words == W
+        s = sel[m]
+        if W > _BLOCK_MAX_WORDS:
+            for r, p, t in zip(c.rows[s], c.pats[s], c.texts[s]):
+                pm = pm_cache.get(p)
+                if pm is None:
+                    pm = pm_cache[p] = pm_vector(p)
+                out[r] = scalar(p, t, pm)
+            continue
+        ex = [x[m] for x in extra]
+        step = _BLOCK_CHUNK if W <= 16 else _BLOCK_CHUNK_WIDE
+        for lo in range(0, len(s), step):
+            q = s[lo : lo + step]
+            out[c.rows[q]] = kernel(
+                c.pats[q].tolist(),
+                c.texts[q].tolist(),
+                W,
+                *(x[lo : lo + step] for x in ex),
+                **kw,
+            )
 
 
-def _chunked_block(kernel, ps: list, ts: list, dtype, **kw) -> np.ndarray:
-    """Run a blockwise kernel at W=1 in _BLOCK_CHUNK slices — the chunk
-    width keeps the kernel's per-char working set cache-resident (swept in
-    BENCH.md §2; one oversized call is measurably slower than chunks)."""
-    n = len(ps)
-    out = np.empty(n, dtype=dtype)
-    for lo in range(0, n, _BLOCK_CHUNK):
-        hi = lo + _BLOCK_CHUNK
-        out[lo:hi] = kernel(ps[lo:hi], ts[lo:hi], 1, **kw)
-    return out
-
-
-def _chunked_word(kernel, ps: list, ts: list) -> np.ndarray:
-    """Run a one-word kernel (myers_batch_word / lcs_batch_word) in
-    _BLOCK_CHUNK slices. The word kernels' per-batch state (PM gather
-    table + code arrays) spills L2 on full Arrow batches: chunking at
-    2048 measured +53% single-thread and +35% machine-wide under 16
-    worker processes on ~20-char name pairs (BENCH.md §2)."""
-    n = len(ps)
-    if n <= _BLOCK_CHUNK:
-        return kernel(ps, ts)
-    out = np.empty(n, dtype=np.int64)
-    for lo in range(0, n, _BLOCK_CHUNK):
-        hi = lo + _BLOCK_CHUNK
-        out[lo:hi] = kernel(ps[lo:hi], ts[lo:hi])
-    return out
-
-
-def _banded_lev_pays(pat_len: int, W: int, k: int, scale: float = 1.0) -> bool:
-    """Route a pair to myers_batch_block_banded only when the band is
-    narrow enough to beat the full blockwise kernel. The banded kernel
-    carries per-row band bookkeeping, so its breakeven band fraction
-    grows with word count (measured, best-of-3, same-length random
-    pairs): W=3 never wins (0.93x at frac 0.1), W=5 wins below ~0.5,
-    W=10 below ~0.45, W=16 below ~0.8. Thresholds below sit safely
-    under those breakevens. ``scale`` < 1 tightens them for callers that
-    additionally bet on pruning (the indel prefilter must beat
-    prune_frac * LCS cost, not just the full kernel)."""
-    if W < 4 or k >= 64 * (W - 1):
-        return False
-    if W <= 5:
-        t = 0.25
-    elif W <= 10:
-        t = 0.35
-    elif W <= 15:
-        # breakeven measured ~0.45 at W=10 and ~0.8 at W=16 and grows
-        # with word count; between the measured endpoints stay at the
-        # W=10 figure rather than assuming the W=16 one applies
-        t = 0.45
-    else:
-        t = 0.6
-    return k <= t * scale * pat_len
+def _banded_lev_pays(pat_len, W, k, scale: float = 1.0):
+    """Per-pair mask: route to myers_batch_block_banded only where the
+    band is narrow enough to beat the full blockwise kernel. The banded
+    kernel carries per-row band bookkeeping, so its breakeven band
+    fraction grows with word count (measured, best-of-3, same-length
+    random pairs): W=3 never wins (0.93x at frac 0.1), W=5 wins below
+    ~0.5, W=10 below ~0.45, W=16 below ~0.8. Thresholds below sit safely
+    under those breakevens; between the measured W=10 and W=16 endpoints
+    they stay at the W=10 figure rather than assuming the W=16 one
+    applies. ``scale`` < 1 tightens them for callers that additionally
+    bet on pruning (the indel prefilter must beat prune_frac * LCS cost,
+    not just the full kernel)."""
+    t = np.select([W <= 5, W <= 10, W <= 15], [0.25, 0.35, 0.45], 0.6)
+    return (W >= 4) & (k < 64 * (W - 1)) & (k <= t * scale * pat_len)
 
 
 def levenshtein_batch(a_arr, b_arr, k=None, hint=None) -> np.ndarray:
     """Uniform Levenshtein distances for paired object arrays of str.
-    Routing (per pair, after affix strip): <=64-char pattern -> one-word
-    vectorized Myers; <=64*_BLOCK_MAX_WORDS -> blockwise vectorized Myers
-    grouped by word count (Ukkonen-banded when a per-pair distance cutoff
-    ``k`` is supplied and the band is narrower than the pattern); else
-    the CPython big-int Myers kernel with a per-batch pattern cache —
-    the MEASURED-fastest kernel above the cap, not a concession: big-int
-    ops run C limb loops with O(1) interpreter dispatch per char vs the
-    numpy path's O(W) array ops per char (crossover sweep at
-    _BLOCK_MAX_WORDS / BENCH.md §12). Long-document corpora should
-    still prefer set-based ops (ngram_jaccard/MinHash-LSH) over
-    pairwise edit distance at scale — but if routed here, this is the
-    fast path, vectorized across Spark's 32 worker processes.
+    Routing: the shared pass (``_route``: equal pairs, affix strip,
+    shorter side as pattern) and runner (``_score``: blockwise vectorized
+    Myers grouped by word count up to _BLOCK_MAX_WORDS, <=64-char
+    patterns being the W=1 group; the CPython big-int Myers kernel with a
+    per-batch pattern cache above). The big-int kernel is the
+    MEASURED-fastest kernel above the cap, not a concession: big-int ops
+    run C limb loops with O(1) interpreter dispatch per char vs the numpy
+    path's O(W) array ops per char (crossover sweep at _BLOCK_MAX_WORDS /
+    BENCH.md §12). On top of the shared pass, three selectors take pairs
+    out first: mbleven for cutoffs <= 3 on pairs longer than one word,
+    the ``hint`` band schedule, and the Ukkonen-banded kernel when a
+    cutoff ``k`` is supplied and the band is narrow enough to pay.
+    Long-document corpora should still prefer set-based ops
+    (ngram_jaccard/MinHash-LSH) over pairwise edit distance at scale.
 
     ``k``: optional int64 array of per-pair distance cutoffs. Pairs whose
     distance exceeds their cutoff MAY return a large sentinel instead of
@@ -980,169 +924,67 @@ def levenshtein_batch(a_arr, b_arr, k=None, hint=None) -> np.ndarray:
     the regular sentinel contract takes over) or at the max possible
     distance when no cutoff is given — so results are IDENTICAL to the
     hint-less path, only the band schedule changes."""
-    n = len(a_arr)
-    short = _short_batch_lens(a_arr, b_arr)
-    if short is not None:
-        return _chunked_word(myers_batch_word, *_short_swap(a_arr, b_arr, *short))
-    out = np.zeros(n, dtype=np.int64)
-    np_idx: list = []
-    np_p: list = []
-    np_t: list = []
-    blk: dict = {}
-    blk_banded: dict = {}
-    blk_hint: dict = {}
-    pm_cache: dict = {}
-    for i in range(n):
-        a, b = a_arr[i], b_arr[i]
-        if a == b:
-            continue
-        sa, sb, _ = _affix_strip_pair(a, b)
-        if not sa or not sb:
-            out[i] = max(len(sa), len(sb))
-            continue
-        if len(sa) > len(sb):
-            sa, sb = sb, sa
-        if _is_word_ok(sa) and _is_word_ok(sb):
-            np_idx.append(i)
-            np_p.append(sa)
-            np_t.append(sb)
-            continue
-        if k is not None and k[i] <= 3:
-            # tiny bound on a long pair: mbleven enumeration is O(models*len)
-            # vs O(ceil(len/64)*len) for any DP (reference routes cutoff < 4
-            # here too, levenshtein.rs:1142-1147)
-            kb = int(k[i])
-            if kb < 0 or abs(len(sa) - len(sb)) > kb:
-                out[i] = (kb if kb >= 0 else 0) + 1
+    c = _route(a_arr, b_arr)
+    out = c.tlen.copy()  # an empty core is all insertions of the other
+    pl, tl, W = c.plen[c.rows], c.tlen[c.rows], c.words
+    rest = np.ones(len(c.rows), dtype=bool)  # cores no selector took
+    block = W <= _BLOCK_MAX_WORDS
+    if k is not None:
+        kk = np.asarray(k, dtype=np.int64)[c.rows]
+        # tiny bound on a long pair: mbleven enumeration is O(models*len)
+        # vs O(ceil(len/64)*len) for any DP (reference routes cutoff < 4
+        # here too, levenshtein.rs:1142-1147)
+        mb = (kk <= 3) & (tl > 64)
+        for j in np.nonzero(mb)[0]:
+            kb = int(kk[j])
+            if kb < 0 or tl[j] - pl[j] > kb:
+                out[c.rows[j]] = max(kb, 0) + 1
             else:
-                out[i] = _mbleven(sa, sb, kb)
-            continue
-        W = _block_bucket(len(sa))
-        if W <= _BLOCK_MAX_WORDS:
-            # hint-first banding: start at the (narrower) expected band,
-            # verify, double on failure — wins when the hint is accurate
-            # and the cutoff band is too wide (or absent) to pay. Gated at
-            # W >= 14: re-measured this round on 45-symbol text, banded
-            # beats full blockwise consistently only from ~900 chars up
-            # (1.3-1.45x at W=16, parity-to-0.87x in the W=10-13 zone),
-            # and a verify+retry loop must enter only on a clear win
-            if hint is not None and W >= 14:
-                h = int(hint[i])
-                cap = int(k[i]) if k is not None else len(sb)
-                if 4 <= h < cap and _banded_lev_pays(len(sa), W, h):
-                    g = blk_hint.setdefault(W, ([], [], [], [], []))
-                    g[0].append(i)
-                    g[1].append(sa)
-                    g[2].append(sb)
-                    g[3].append(h)
-                    g[4].append(cap)
-                    continue
-            # banded pays off once whole words fall outside the |i-j|<=k
-            # diagonal band AND the band is narrow enough to amortize the
-            # per-row band bookkeeping (affix stripping already happened,
-            # so k is usually small relative to the remaining core)
-            if k is not None and _banded_lev_pays(len(sa), W, int(k[i])):
-                g = blk_banded.setdefault(W, ([], [], [], []))
-                g[0].append(i)
-                g[1].append(sa)
-                g[2].append(sb)
-                g[3].append(int(k[i]))
-            else:
-                g = blk.setdefault(W, ([], [], []))
-                g[0].append(i)
-                g[1].append(sa)
-                g[2].append(sb)
-        else:
-            pm = pm_cache.get(sa)
-            if pm is None:
-                pm = pm_cache[sa] = pm_vector(sa)
-            out[i] = myers_distance(sa, sb, pm)
-    if np_idx:
-        out[np.asarray(np_idx, dtype=np.intp)] = _chunked_word(
-            myers_batch_word, np_p, np_t
-        )
-    _run_block_groups(blk, out, myers_batch_block)
-    for W, (idx, ps, ts, kk) in blk_banded.items():
-        step = _block_chunk_for(W)
-        for lo in range(0, len(idx), step):
-            hi = lo + step
-            out[np.asarray(idx[lo:hi], dtype=np.intp)] = myers_batch_block_banded(
-                ps[lo:hi], ts[lo:hi], W, np.asarray(kk[lo:hi], dtype=np.int64)
-            )
-    for W, (hidx, ps, ts, hh, hcap) in blk_hint.items():
-        ix = np.asarray(hidx, dtype=np.intp)
-        pa = np.asarray(ps, dtype=object)
-        ta = np.asarray(ts, dtype=object)
-        band = np.asarray(hh, dtype=np.int64)
-        cap = np.asarray(hcap, dtype=np.int64)
-        live = np.arange(len(ix), dtype=np.intp)
-        step = _block_chunk_for(W)
+                out[c.rows[j]] = _mbleven(c.pats[j], c.texts[j], kb)
+        rest &= ~mb
+    if hint is not None:
+        # hint-first banding: start at the (narrower) expected band,
+        # verify, double on failure — wins when the hint is accurate and
+        # the cutoff band is too wide (or absent) to pay. Gated at
+        # W >= 14: re-measured on 45-symbol text, banded beats full
+        # blockwise consistently only from ~900 chars up (1.3-1.45x at
+        # W=16, parity-to-0.87x in the W=10-13 zone), and a verify+retry
+        # loop must enter only on a clear win
+        h = np.asarray(hint, dtype=np.int64)[c.rows]
+        cap = kk if k is not None else tl
+        hs = rest & block & (W >= 14) & (h >= 4) & (h < cap)
+        hs &= _banded_lev_pays(pl, W, h)
+        rest &= ~hs
+        live = np.nonzero(hs)[0]
+        band, cap = h[live], cap[live]
         while len(live):
-            res = np.empty(len(live), dtype=np.int64)
-            for lo in range(0, len(live), step):
-                sl = live[lo : lo + step]
-                res[lo : lo + step] = myers_batch_block_banded(
-                    list(pa[sl]), list(ta[sl]), W, band[sl]
-                )
+            _score(c, out, myers_batch_block_banded, sel=live, extra=(band,))
             # exact once the result fits the band; at band >= cap the
             # regular contract applies (exact, or sentinel > cap when a
             # cutoff cap is set — callers only compare those against it)
-            done = (res <= band[live]) | (band[live] >= cap[live])
-            out[ix[live[done]]] = res[done]
-            live = live[~done]
-            band[live] = np.minimum(band[live] * 2, cap[live])
+            done = (out[c.rows[live]] <= band) | (band >= cap)
+            live, band, cap = live[~done], band[~done], cap[~done]
+            band = np.minimum(band * 2, cap)
+    if k is not None:
+        # banded pays off once whole words fall outside the |i-j|<=k
+        # diagonal band AND the band is narrow enough to amortize the
+        # per-row band bookkeeping (affix stripping already happened, so
+        # k is usually small relative to the remaining core)
+        bs = rest & block & _banded_lev_pays(pl, W, kk)
+        sel = np.nonzero(bs)[0]
+        _score(c, out, myers_batch_block_banded, sel=sel, extra=(kk[sel],))
+        rest &= ~bs
+    _score(c, out, myers_batch_block, myers_distance, sel=np.nonzero(rest)[0])
     return out
 
 
 def lcs_similarity_batch(a_arr, b_arr) -> np.ndarray:
-    """LCS lengths for paired object arrays of str."""
-    n = len(a_arr)
-    short = _short_batch_lens(a_arr, b_arr)
-    if short is not None:
-        return _chunked_word(lcs_batch_word, *_short_swap(a_arr, b_arr, *short))
-    out = np.zeros(n, dtype=np.int64)
-    np_idx: list = []
-    np_p: list = []
-    np_t: list = []
-    base = np.zeros(n, dtype=np.int64)
-    blk: dict = {}
-    pm_cache: dict = {}
-    for i in range(n):
-        a, b = a_arr[i], b_arr[i]
-        if a == b:
-            out[i] = len(a)
-            continue
-        sa, sb, affix = _affix_strip_pair(a, b)
-        base[i] = affix
-        if not sa or not sb:
-            out[i] = affix
-            continue
-        if len(sa) > len(sb):
-            sa, sb = sb, sa
-        if _is_word_ok(sa) and _is_word_ok(sb):
-            np_idx.append(i)
-            np_p.append(sa)
-            np_t.append(sb)
-            continue
-        W = _block_bucket(len(sa))
-        if W <= _BLOCK_MAX_WORDS:
-            g = blk.setdefault(W, ([], [], []))
-            g[0].append(i)
-            g[1].append(sa)
-            g[2].append(sb)
-        else:
-            pm = pm_cache.get(sa)
-            if pm is None:
-                pm = pm_cache[sa] = pm_vector(sa)
-            out[i] = affix + lcs_length(sa, sb, pm)
-    if np_idx:
-        idx = np.asarray(np_idx, dtype=np.intp)
-        out[idx] = base[idx] + _chunked_word(lcs_batch_word, np_p, np_t)
-    _run_block_groups(blk, out, lcs_batch_block)
-    for W, (idx, _, _) in blk.items():
-        ix = np.asarray(idx, dtype=np.intp)
-        out[ix] += base[ix]
-    return out
+    """LCS lengths for paired object arrays of str: the common affix plus
+    the LCS of the cores."""
+    c = _route(a_arr, b_arr)
+    out = np.zeros(len(a_arr), dtype=np.int64)
+    _score(c, out, lcs_batch_block, lcs_length)
+    return out + c.affix
 
 
 def indel_batch(a_arr, b_arr, k=None) -> np.ndarray:
@@ -1152,105 +994,45 @@ def indel_batch(a_arr, b_arr, k=None) -> np.ndarray:
 
     - bound <= 4 on long pairs: {delete, insert} mbleven enumeration
       (reference lcs_seq.rs:113-197 semantics);
-    - otherwise, pairs too long for the one-word path are prefiltered by
-      the Ukkonen-banded Myers kernel at the same bound: levenshtein <=
-      indel (a substitution costs 1 vs 2), so lev > k proves indel > k
-      and only survivors pay the full-width LCS kernel.
+    - otherwise, pairs whose shorter side is longer than one word are
+      prefiltered by the Ukkonen-banded Myers kernel at the same bound:
+      levenshtein <= indel (a substitution costs 1 vs 2), so lev > k
+      proves indel > k and only survivors pay the full-width LCS kernel.
     """
     n = len(a_arr)
-    if k is not None and n:
-        from .lcs_indel import bounded_indel_distance
+    la = np.fromiter(map(len, a_arr), dtype=np.int64, count=n)
+    lb = np.fromiter(map(len, b_arr), dtype=np.int64, count=n)
+    if k is None or not n:
+        return la + lb - 2 * lcs_similarity_batch(a_arr, b_arr)
+    from .lcs_indel import bounded_indel_distance
 
-        kv = np.asarray(k, dtype=np.int64)
-        route = np.fromiter(
-            (
-                kv[i] <= 4 and len(a_arr[i]) + len(b_arr[i]) > 128
-                for i in range(n)
-            ),
-            dtype=bool,
-            count=n,
-        )
-        out = np.empty(n, dtype=np.int64)
-        for i in np.nonzero(route)[0]:
-            out[i] = bounded_indel_distance(a_arr[i], b_arr[i], int(kv[i]))
-        rest = np.nonzero(~route)[0]
-        if len(rest):
-            ra, rb, rk = a_arr[rest], b_arr[rest], kv[rest]
-            # banded-lev prefilter for pairs beyond the one-word path —
-            # only where the band is narrow enough that the banded kernel
-            # costs well under the LCS it may save (scale=0.5 tightens
-            # the _banded_lev_pays thresholds: the prefilter is a bet on
-            # pruning, and at wide bands it measured 3x SLOWER than just
-            # computing the full LCS on the sf0.1 bench mix)
-            def _prefilter_pays(i: int) -> bool:
-                pl = min(len(ra[i]), len(rb[i]))
-                if pl <= 64:
-                    return False
-                return _banded_lev_pays(
-                    pl, _block_bucket(pl), int(rk[i]), scale=0.5
-                )
-
-            wide = np.fromiter(
-                (_prefilter_pays(i) for i in range(len(rest))),
-                dtype=bool,
-                count=len(rest),
-            )
-            if wide.any():
-                lev = levenshtein_batch(ra[wide], rb[wide], k=rk[wide])
-                pruned = lev > rk[wide]
-                wi = np.nonzero(wide)[0]
-                out[rest[wi[pruned]]] = rk[wide][pruned] + 1
-                live = np.ones(len(rest), dtype=bool)
-                live[wi[pruned]] = False
-            else:
-                live = np.ones(len(rest), dtype=bool)
-            li = rest[live]
-            if len(li):
-                lens = np.fromiter(
-                    (len(a_arr[i]) + len(b_arr[i]) for i in li),
-                    dtype=np.int64,
-                    count=len(li),
-                )
-                out[li] = lens - 2 * lcs_similarity_batch(a_arr[li], b_arr[li])
-        return out
-    lens = np.fromiter(
-        (len(a) + len(b) for a, b in zip(a_arr, b_arr)), dtype=np.int64, count=len(a_arr)
-    )
-    return lens - 2 * lcs_similarity_batch(a_arr, b_arr)
+    kv = np.asarray(k, dtype=np.int64)
+    done = (kv <= 4) & (la + lb > 128)
+    out = np.empty(n, dtype=np.int64)
+    for i in np.nonzero(done)[0]:
+        out[i] = bounded_indel_distance(a_arr[i], b_arr[i], int(kv[i]))
+    # banded-lev prefilter — only where the band is narrow enough that
+    # the banded kernel costs well under the LCS it may save (scale=0.5
+    # tightens the _banded_lev_pays thresholds: the prefilter is a bet on
+    # pruning, and at wide bands it measured 3x SLOWER than just
+    # computing the full LCS on the sf0.1 bench mix)
+    pl = np.minimum(la, lb)
+    wide = ~done & (pl > 64) & _banded_lev_pays(pl, _block_bucket(pl), kv, 0.5)
+    wi = np.nonzero(wide)[0]
+    if len(wi):
+        pruned = wi[levenshtein_batch(a_arr[wi], b_arr[wi], k=kv[wi]) > kv[wi]]
+        out[pruned] = kv[pruned] + 1
+        done[pruned] = True
+    li = np.nonzero(~done)[0]
+    if len(li):
+        out[li] = la[li] + lb[li] - 2 * lcs_similarity_batch(a_arr[li], b_arr[li])
+    return out
 
 
 def osa_batch(a_arr, b_arr) -> np.ndarray:
-    n = len(a_arr)
-    short = _short_batch_lens(a_arr, b_arr)
-    if short is not None:
-        return _chunked_block(
-            osa_batch_block, *_short_swap(a_arr, b_arr, *short), np.int64
-        )
-    out = np.zeros(n, dtype=np.int64)
-    blk: dict = {}
-    pm_cache: dict = {}
-    for i in range(n):
-        a, b = a_arr[i], b_arr[i]
-        if a == b:
-            continue
-        sa, sb, _ = _affix_strip_pair(a, b)
-        if not sa or not sb:
-            out[i] = max(len(sa), len(sb))
-            continue
-        if len(sa) > len(sb):
-            sa, sb = sb, sa
-        W = _block_bucket(len(sa))
-        if W <= _BLOCK_MAX_WORDS:
-            g = blk.setdefault(W, ([], [], []))
-            g[0].append(i)
-            g[1].append(sa)
-            g[2].append(sb)
-        else:
-            pm = pm_cache.get(sa)
-            if pm is None:
-                pm = pm_cache[sa] = pm_vector(sa)
-            out[i] = _osa.osa_distance_kernel(sa, sb, pm)
-    _run_block_groups(blk, out, osa_batch_block)
+    c = _route(a_arr, b_arr)
+    out = c.tlen.copy()  # an empty core is all insertions of the other
+    _score(c, out, osa_batch_block, _osa.osa_distance_kernel)
     return out
 
 
@@ -1306,41 +1088,11 @@ def jaro_batch(a_arr, b_arr, k=None) -> np.ndarray:
     """``k``: optional similarity cutoff (scalar float). Pairs provably
     below it MAY return the -1.0 sentinel instead of the exact
     similarity — callers only compare those against the cutoff."""
-    n = len(a_arr)
-    short = _short_batch_lens(a_arr, b_arr)
-    if short is not None:
-        return _chunked_block(
-            jaro_batch_block, *_short_swap(a_arr, b_arr, *short), np.float64, k=k
-        )
-    out = np.zeros(n, dtype=np.float64)
-    blk: dict = {}
-    pm_cache: dict = {}
-    for i in range(n):
-        a, b = a_arr[i], b_arr[i]
-        if a == b:
-            out[i] = 1.0  # equal strings (incl. both empty) -> 1.0 (reference)
-            continue
-        if not a or not b:
-            out[i] = 0.0
-            continue
-        sa, sb = (a, b) if len(a) <= len(b) else (b, a)
-        W = _block_bucket(len(sa))
-        if W <= _BLOCK_MAX_WORDS:
-            g = blk.setdefault(W, ([], [], []))
-            g[0].append(i)
-            g[1].append(sa)
-            g[2].append(sb)
-        else:
-            pm = pm_cache.get(sa)
-            if pm is None:
-                pm = pm_cache[sa] = pm_vector(sa)
-            out[i] = _jaro.jaro_similarity(sa, sb, pm)
-    if k is None:
-        _run_block_groups(blk, out, jaro_batch_block)
-    else:
-        _run_block_groups(
-            blk, out, lambda ps, ts, W: jaro_batch_block(ps, ts, W, k=k)
-        )
+    c = _route(a_arr, b_arr, strip=False)
+    # an empty core: 1.0 for an equal pair (incl. both empty, reference
+    # semantics), 0.0 against a non-empty side
+    out = (c.tlen == 0).astype(np.float64)
+    _score(c, out, jaro_batch_block, _jaro.jaro_similarity, k=k)
     return out
 
 

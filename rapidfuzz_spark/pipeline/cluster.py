@@ -76,7 +76,9 @@ def connected_components(
     edges: DataFrame, max_iter: int = 20
 ) -> DataFrame:
     """edges(doc_id_1, doc_id_2[, ...]) -> (doc_id, entity_id) where
-    entity_id = min doc_id of the component."""
+    entity_id = min doc_id of the component. Raises RuntimeError when
+    ``max_iter`` rounds leave a non-star forest: returning it would
+    silently split components into partial clusters."""
     cur = edges.select(
         F.col("doc_id_1").alias("src"), F.col("doc_id_2").alias("dst")
     ).distinct()
@@ -85,6 +87,11 @@ def connected_components(
         cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
         if _is_star_forest(cur):
             break
+    else:
+        raise RuntimeError(
+            f"connected_components did not converge in max_iter={max_iter} "
+            "rounds; raise max_iter"
+        )
     # converged: edges form stars (node -> component min)
     roots = cur.select(F.col("src").alias("doc_id"), F.col("dst").alias("entity_id"))
     selfs = (

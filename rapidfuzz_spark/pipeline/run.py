@@ -18,6 +18,7 @@ import sys
 from dataclasses import dataclass
 from typing import Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -137,10 +138,14 @@ def _parquet_has_rows(spark: SparkSession, path: str) -> bool:
     """True iff ``path`` is a readable parquet dataset with >= 1 row —
     the shared probe for both id-space guards (ledger: out_dir already
     holds scored edges; id_map: out_dir already holds a surrogate map),
-    so their existence semantics cannot drift apart."""
+    so their existence semantics cannot drift apart. Only a missing path
+    means "no rows"; any other read error (corrupt footer, permissions)
+    is raised rather than mistaken for an absent checkpoint."""
     try:
         return not spark.read.parquet(path).isEmpty()
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return False
 
 
@@ -191,7 +196,9 @@ def run_pipeline(
             loaded = True
             try:
                 mapping = spark.read.parquet(map_path)
-            except Exception:
+            except AnalysisException as e:
+                if e.getCondition() != "PATH_NOT_FOUND":
+                    raise
                 loaded = False
                 if _parquet_has_rows(spark, os.path.join(out_dir, "ledger")):
                     # scored buckets exist but their id map does not:

@@ -18,6 +18,7 @@ import os
 import time
 from typing import Optional
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -189,7 +190,11 @@ def _done_buckets(
             .distinct()
             .collect()
         )
-    except Exception:
+    except AnalysisException as e:
+        # only a missing ledger means "nothing done yet": an unreadable
+        # one must not send the run back over buckets already scored
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return set()
     stale = [
         r

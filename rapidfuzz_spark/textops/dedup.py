@@ -1093,6 +1093,14 @@ def prefix_filter_set_join(
     if measure not in ("cosine", "dice", "overlap"):
         raise ValueError(f"unknown measure: {measure!r}")
     num, den = int(threshold_num), int(threshold_den)
+    if measure == "overlap":
+        if num < 1:
+            raise ValueError(f"overlap needs threshold_num >= 1, got {num}")
+    elif not 0 < num <= den:
+        raise ValueError(
+            f"{measure} needs 0 < threshold_num <= threshold_den, "
+            f"got {num}/{den}"
+        )
     ordered = _rarity_ordered_sets(docs, text_col)
     n = F.col("n")
     if measure == "cosine":

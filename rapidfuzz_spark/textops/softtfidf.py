@@ -338,7 +338,9 @@ def partial_ratio_pairs(
         i1,
         i2,
         s1.alias("__s1"),
-        F.explode(
+        # explode_outer: a pair with a NULL text keeps its row and
+        # scores NULL, whatever the window array of a NULL text is
+        F.explode_outer(
             F.transform(
                 F.sequence(
                     F.lit(0),

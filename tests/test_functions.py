@@ -292,6 +292,19 @@ def test_token_set_ratio_invariances(spark):
         assert out[pid] == round(_tsr_reference(t1, t2), 6), pid
 
 
+def test_token_set_ratio_null_input_is_null(spark):
+    df = spark.createDataFrame(
+        [(1, None, "acme corp"), (2, "acme", None), (3, "acme", "acme corp")],
+        "pid int, t1 string, t2 string",
+    )
+    out = {
+        r.pid: r.v
+        for r in df.select("pid", RF.token_set_ratio("t1", "t2").alias("v")).collect()
+    }
+    assert out[1] is None and out[2] is None
+    assert out[3] == 1.0
+
+
 def test_token_set_ratio_randomized_vs_reference(spark):
     rnd = random.Random(37)
     vocab = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta"]
@@ -353,3 +366,19 @@ def test_partial_ratio_hand_and_randomized(spark):
     assert out[1] == 1.0
     for rid, t1, t2 in rows:
         assert out[rid] == round(_pr_reference(t1, t2), 6), (rid, t1, t2)
+
+
+def test_partial_ratio_pairs_keeps_null_pairs(spark):
+    from rapidfuzz_spark.textops import softtfidf
+
+    df = spark.createDataFrame(
+        [(1, 2, None, "acme corp"), (3, 4, "acme", None), (5, 6, None, None),
+         (7, 8, "acme", "acme corp")],
+        "id_1 int, id_2 int, t1 string, t2 string",
+    )
+    for kw in ({}, {"cap_short": 8, "cap_long": 20}):
+        out = {
+            (r.id_1, r.id_2): r.partial_ratio
+            for r in softtfidf.partial_ratio_pairs(df, **kw).collect()
+        }
+        assert out == {(1, 2): None, (3, 4): None, (5, 6): None, (7, 8): 1.0}

@@ -537,6 +537,14 @@ class TestBlockwiseBatchKernels:
                 for _ in range(max(1, la // 15)):
                     t[random.randrange(la)] = random.choice(al)
                 cases.append((a, "".join(t)))
+        # the one-word seam, as core lengths (distinct end chars, so no
+        # affix strip): pattern <= 64 with text > 64, both at 64, both
+        # at 65, 64 vs 65; either side first
+        for lp, lt in ((60, 100), (64, 100), (64, 64), (65, 65), (64, 65)):
+            for _ in range(3):
+                a = "<" + "".join(random.choice("ab") for _ in range(lp - 2)) + ">"
+                b = "[" + "".join(random.choice("ab") for _ in range(lt - 2)) + "]"
+                cases += [(a, b), (b, a)]
         aa = np.array([c[0] for c in cases], dtype=object)
         bb = np.array([c[1] for c in cases], dtype=object)
         lev = B.levenshtein_batch(aa, bb)
@@ -647,9 +655,10 @@ class TestBlockwiseBatchKernels:
             assert gs[i] == pfx(x[::-1], y[::-1])
 
     def test_chunked_word_path_parity_above_block_chunk(self):
-        """All-short batches larger than _BLOCK_CHUNK run the one-word
-        kernels in cache-sized slices; the chunk seams must not change
-        results (covers the >2048-pair path the 300-case suite misses)."""
+        """All-short batches larger than _BLOCK_CHUNK run the W=1
+        blockwise kernels in cache-sized slices; the chunk seams must not
+        change results (covers the >2048-pair path the 300-case suite
+        misses)."""
         import random
 
         import numpy as np

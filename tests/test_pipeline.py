@@ -398,6 +398,24 @@ def test_resume_rejects_mismatched_job_config(spark, corpus, tmp_path):
         )
 
 
+def test_resume_raises_on_corrupt_ledger(spark, tmp_path):
+    """Only a missing ledger means "nothing scored yet": an unreadable
+    one must fail the run instead of re-scoring over existing output."""
+    import os
+
+    out = str(tmp_path / "corrupt")
+    os.makedirs(os.path.join(out, "ledger"))
+    with open(os.path.join(out, "ledger", "part-00000.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    pairs = spark.createDataFrame(
+        [("a", "b", "acme corp", "acme corp.")],
+        "doc_id_1 string, doc_id_2 string, text_1 string, text_2 string",
+    )
+    with pytest.raises(Exception, match="FOOTER"):
+        scoring.score_with_checkpoint(spark, pairs, out, n_buckets=2)
+    assert not os.path.exists(os.path.join(out, "edges"))
+
+
 def test_resume_rejects_changed_corpus_id_map(spark, corpus, tmp_path):
     """A checkpointed run pins its doc-id surrogate map in out_dir; a
     resume whose input is NOT the same doc set must fail loudly — the
@@ -610,6 +628,24 @@ def test_connected_components_basic(spark):
     assert comp["a"] == comp["b"] == comp["c"] == "a"
     assert comp["x"] == comp["y"] == "x"
     assert comp["q"] == comp["q2"] == comp["q3"] == "q"
+
+def _path_edges(spark, n):
+    return spark.createDataFrame(
+        [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(n - 1)],
+        ["doc_id_1", "doc_id_2"],
+    )
+
+
+def test_connected_components_raises_when_not_converged(spark):
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        cluster.connected_components(_path_edges(spark, 32), max_iter=1)
+
+
+def test_connected_components_path_converges_by_default(spark):
+    comp = cluster.connected_components(_path_edges(spark, 32)).collect()
+    assert len(comp) == 32
+    assert {r.entity_id for r in comp} == {"n000"}
+
 
 def test_hybrid_soft_tfidf_jw_f1(spark, corpus, tmp_path):
     """The precision-gated hybrid edge rule (soft_tfidf_jw) must clear the

@@ -1482,6 +1482,27 @@ def test_set_join_cosine_o_req_integer_exact(spark):
                 assert o_got == o_exact, (num, den, n1, n2)
 
 
+@pytest.mark.parametrize(
+    "measure,num,den",
+    [
+        ("cosine", 0, 10),
+        ("cosine", -1, 10),
+        ("cosine", 11, 10),
+        ("cosine", 1, 0),
+        ("dice", 0, 10),
+        ("dice", 11, 10),
+        ("dice", 20, 10),
+        ("dice", 25, 10),
+        ("overlap", 0, 1),
+        ("overlap", -2, 1),
+    ],
+)
+def test_set_join_rejects_bad_thresholds(spark, measure, num, den):
+    docs = spark.createDataFrame([(1, "a b")], "doc_id int, text string")
+    with pytest.raises(ValueError, match="threshold_num"):
+        dedup.prefix_filter_set_join(docs, "text", measure, num, den)
+
+
 def test_set_join_sim_values(spark):
     from rapidfuzz_spark.textops import dedup
 

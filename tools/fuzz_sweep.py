@@ -52,11 +52,11 @@ ALPHAS = [
     "a",
     "xyz ",
 ]
-# lengths straddle every routing seam: 0/empty, <=64 one-word, 64..1024
-# blockwise (W buckets at 2/4/8/16 words), >1024 bigint fallback
-# straddles every routing seam: 0/empty, <=64 one-word, the blockwise
-# zone, and BOTH sides of _BLOCK_MAX_WORDS (16 words = 1024 in rounds
-# 1-3; 24 words = 1536 since round 4) into the big-int route
+# lengths straddle every routing seam: 0/empty, the 64/65-char seam
+# between the W=1 and W=2 groups of the blockwise kernels (and the
+# all-short whole-batch fast path), the blockwise word-count groups, and
+# BOTH sides of _BLOCK_MAX_WORDS (24 words = 1536 chars) into the
+# big-int route
 LENS = [0, 1, 3, 9, 30, 63, 64, 65, 127, 200, 511, 700, 1023, 1024,
         1500, 1535, 1536, 1537, 2100]
 
