@@ -1,14 +1,30 @@
-"""Spark Column API: one Arrow-vectorized pandas UDF per metric × variant.
+"""Spark Column API: Arrow-vectorized pandas UDFs over the batch kernels.
 
 The distributed counterpart of ``rapidfuzz_spark.api`` — every function
-takes two string Columns and returns a Column, scoring whole Arrow batches
+takes two Columns and returns a Column, scoring whole Arrow batches
 through the NumPy/Python batch engine (kernels/batch.py). No per-row Python
 dispatch (driver ``input_hint``: pandas/Arrow UDFs only).
 
-Cutoff semantics (reference /root/reference/src/common.rs:33-86): with a
+One wrapper (``_column_fn``) builds all of them: the edit metrics and
+Jaro(-Winkler) over string columns, and the ``_seq`` functions over
+``array<int>``/``array<long>`` columns. Only its decode step differs: a
+string batch is one chunk of pairs, an array batch is remapped to
+strings in vocabulary-sized chunks. Each chunk then takes the same path
+(``_score_block``), the reference's generic result layer
+(details/distance.rs:154-385): every kernel returns a raw score, the edit
+distance or the Jaro similarity; one transform turns it into the
+variant's score, one table turns a variant score back into a raw bound
+for ``score_cutoff`` and ``score_hint``, and one keep test applies the
+cutoff (``<=`` for distances, ``>=`` for similarities) — first to each
+pair's best score reachable from its lengths alone, so pairs that
+cannot pass skip the kernel, then to the exact score.
+
+Cutoff semantics (reference src/common.rs:33-86): with a
 ``score_cutoff`` the result column is nullable — null where the score is
 filtered, so a downstream ``WHERE score IS NOT NULL`` is the Catalyst
-analogue of the reference's ``Option``.
+analogue of the reference's ``Option``. A NULL input (or a NULL array
+element) gives NULL. A keyword argument the metric does not take is a
+``TypeError``, as in the scalar API.
 
 Example::
 
@@ -31,127 +47,129 @@ from .kernels import batch as B
 
 ColumnOrName = Union[Column, str]
 
-_DIST_BATCH = {
-    "levenshtein": B.levenshtein_batch,
-    "indel": B.indel_batch,
-    "osa": B.osa_batch,
-    "damerau_levenshtein": B.damerau_batch,
+# keyword arguments a metric takes besides score_cutoff / score_hint
+_PARAMS = {
+    "levenshtein": ("weights",),
+    "hamming": ("pad", "strict"),
+    "jaro_winkler": ("prefix_weight",),
 }
-_INTEGRAL_METRICS = (
-    "levenshtein",
-    "indel",
-    "lcs_seq",
-    "osa",
-    "damerau_levenshtein",
-    "hamming",
-    "prefix",
-    "postfix",
-)
 
 
-def _raw_distance(
-    metric: str, a: np.ndarray, b: np.ndarray, k_bound=None, h_bound=None, **params
-) -> np.ndarray:
+def _weights(params: dict) -> tuple:
+    return tuple(params.get("weights") or (1, 1, 1))
+
+
+def _lengths(a) -> np.ndarray:
+    return np.fromiter((len(x) for x in a), np.int64, len(a))
+
+
+def _raw(metric: str, a, b, k, hint, params: dict) -> np.ndarray:
+    """Raw score per pair: the edit distance, or the Jaro(-Winkler)
+    similarity. ``k``/``hint`` are the raw scores at the cutoff/hint
+    (``_raw_at``) or None. The Jaro kernels take the similarity as is;
+    the bounded edit kernels take an integer distance bound per pair."""
+    if metric == "jaro":
+        return B.jaro_batch(a, b, k=k)
+    if metric == "jaro_winkler":
+        return B.jaro_winkler_batch(a, b, params.get("prefix_weight", 0.1), k=k)
+
+    def bound(x):
+        # +1 slack: the kernels' over-bound sentinel can never hide a pair
+        # the exact keep test would accept
+        if x is None:
+            return None
+        return np.broadcast_to(np.maximum(np.floor(x) + 1, 0), len(a)).astype(np.int64)
+
+    k, hint = bound(k), bound(hint)
     if metric == "levenshtein":
-        w = tuple(params.get("weights") or (1, 1, 1))
+        w = _weights(params)
         if w == (1, 1, 1):
-            return B.levenshtein_batch(a, b, k=k_bound, hint=h_bound)
+            return B.levenshtein_batch(a, b, k=k, hint=hint)
         return B.weighted_levenshtein_batch(a, b, w)
     if metric == "damerau_levenshtein":
-        return B.damerau_batch(a, b, k=k_bound)
+        return B.damerau_batch(a, b, k=k)
     if metric == "indel":
-        return B.indel_batch(a, b, k=k_bound)
-    if metric == "lcs_seq" and k_bound is not None:
+        return B.indel_batch(a, b, k=k)
+    if metric == "osa":
+        return B.osa_batch(a, b)
+    if metric == "lcs_seq" and k is not None:
         # lcs_dist = (indel + |dlen|) / 2, so a bound k on lcs_dist is a
         # bound 2k - |dlen| on indel; map the indel sentinel back to k+1
         # explicitly (integer division of the sentinel would round DOWN
         # to k and un-prune a pair)
-        dlen = np.abs(
-            np.fromiter((len(x) for x in a), np.int64, len(a))
-            - np.fromiter((len(x) for x in b), np.int64, len(b))
-        )
-        k_indel = 2 * k_bound - dlen
+        dlen = np.abs(_lengths(a) - _lengths(b))
+        k_indel = 2 * k - dlen
         d = B.indel_batch(a, b, k=np.maximum(k_indel, 0))
-        return np.where(d > k_indel, k_bound + 1, (d + dlen) // 2)
-    if metric == "lcs_seq":
-        return B.maximum_batch("lcs_seq", a, b) - B.lcs_similarity_batch(a, b)
+        return np.where(d > k_indel, k + 1, (d + dlen) // 2)
     if metric == "hamming":
-        raw = B.hamming_batch(a, b, pad=params.get("pad", False))
-        if params.get("strict") and (raw < 0).any():
-            # reference parity: hamming on unequal lengths without pad is
-            # an Err (hamming.rs:232-235) — strict mode raises instead of
-            # the default SQL-friendly null
-            from .kernels.hamming import DifferentLengthArgs
+        # -1 on unequal lengths without pad: the caller's null
+        return B.hamming_batch(a, b, pad=params.get("pad", False))
+    common = {
+        "lcs_seq": B.lcs_similarity_batch,
+        "prefix": B.prefix_batch,
+        "postfix": B.postfix_batch,
+    }[metric](a, b)
+    return B.maximum_batch(metric, a, b) - common
 
-            bad = int(np.nonzero(raw < 0)[0][0])
-            raise DifferentLengthArgs(
-                f"hamming strict: unequal lengths {len(a[bad])} != {len(b[bad])}"
-            )
+
+def _best_raw(metric: str, a, b, params: dict) -> np.ndarray:
+    """Each pair's best raw score reachable from its lengths alone: a
+    lower bound on the edit distance, |len1-len2| weighted by the
+    insertion/deletion cost (reference levenshtein.rs:1045-1047), or an
+    upper bound on the Jaro similarity, common chars m <= min(l1, l2)
+    (jaro.rs:122-131), raised by the Winkler boost at a full 4-char
+    prefix."""
+    la, lb = _lengths(a), _lengths(b)
+    if metric in ("jaro", "jaro_winkler"):
+        m = np.minimum(la, lb)
+        ub = np.where(
+            m > 0,
+            (m / np.maximum(la, 1) + m / np.maximum(lb, 1) + 1) / 3,
+            np.where((la == 0) & (lb == 0), 1.0, 0.0),
+        )
+        if metric == "jaro_winkler":
+            ub = ub + 4 * params.get("prefix_weight", 0.1) * (1.0 - ub)
+        return ub
+    ins, dele, _ = _weights(params)
+    return np.where(la > lb, (la - lb) * dele, (lb - la) * ins).astype(np.float64)
+
+
+# The raw score is in its metric's own frame: a distance for the edit
+# metrics, a similarity (maximum 1.0) for Jaro. A variant of that frame
+# reads the raw score as is; the opposite one goes through the maximum.
+# Jaro stays in its similarity frame: routing it through a distance
+# would compute 1 - (1 - sim), an ulp off for similarities below 0.5.
+
+
+def _to_variant(variant: str, frame: str, raw, mx):
+    """Raw score -> the variant's score."""
+    if variant == frame:
         return raw
-    if metric == "prefix":
-        return B.maximum_batch("prefix", a, b) - B.prefix_batch(a, b)
-    if metric == "postfix":
-        return B.maximum_batch("postfix", a, b) - B.postfix_batch(a, b)
-    return _DIST_BATCH[metric](a, b)
+    if not variant.startswith("normalized"):
+        return mx - raw
+    with np.errstate(divide="ignore", invalid="ignore"):
+        nr = np.where(mx > 0, raw / np.where(mx > 0, mx, 1.0), 0.0)
+    return nr if variant.endswith(frame) else 1.0 - nr
 
 
-def _maximum(metric: str, a: np.ndarray, b: np.ndarray, **params) -> np.ndarray:
-    return B.maximum_batch(metric, a, b, tuple(params.get("weights") or (1, 1, 1)))
+def _raw_at(variant: str, frame: str, score: float, mx):
+    """The variant's score -> the raw score it corresponds to (the
+    inverse of ``_to_variant``): the kernel bound for a cutoff or hint."""
+    if variant == frame:
+        return score
+    if not variant.startswith("normalized"):
+        return mx - score
+    return mx * score if variant.endswith(frame) else mx * (1.0 - score)
 
 
-def _length_prefilter(
-    metric: str, variant: str, a, b, score_cutoff, **params
-) -> Optional[np.ndarray]:
-    """Pairs that CANNOT reach the cutoff, by the length-difference lower
-    bound raw >= |len1-len2| (weights-adjusted for weighted Levenshtein) —
-    the reference's length pruning (levenshtein.rs:1045-1047) applied
-    vectorized before the kernel. Returns a boolean skip mask or None.
-    Only pairs whose keep-decision is provably False are skipped, so
-    cutoff semantics are unchanged."""
-    n = len(a)
-    la = np.fromiter((len(x) for x in a), dtype=np.int64, count=n)
-    lb = np.fromiter((len(x) for x in b), dtype=np.int64, count=n)
-    w = tuple(params.get("weights") or (1, 1, 1))
-    if metric == "levenshtein" and w != (1, 1, 1):
-        ins, dele, _ = w
-        bound = np.where(la > lb, (la - lb) * dele, (lb - la) * ins).astype(
-            np.float64
-        )
-    else:
-        bound = np.abs(la - lb).astype(np.float64)
-    maximum = _maximum(metric, a, b, **params).astype(np.float64)
-    if variant == "distance":
-        skip = bound > score_cutoff
-    elif variant == "similarity":
-        skip = bound > maximum - score_cutoff
-    elif variant == "normalized_distance":
-        skip = bound > maximum * score_cutoff
-    else:  # normalized_similarity
-        safe_max = np.where(maximum > 0, maximum, 1.0)
-        skip = (1.0 - bound / safe_max) < score_cutoff
-        skip &= maximum > 0  # maximum==0 -> norm_dist 0.0 -> sim 1.0, keep
-    return skip if skip.any() else None
+def _keeps(variant: str, vals, score_cutoff: float) -> np.ndarray:
+    if variant.endswith("distance"):
+        return vals <= score_cutoff
+    return vals >= score_cutoff
 
 
-def _hamming_strict_check(items1, items2, params: dict) -> dict:
-    """Shared strict-hamming length check for the string and seq UDF
-    paths: raises ``DifferentLengthArgs`` when any REAL (non-null) row
-    pair — the iterables must already be null-filtered — has unequal
-    lengths. Runs before any cutoff prefilter, so whether it fires
-    cannot depend on the cutoff value. Returns ``params`` with strict
-    disabled: the downstream kernel's own strict re-raise would
-    otherwise trip on the null-placeholder rows, whose result is SQL
-    null, not a length error."""
-    la = np.fromiter((len(x) for x in items1), np.int64)
-    lb = np.fromiter((len(x) for x in items2), np.int64)
-    if (la != lb).any():
-        from .kernels.hamming import DifferentLengthArgs
-
-        i = int(np.nonzero(la != lb)[0][0])
-        raise DifferentLengthArgs(
-            f"hamming strict: unequal lengths {la[i]} != {lb[i]}"
-        )
-    return {**params, "strict": False}
+def _take(x, rows):
+    return x[rows] if np.ndim(x) else x
 
 
 def _score_block(
@@ -159,106 +177,92 @@ def _score_block(
     variant: str,
     a: np.ndarray,
     b: np.ndarray,
-    score_cutoff,
+    score_cutoff=None,
     score_hint=None,
     **params,
 ):
-    """Score one Arrow batch -> (values: float64 ndarray, keep_mask)."""
-    if score_cutoff is not None and len(a):
-        skip = _length_prefilter(metric, variant, a, b, score_cutoff, **params)
-        if skip is not None:
-            live = ~skip
-            vals = np.zeros(len(a), dtype=np.float64)
-            keep = np.zeros(len(a), dtype=bool)
-            if live.any():
-                sub_vals, sub_keep = _score_block(
-                    metric,
-                    variant,
-                    a[live],
-                    b[live],
-                    score_cutoff,
-                    score_hint=score_hint,
-                    **params,
-                )
-                vals[live] = sub_vals
-                keep[live] = sub_keep if sub_keep is not None else True
-            return vals, keep
-    # _maximum is an O(n) Python len() pass — compute it at most once per
-    # block (the distance variant's k_bound never reads it at all)
-    _mx_cache: list = []
-
-    def _mx() -> np.ndarray:
-        if not _mx_cache:
-            _mx_cache.append(_maximum(metric, a, b, **params).astype(np.float64))
-        return _mx_cache[0]
-
-    k_bound = None
-    if (
-        score_cutoff is not None
-        and metric in ("levenshtein", "damerau_levenshtein", "indel", "lcs_seq")
-        and tuple(params.get("weights") or (1, 1, 1)) == (1, 1, 1)
-        and len(a)
-    ):
-        # translate the cutoff into a per-pair integer distance bound so
-        # the kernel can run Ukkonen-banded; +1 slack means the sentinel
-        # can never hide a pair the exact keep-condition would accept
-        if variant == "distance":
-            kb = np.full(len(a), np.floor(score_cutoff))
-        elif variant == "similarity":
-            kb = np.floor(_mx() - score_cutoff)
-        elif variant == "normalized_distance":
-            kb = np.floor(_mx() * score_cutoff)
-        else:
-            kb = np.floor(_mx() * (1.0 - score_cutoff))
-        k_bound = np.maximum(kb + 1, 0).astype(np.int64)
-    h_bound = None
-    if (
-        score_hint is not None
-        and metric == "levenshtein"
-        and tuple(params.get("weights") or (1, 1, 1)) == (1, 1, 1)
-        and len(a)
-    ):
-        # score_hint is the EXPECTED score in the variant's own space
-        # (reference Args::score_hint) — translate it to a starting
-        # distance band exactly like the cutoff; the kernel's verify +
-        # band-doubling loop keeps results identical whatever the hint
-        if variant == "distance":
-            hb = np.full(len(a), np.floor(score_hint))
-        elif variant == "similarity":
-            hb = np.floor(_mx() - score_hint)
-        elif variant == "normalized_distance":
-            hb = np.floor(_mx() * score_hint)
-        else:
-            hb = np.floor(_mx() * (1.0 - score_hint))
-        h_bound = np.maximum(hb + 1, 0).astype(np.int64)
-    raw = _raw_distance(
-        metric, a, b, k_bound=k_bound, h_bound=h_bound, **params
-    ).astype(np.float64)
-    invalid = raw < 0  # hamming pad=False length mismatch sentinel
-    if variant == "distance":
-        vals = raw
-        keep = vals <= score_cutoff if score_cutoff is not None else None
-    elif variant == "similarity":
-        vals = _mx() - raw
-        keep = vals >= score_cutoff if score_cutoff is not None else None
+    """Score one chunk of pairs -> (values as float64, keep mask)."""
+    n = len(a)
+    frame = "similarity" if metric in ("jaro", "jaro_winkler") else "distance"
+    if frame == "similarity":
+        mx = 1.0
+    elif variant == "distance":
+        mx = None  # never read: the maximum is an O(n) Python len() pass
     else:
-        maximum = _mx()
-        with np.errstate(divide="ignore", invalid="ignore"):
-            nd = np.where(maximum > 0, raw / np.where(maximum > 0, maximum, 1.0), 0.0)
-        if variant == "normalized_distance":
-            vals = nd
-            keep = vals <= score_cutoff if score_cutoff is not None else None
-        else:
-            vals = 1.0 - nd
-            keep = vals >= score_cutoff if score_cutoff is not None else None
-    if invalid.any():
-        keep = invalid.__invert__() if keep is None else (keep & ~invalid)
+        mx = B.maximum_batch(metric, a, b, _weights(params)).astype(np.float64)
+    # the Jaro-Winkler bounds are sound only for the standard prefix_weight
+    # range [0, 0.25]; the reference accepts ANY f64 and computes exactly
+    # (jaro_winkler.rs:87-97), so other weights skip pruning
+    prune = score_cutoff is not None and n and (
+        metric != "jaro_winkler" or 0.0 <= params.get("prefix_weight", 0.1) <= 0.25
+    )
+    live = slice(None)
+    k = hint = None
+    if prune:
+        best = _to_variant(variant, frame, _best_raw(metric, a, b, params), mx)
+        ok = _keeps(variant, best, score_cutoff)
+        if not ok.all():
+            live = ok
+        k = _raw_at(variant, frame, score_cutoff, mx)
+    if score_hint is not None and n:
+        hint = _raw_at(variant, frame, score_hint, mx)
+    raw = _raw(
+        metric, a[live], b[live], _take(k, live), _take(hint, live), params
+    ).astype(np.float64)
+    vals = np.zeros(n, dtype=np.float64)
+    keep = np.zeros(n, dtype=bool)
+    vals[live] = _to_variant(variant, frame, raw, _take(mx, live))
+    keep[live] = raw >= 0  # hamming's unequal-length sentinel
+    if score_cutoff is not None:
+        keep &= _keeps(variant, vals, score_cutoff)
     return vals, keep
 
 
-def _metric_fn(metric: str, variant: str):
-    integral = metric in _INTEGRAL_METRICS and variant in ("distance", "similarity")
-    ret_type = "long" if integral else "double"
+def _hamming_strict_check(chunks: list, real: np.ndarray) -> None:
+    """Strict hamming: raise ``DifferentLengthArgs`` when any REAL row
+    pair has unequal lengths (reference parity: hamming.rs:232-235 is an
+    Err). A null input is SQL null, not a length error, and the check
+    runs before any cutoff prefilter, so whether it fires cannot depend
+    on the cutoff value."""
+    la = np.fromiter((len(x) for a, _ in chunks for x in a), np.int64)
+    lb = np.fromiter((len(x) for _, b in chunks for x in b), np.int64)
+    bad = np.nonzero((la != lb) & real)[0]
+    if len(bad):
+        from .kernels.hamming import DifferentLengthArgs
+
+        i = bad[0]
+        raise DifferentLengthArgs(f"hamming strict: unequal lengths {la[i]} != {lb[i]}")
+
+
+def _decode_strings(c1: pd.Series, c2: pd.Series):
+    """-> (null mask, one chunk of (a, b) object arrays)."""
+    null = (c1.isna() | c2.isna()).to_numpy()
+    a = c1.fillna("").to_numpy(dtype=object)
+    b = c2.fillna("").to_numpy(dtype=object)
+    return null, [(a, b)]
+
+
+def _decode_seqs(c1: pd.Series, c2: pd.Series):
+    """-> (null mask, (a, b) chunks): a row is null when the column value
+    is null OR an element inside the array is null/NaN (no element
+    identity)."""
+    seqs1 = [_clean_seq(s) for s in c1]
+    seqs2 = [_clean_seq(s) for s in c2]
+    null = np.fromiter(
+        (x is None or y is None for x, y in zip(seqs1, seqs2)), bool, len(seqs1)
+    )
+    empty = np.zeros(0, dtype=np.int64)
+    seqs1 = [empty if s is None else s for s in seqs1]
+    seqs2 = [empty if s is None else s for s in seqs2]
+    return null, _seq_chunks(seqs1, seqs2)
+
+
+def _column_fn(metric: str, variant: str, seq: bool = False):
+    name = f"{metric}_{variant}" + ("_seq" if seq else "")
+    integral = metric not in ("jaro", "jaro_winkler") and not variant.startswith(
+        "normalized"
+    )
+    decode = _decode_seqs if seq else _decode_strings
 
     def fn(
         s1: ColumnOrName,
@@ -267,32 +271,31 @@ def _metric_fn(metric: str, variant: str):
         score_hint: Optional[float] = None,
         **params,
     ) -> Column:
+        unknown = sorted(set(params) - set(_PARAMS.get(metric, ())))
+        if unknown:
+            raise TypeError(
+                f"{name}() got an unexpected keyword argument {unknown[0]!r}"
+            )
+
         # score_hint: perf-only expected-score hint (reference
         # levenshtein.rs:1069-1088) — feeds the banded kernel's start
         # band + doubling verify loop; results are hint-independent
-        @pandas_udf(ret_type)
+        @pandas_udf("long" if integral else "double")
         def _udf(c1: pd.Series, c2: pd.Series) -> pd.Series:
-            null = c1.isna() | c2.isna()
-            a = c1.fillna("").to_numpy(dtype=object)
-            b = c2.fillna("").to_numpy(dtype=object)
-            eff = params
-            if metric == "hamming" and params.get("strict"):
-                # strict raises on unequal lengths BETWEEN REAL VALUES
-                # only: a null input is SQL null, not a length error (the
-                # fillna("") above would otherwise fake a 0-vs-n pair)
-                nn = (~null).to_numpy()
-                eff = _hamming_strict_check(a[nn], b[nn], params)
-            vals, keep = _score_block(
-                metric, variant, a, b, score_cutoff, score_hint=score_hint, **eff
-            )
+            null, chunks = decode(c1, c2)
+            if params.get("strict"):
+                _hamming_strict_check(chunks, ~null)
+            parts = [
+                _score_block(metric, variant, a, b, score_cutoff, score_hint, **params)
+                for a, b in chunks
+            ]
+            vals = np.concatenate([v for v, _ in parts])
+            keep = np.concatenate([k for _, k in parts])
             if integral:
                 out = pd.Series(vals.astype(np.int64), dtype="Int64")
             else:
                 out = pd.Series(vals, dtype="float64")
-            drop = null.to_numpy()
-            if keep is not None:
-                drop = drop | ~keep
-            out[drop] = None
+            out[null | ~keep] = None
             return out
 
         if score_cutoff is not None:
@@ -307,172 +310,76 @@ def _metric_fn(metric: str, variant: str):
             _udf = _udf.asNondeterministic()
         return _udf(s1, s2)
 
-    fn.__name__ = f"{metric}_{variant}"
+    fn.__name__ = fn.__qualname__ = name
     fn.__doc__ = (
-        f"{metric} {variant.replace('_', ' ')} as an Arrow-vectorized Column; "
-        f"null where score_cutoff filters (reference Option semantics) or "
-        f"either input is null."
+        f"{metric} {variant.replace('_', ' ')} as an Arrow-vectorized Column"
+        + (
+            " over array<int>/array<long> columns (HashableChar parity: "
+            "elements compared by identity)"
+            if seq
+            else ""
+        )
+        + "; null where score_cutoff filters (reference Option semantics) "
+        "or either input is null."
     )
     return fn
 
 
-# ---- generated surface: 8 metrics x 4 variants ---------------------------
+# ---- generated surface: 8 edit metrics + 2 Jaro metrics x 4 variants ------
 
-levenshtein_distance = _metric_fn("levenshtein", "distance")
-levenshtein_similarity = _metric_fn("levenshtein", "similarity")
-levenshtein_normalized_distance = _metric_fn("levenshtein", "normalized_distance")
-levenshtein_normalized_similarity = _metric_fn("levenshtein", "normalized_similarity")
+levenshtein_distance = _column_fn("levenshtein", "distance")
+levenshtein_similarity = _column_fn("levenshtein", "similarity")
+levenshtein_normalized_distance = _column_fn("levenshtein", "normalized_distance")
+levenshtein_normalized_similarity = _column_fn("levenshtein", "normalized_similarity")
 
-indel_distance = _metric_fn("indel", "distance")
-indel_similarity = _metric_fn("indel", "similarity")
-indel_normalized_distance = _metric_fn("indel", "normalized_distance")
-indel_normalized_similarity = _metric_fn("indel", "normalized_similarity")
+indel_distance = _column_fn("indel", "distance")
+indel_similarity = _column_fn("indel", "similarity")
+indel_normalized_distance = _column_fn("indel", "normalized_distance")
+indel_normalized_similarity = _column_fn("indel", "normalized_similarity")
 
-lcs_seq_distance = _metric_fn("lcs_seq", "distance")
-lcs_seq_similarity = _metric_fn("lcs_seq", "similarity")
-lcs_seq_normalized_distance = _metric_fn("lcs_seq", "normalized_distance")
-lcs_seq_normalized_similarity = _metric_fn("lcs_seq", "normalized_similarity")
+lcs_seq_distance = _column_fn("lcs_seq", "distance")
+lcs_seq_similarity = _column_fn("lcs_seq", "similarity")
+lcs_seq_normalized_distance = _column_fn("lcs_seq", "normalized_distance")
+lcs_seq_normalized_similarity = _column_fn("lcs_seq", "normalized_similarity")
 
-osa_distance = _metric_fn("osa", "distance")
-osa_similarity = _metric_fn("osa", "similarity")
-osa_normalized_distance = _metric_fn("osa", "normalized_distance")
-osa_normalized_similarity = _metric_fn("osa", "normalized_similarity")
+osa_distance = _column_fn("osa", "distance")
+osa_similarity = _column_fn("osa", "similarity")
+osa_normalized_distance = _column_fn("osa", "normalized_distance")
+osa_normalized_similarity = _column_fn("osa", "normalized_similarity")
 
-damerau_levenshtein_distance = _metric_fn("damerau_levenshtein", "distance")
-damerau_levenshtein_similarity = _metric_fn("damerau_levenshtein", "similarity")
-damerau_levenshtein_normalized_distance = _metric_fn(
+damerau_levenshtein_distance = _column_fn("damerau_levenshtein", "distance")
+damerau_levenshtein_similarity = _column_fn("damerau_levenshtein", "similarity")
+damerau_levenshtein_normalized_distance = _column_fn(
     "damerau_levenshtein", "normalized_distance"
 )
-damerau_levenshtein_normalized_similarity = _metric_fn(
+damerau_levenshtein_normalized_similarity = _column_fn(
     "damerau_levenshtein", "normalized_similarity"
 )
 
-hamming_distance = _metric_fn("hamming", "distance")
-hamming_similarity = _metric_fn("hamming", "similarity")
-hamming_normalized_distance = _metric_fn("hamming", "normalized_distance")
-hamming_normalized_similarity = _metric_fn("hamming", "normalized_similarity")
+hamming_distance = _column_fn("hamming", "distance")
+hamming_similarity = _column_fn("hamming", "similarity")
+hamming_normalized_distance = _column_fn("hamming", "normalized_distance")
+hamming_normalized_similarity = _column_fn("hamming", "normalized_similarity")
 
-prefix_distance = _metric_fn("prefix", "distance")
-prefix_similarity = _metric_fn("prefix", "similarity")
-prefix_normalized_distance = _metric_fn("prefix", "normalized_distance")
-prefix_normalized_similarity = _metric_fn("prefix", "normalized_similarity")
+prefix_distance = _column_fn("prefix", "distance")
+prefix_similarity = _column_fn("prefix", "similarity")
+prefix_normalized_distance = _column_fn("prefix", "normalized_distance")
+prefix_normalized_similarity = _column_fn("prefix", "normalized_similarity")
 
-postfix_distance = _metric_fn("postfix", "distance")
-postfix_similarity = _metric_fn("postfix", "similarity")
-postfix_normalized_distance = _metric_fn("postfix", "normalized_distance")
-postfix_normalized_similarity = _metric_fn("postfix", "normalized_similarity")
+postfix_distance = _column_fn("postfix", "distance")
+postfix_similarity = _column_fn("postfix", "similarity")
+postfix_normalized_distance = _column_fn("postfix", "normalized_distance")
+postfix_normalized_similarity = _column_fn("postfix", "normalized_similarity")
 
+jaro_similarity = _column_fn("jaro", "similarity")
+jaro_distance = _column_fn("jaro", "distance")
+jaro_normalized_similarity = _column_fn("jaro", "normalized_similarity")
+jaro_normalized_distance = _column_fn("jaro", "normalized_distance")
 
-# ---- jaro / jaro-winkler (similarity-primitive, maximum = 1.0) ------------
-
-
-def _jaro_fn(winkler: bool, variant: str):
-    def fn(
-        s1: ColumnOrName,
-        s2: ColumnOrName,
-        score_cutoff: Optional[float] = None,
-        score_hint: Optional[float] = None,
-        prefix_weight: float = 0.1,
-    ) -> Column:
-        @pandas_udf("double")
-        def _udf(c1: pd.Series, c2: pd.Series) -> pd.Series:
-            null = c1.isna() | c2.isna()
-            a = c1.fillna("").to_numpy(dtype=object)
-            b = c2.fillna("").to_numpy(dtype=object)
-            live = None
-            # both pruning paths (the length upper bound's boost transform
-            # and the in-kernel k translation) are only sound for the
-            # standard prefix_weight range [0, 0.25] — the reference
-            # accepts ANY f64 and computes exactly (jaro_winkler.rs:87-97),
-            # so out-of-range weights skip pruning rather than mis-prune
-            prune_ok = (not winkler) or (0.0 <= prefix_weight <= 0.25)
-            if (
-                score_cutoff is not None
-                and variant.endswith("similarity")
-                and len(a)
-                and prune_ok
-            ):
-                # reference jaro length_filter (jaro.rs:122-131): common
-                # chars m <= min(l1,l2) bounds sim above; winkler boost is
-                # capped by prefix<=4. Skip pairs that cannot reach cutoff.
-                la = np.fromiter((len(x) for x in a), np.float64, len(a))
-                lb = np.fromiter((len(x) for x in b), np.float64, len(b))
-                m = np.minimum(la, lb)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    ub = np.where(
-                        m > 0, (m / np.maximum(la, 1) + m / np.maximum(lb, 1) + 1) / 3,
-                        np.where((la == 0) & (lb == 0), 1.0, 0.0),
-                    )
-                if winkler:
-                    ub = ub + 4 * prefix_weight * (1.0 - ub)
-                live = ub >= score_cutoff
-                if not live.all():
-                    sim = np.zeros(len(a), dtype=np.float64)
-                    if live.any():
-                        sim[live] = (
-                            B.jaro_winkler_batch(
-                                a[live], b[live], prefix_weight, k=score_cutoff
-                            )
-                            if winkler
-                            else B.jaro_batch(a[live], b[live], k=score_cutoff)
-                        )
-                else:
-                    live = None
-            if live is None:
-                # in-kernel early exit: similarity cutoff passes through;
-                # a distance cutoff d keeps sim >= 1-d. Dropped pairs
-                # return the -1.0 sentinel, which every keep-comparison
-                # below rejects (sim -1 < cutoff; dist 2 > cutoff).
-                ik = None
-                if score_cutoff is not None and len(a) and prune_ok:
-                    ik = (
-                        score_cutoff
-                        if variant.endswith("similarity")
-                        else 1.0 - score_cutoff
-                    )
-                if winkler:
-                    sim = B.jaro_winkler_batch(a, b, prefix_weight, k=ik)
-                else:
-                    sim = B.jaro_batch(a, b, k=ik)
-            vals = sim if variant.endswith("similarity") else 1.0 - sim
-            if score_cutoff is None:
-                keep = None
-            elif variant.endswith("similarity"):
-                keep = vals >= score_cutoff
-            else:
-                keep = vals <= score_cutoff
-            out = pd.Series(vals, dtype="float64")
-            drop = null.to_numpy()
-            if keep is not None:
-                drop = drop | ~keep
-            out[drop] = None
-            return out
-
-        if score_cutoff is not None:
-            # cutoff usage is always followed by an isNotNull filter
-            # (Option semantics); a deterministic UDF referenced by both
-            # the filter and the projection gets TWO ArrowEvalPython nodes
-            # (Catalyst pushes the filter through the project and
-            # duplicates the evaluation — locked in by tests/test_plans).
-            # Nondeterministic blocks that split: one Arrow node, the
-            # filter above it. Cheap prunes (length, equality) are hoisted
-            # explicitly before scoring, so nothing useful loses pushdown.
-            _udf = _udf.asNondeterministic()
-        return _udf(s1, s2)
-
-    name = ("jaro_winkler_" if winkler else "jaro_") + variant
-    fn.__name__ = name
-    return fn
-
-
-jaro_similarity = _jaro_fn(False, "similarity")
-jaro_distance = _jaro_fn(False, "distance")
-jaro_normalized_similarity = _jaro_fn(False, "normalized_similarity")
-jaro_normalized_distance = _jaro_fn(False, "normalized_distance")
-jaro_winkler_similarity = _jaro_fn(True, "similarity")
-jaro_winkler_distance = _jaro_fn(True, "distance")
-jaro_winkler_normalized_similarity = _jaro_fn(True, "normalized_similarity")
-jaro_winkler_normalized_distance = _jaro_fn(True, "normalized_distance")
+jaro_winkler_similarity = _column_fn("jaro_winkler", "similarity")
+jaro_winkler_distance = _column_fn("jaro_winkler", "distance")
+jaro_winkler_normalized_similarity = _column_fn("jaro_winkler", "normalized_similarity")
+jaro_winkler_normalized_distance = _column_fn("jaro_winkler", "normalized_distance")
 
 
 def ratio(
@@ -526,9 +433,7 @@ def _seqs_to_strings(seqs1: list, seqs2: list):
     kernels read (reference HashableChar, src/lib.rs:102-121).
 
     Raises _VocabOverflow when the batch's combined vocabulary does not
-    fit the utf-32 code space (> ~1.11M distinct elements); the caller
-    splits the batch and retries — the vocabulary is per-batch, so
-    halving converges (a single pair's vocabulary is its length sum)."""
+    fit the utf-32 code space (> ~1.11M distinct elements)."""
     seqs = seqs1 + seqs2
     lens = np.fromiter((len(s) for s in seqs), dtype=np.int64, count=len(seqs))
     offs = np.zeros(len(seqs) + 1, dtype=np.int64)
@@ -548,113 +453,35 @@ def _seqs_to_strings(seqs1: list, seqs2: list):
     )
 
 
-def _score_seq_block(
-    metric: str, variant: str, seqs1: list, seqs2: list, score_cutoff, **params
-):
-    """Score int-sequence pairs via the string batch engine, splitting the
-    batch recursively when its combined vocabulary overflows the utf-32
-    remap space."""
-    try:
-        a, b = _seqs_to_strings(seqs1, seqs2)
-    except _VocabOverflow:
-        n = len(seqs1)
-        if n <= 1:
-            raise  # a single >1.1M-distinct-element pair: out of scope
-        h = n // 2
-        v1, k1 = _score_seq_block(
-            metric, variant, seqs1[:h], seqs2[:h], score_cutoff, **params
-        )
-        v2, k2 = _score_seq_block(
-            metric, variant, seqs1[h:], seqs2[h:], score_cutoff, **params
-        )
-        vals = np.concatenate([v1, v2])
-        if k1 is None and k2 is None:
-            return vals, None
-        k1 = np.ones(h, dtype=bool) if k1 is None else k1
-        k2 = np.ones(n - h, dtype=bool) if k2 is None else k2
-        return vals, np.concatenate([k1, k2])
-    return _score_block(metric, variant, a, b, score_cutoff, **params)
+def _seq_chunks(seqs1: list, seqs2: list) -> list:
+    """Remap int-sequence pairs to (a, b) string chunks, in row order.
+    A chunk whose combined vocabulary overflows the utf-32 remap space
+    is halved and retried — the vocabulary is per chunk, so halving
+    converges (a single pair's vocabulary is its length sum)."""
+    chunks, todo = [], [(0, len(seqs1))]
+    while todo:
+        lo, hi = todo.pop()
+        try:
+            chunks.append(_seqs_to_strings(seqs1[lo:hi], seqs2[lo:hi]))
+        except _VocabOverflow:
+            if hi - lo <= 1:
+                raise  # a single >1.1M-distinct-element pair: out of scope
+            mid = (lo + hi) // 2
+            todo += [(mid, hi), (lo, mid)]
+    return chunks
 
 
-def _seq_metric_fn(metric: str, variant: str):
-    integral = metric in _INTEGRAL_METRICS and variant in ("distance", "similarity")
-    ret_type = "long" if integral else "double"
-
-    def fn(
-        s1: ColumnOrName,
-        s2: ColumnOrName,
-        score_cutoff: Optional[float] = None,
-        score_hint: Optional[float] = None,
-        **params,
-    ) -> Column:
-        @pandas_udf(ret_type)
-        def _udf(c1: pd.Series, c2: pd.Series) -> pd.Series:
-            seqs1 = [_clean_seq(s) for s in c1]
-            seqs2 = [_clean_seq(s) for s in c2]
-            # row is null when the column value is null OR an element
-            # inside the array is null/NaN (no element identity)
-            null = pd.Series(
-                [x is None or y is None for x, y in zip(seqs1, seqs2)],
-                index=c1.index,
-            )
-            empty = np.zeros(0, dtype=np.int64)
-            seqs1 = [empty if s is None else s for s in seqs1]
-            seqs2 = [empty if s is None else s for s in seqs2]
-            eff = params
-            if metric == "hamming" and params.get("strict"):
-                # mirror of the string path: a null array (or an array
-                # with a null element) is SQL null, not a length error;
-                # the empty placeholder substituted above must not trip
-                # DifferentLengthArgs for the whole batch
-                nn = ~null.to_numpy()
-                eff = _hamming_strict_check(
-                    (s for s, m in zip(seqs1, nn) if m),
-                    (s for s, m in zip(seqs2, nn) if m),
-                    params,
-                )
-            vals, keep = _score_seq_block(
-                metric, variant, seqs1, seqs2, score_cutoff, **eff
-            )
-            out = (
-                pd.Series(vals.astype(np.int64), dtype="Int64")
-                if integral
-                else pd.Series(vals, dtype="float64")
-            )
-            drop = null.to_numpy()
-            if keep is not None:
-                drop = drop | ~keep
-            out[drop] = None
-            return out
-
-        if score_cutoff is not None:
-            # cutoff usage is always followed by an isNotNull filter
-            # (Option semantics); a deterministic UDF referenced by both
-            # the filter and the projection gets TWO ArrowEvalPython nodes
-            # (Catalyst pushes the filter through the project and
-            # duplicates the evaluation — locked in by tests/test_plans).
-            # Nondeterministic blocks that split: one Arrow node, the
-            # filter above it. Cheap prunes (length, equality) are hoisted
-            # explicitly before scoring, so nothing useful loses pushdown.
-            _udf = _udf.asNondeterministic()
-        return _udf(s1, s2)
-
-    fn.__name__ = f"{metric}_{variant}_seq"
-    fn.__doc__ = (
-        f"{metric} {variant.replace('_', ' ')} over array<int>/array<long> "
-        f"columns (HashableChar parity: elements compared by identity)."
-    )
-    return fn
-
-
-levenshtein_distance_seq = _seq_metric_fn("levenshtein", "distance")
-levenshtein_normalized_similarity_seq = _seq_metric_fn(
-    "levenshtein", "normalized_similarity"
+levenshtein_distance_seq = _column_fn("levenshtein", "distance", seq=True)
+levenshtein_normalized_similarity_seq = _column_fn(
+    "levenshtein", "normalized_similarity", seq=True
 )
-indel_distance_seq = _seq_metric_fn("indel", "distance")
-lcs_seq_similarity_seq = _seq_metric_fn("lcs_seq", "similarity")
-hamming_distance_seq = _seq_metric_fn("hamming", "distance")
-damerau_levenshtein_distance_seq = _seq_metric_fn("damerau_levenshtein", "distance")
-osa_distance_seq = _seq_metric_fn("osa", "distance")
+indel_distance_seq = _column_fn("indel", "distance", seq=True)
+lcs_seq_similarity_seq = _column_fn("lcs_seq", "similarity", seq=True)
+hamming_distance_seq = _column_fn("hamming", "distance", seq=True)
+damerau_levenshtein_distance_seq = _column_fn(
+    "damerau_levenshtein", "distance", seq=True
+)
+osa_distance_seq = _column_fn("osa", "distance", seq=True)
 
 
 def token_sort_key(col: ColumnOrName) -> Column:

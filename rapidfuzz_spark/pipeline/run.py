@@ -157,6 +157,7 @@ def run_pipeline(
     fail_after_buckets: Optional[int] = None,
 ) -> DataFrame:
     """Returns entities DataFrame (doc_id, entity_id, spans intact)."""
+    scoring._check_threshold(conf.threshold)  # before out_dir is touched
     docs_t = ingest.with_match_text(docs)
     if conf.metric in ("soft_tfidf", "soft_tfidf_jw"):
         from ..textops import softtfidf as ST

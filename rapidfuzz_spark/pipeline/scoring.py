@@ -91,6 +91,16 @@ def attach_texts(
     )
 
 
+def _check_threshold(threshold: float) -> None:
+    """Every scorer ``score_pairs`` routes to is a similarity in [0, 1];
+    a threshold outside it (say rapidfuzz-Python's 0-100 scale) would
+    silently give no edges and every doc its own entity."""
+    if not 0.0 <= threshold <= 1.0:
+        raise ValueError(
+            f"threshold must be a similarity in [0, 1], got {threshold!r}"
+        )
+
+
 def score_pairs(
     pairs_with_text: DataFrame,
     metric: str = "ratio",
@@ -106,6 +116,7 @@ def score_pairs(
     ``dual_pass``: score = greatest(metric on canonical token-sorted text,
     metric on unsorted normalized text) — catches token reorders (canon
     pass) and token-resorting first-char typos (raw pass)."""
+    _check_threshold(threshold)
     df = pairs_with_text
     if "len_1" not in df.columns or "len_2" not in df.columns:
         # callers that attach texts themselves may not carry length

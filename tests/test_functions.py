@@ -45,26 +45,61 @@ METRICS = [
     "jaro_winkler",
     "prefix",
     "postfix",
+    "hamming",
 ]
 VARIANTS = ["distance", "similarity", "normalized_distance", "normalized_similarity"]
+# hamming without pad raises in the scalar API on unequal lengths
+PARAMS = {"hamming": {"pad": True}}
+CUTOFFS = {"distance": (3, 15), "similarity": (5, 20)}
 
 
 @pytest.mark.parametrize("metric", METRICS)
 def test_udf_matches_scalar(spark, pairs_df, metric):
+    """Every variant, uncut and under two cutoffs, against the scalar
+    API's value and its ``score_cutoff`` None."""
+    params = PARAMS.get(metric, {})
+    cases = [(v, c) for v in VARIANTS for c in (None,) + (
+        (0.3, 0.7) if metric.startswith("jaro") or v.startswith("normalized")
+        else CUTOFFS[v]
+    )]
     cols = [
-        getattr(RF, f"{metric}_{v}")("s1", "s2").alias(v) for v in VARIANTS
+        getattr(RF, f"{metric}_{v}")("s1", "s2", score_cutoff=c, **params).alias(
+            f"c{i}"
+        )
+        for i, (v, c) in enumerate(cases)
     ]
     rows = pairs_df.select("s1", "s2", *cols).collect()
     scalar = getattr(api, metric)
     for r in rows:
-        if r.s1 is None or r.s2 is None:
-            for v in VARIANTS:
-                assert r[v] is None
-            continue
-        for v in VARIANTS:
-            exp = getattr(scalar, v)(r.s1, r.s2)
-            got = r[v]
-            assert got == pytest.approx(exp, abs=1e-9), (metric, v, r.s1, r.s2)
+        for i, (v, c) in enumerate(cases):
+            got = r[f"c{i}"]
+            if r.s1 is None or r.s2 is None:
+                assert got is None
+                continue
+            exp = getattr(scalar, v)(r.s1, r.s2, score_cutoff=c, **params)
+            if exp is None:
+                assert got is None, (metric, v, c, r.s1, r.s2, got)
+            else:
+                assert got == pytest.approx(exp, abs=1e-9), (metric, v, c, r.s1, r.s2)
+
+
+def test_unsupported_keyword_raises(spark):
+    """A keyword argument the metric does not take is a TypeError at the
+    driver, as in the scalar API — never silently ignored."""
+    cases = [
+        (RF.indel_distance, {"weights": (5, 5, 5)}),
+        (RF.levenshtein_distance, {"wieghts": (1, 1, 2)}),
+        (RF.osa_distance, {"weights": (1, 1, 2)}),
+        (RF.jaro_similarity, {"prefix_weight": 0.2}),
+        (RF.hamming_normalized_similarity, {"weights": (1, 1, 1)}),
+        (RF.jaro_winkler_distance, {"pad": True}),
+        (RF.levenshtein_distance_seq, {"strict": True}),
+    ]
+    for fn, kw in cases:
+        with pytest.raises(TypeError, match="unexpected keyword argument"):
+            fn("s1", "s2", **kw)
+    with pytest.raises(TypeError):
+        api.indel.distance("kitten", "sitting", weights=(5, 5, 5))
 
 
 def test_udf_cutoff_null_semantics(spark, pairs_df):
@@ -193,10 +228,10 @@ def test_jaro_winkler_nonstandard_prefix_weight_cutoff(spark):
 
 def test_seq_vocab_overflow_splits_batch():
     """A batch whose combined vocabulary exceeds the utf-32 remap space
-    splits recursively instead of failing the task."""
+    splits into chunks instead of failing the task."""
     import numpy as np
 
-    from rapidfuzz_spark.functions import _score_seq_block
+    from rapidfuzz_spark.functions import _score_block, _seq_chunks
 
     n_rows, width = 300, 8000  # 2 sides x 300 x 8000 = 4.8M distinct ids
     seqs1 = [np.arange(i * width, (i + 1) * width, dtype=np.int64)
@@ -205,7 +240,10 @@ def test_seq_vocab_overflow_splits_batch():
     seqs2 = [np.arange(base + i * width, base + (i + 1) * width, dtype=np.int64)
              for i in range(n_rows)]
     seqs2[0] = seqs1[0]  # one identical pair
-    vals, keep = _score_seq_block("levenshtein", "distance", seqs1, seqs2, None)
+    vals = np.concatenate([
+        _score_block("levenshtein", "distance", a, b)[0]
+        for a, b in _seq_chunks(seqs1, seqs2)
+    ])
     assert vals[0] == 0 and (vals[1:] == width).all()
 
 

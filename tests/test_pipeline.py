@@ -583,6 +583,26 @@ def test_score_pairs_guard_without_len_columns(spark):
     assert got == {("c", "d")}  # the both-empty pair never scores 1.0
 
 
+def test_threshold_outside_unit_interval_raises(spark, tmp_path):
+    """Every scorer is a similarity in [0, 1]: a 0-100 threshold (or any
+    other outside [0, 1]) is an error, not a run with no edges — and
+    run_pipeline raises before it reads or writes out_dir."""
+    pairs = spark.createDataFrame(
+        [("a", "b", "same text", "same text")],
+        "doc_id_1 string, doc_id_2 string, text_1 string, text_2 string",
+    )
+    docs = synth.synth_documents(spark, n_entities=5, seed=3)
+    out = tmp_path / "out"
+    for t in (85, 1.5, -0.1, float("nan")):
+        with pytest.raises(ValueError, match="threshold"):
+            scoring.score_pairs(pairs, metric="ratio", threshold=t)
+        with pytest.raises(ValueError, match="threshold"):
+            run_pipeline(spark, docs, str(out), PipelineConfig(threshold=t))
+        assert not out.exists()
+    for t in (0.0, 1.0):  # the bounds themselves are valid
+        scoring.score_pairs(pairs, metric="ratio", threshold=t)
+
+
 def test_incremental_link_soft_tfidf_jw(spark, corpus):
     """The shipped hybrid metric must work on the incremental path too:
     toks/idfs are attached from the base-catalog IDF, and exact

@@ -142,3 +142,78 @@ def test_jaro_bounds_and_symmetry(a, b):
 @settings(max_examples=150, deadline=None)
 def test_levenshtein_triangle(a, b, c):
     assert levenshtein.distance(a, c) <= levenshtein.distance(a, b) + levenshtein.distance(b, c)
+
+
+# ---- Column functions: NULL, empty and non-ASCII inputs -------------------
+
+def _column_fns():
+    """(name, metric, variant, is_seq) for every exported metric Column
+    function, parsed from the module's public names."""
+    import rapidfuzz_spark.functions as RF
+    from rapidfuzz_spark import api
+
+    metrics = sorted(api.ALL_METRICS, key=len, reverse=True)
+    variants = ("distance", "similarity", "normalized_distance", "normalized_similarity")
+    out = []
+    for name in dir(RF):
+        for m in metrics:
+            rest = name[len(m) + 1 :] if name.startswith(m + "_") else ""
+            v = rest.removesuffix("_seq")
+            if v in variants:
+                out.append((name, m, v, v != rest))
+                break
+    return out
+
+
+_astral = st.text(alphabet="ab😀𝔘香и", max_size=8)
+_elems = st.lists(st.integers(-2, 2), max_size=6)
+
+
+@given(
+    st.lists(st.tuples(st.none() | _astral, st.none() | _astral), max_size=20),
+    st.lists(
+        st.tuples(
+            st.none() | _elems | st.lists(st.none() | st.integers(-2, 2), max_size=4),
+            st.none() | _elems,
+        ),
+        max_size=20,
+    ),
+)
+@settings(max_examples=4, deadline=None)
+def test_column_functions_null_empty_non_ascii(spark, pairs, seq_pairs):
+    """NULL, empty and astral-plane inputs behave the same way in every
+    Column function: NULL in gives NULL out, everything else matches the
+    scalar API (on the element lists for ``_seq``). One Spark job per
+    batch of pairs covers all functions."""
+    import pytest
+
+    import rapidfuzz_spark.functions as RF
+    from rapidfuzz_spark import api
+
+    fns = _column_fns()
+    assert sum(not s for *_, s in fns) == 40 and sum(s for *_, s in fns) == 7
+    pairs = pairs + [(None, "a"), ("a", None), ("", ""), ("", "😀𝔘"), ("😀", "𝔘")]
+    seq_pairs = seq_pairs + [([], []), (None, [1]), ([1, None], [1]), ([], [1, 2])]
+    for rows, seq, schema in (
+        (pairs, False, "s1 string, s2 string"),
+        (seq_pairs, True, "s1 array<bigint>, s2 array<bigint>"),
+    ):
+        fs = [f for f in fns if f[3] == seq]
+        params = [{"pad": True} if m == "hamming" else {} for _, m, _, _ in fs]
+        got = (
+            spark.createDataFrame(rows, schema)
+            .select(
+                "s1",
+                "s2",
+                *[getattr(RF, n)("s1", "s2", **p).alias(n) for (n, *_), p in zip(fs, params)],
+            )
+            .collect()
+        )
+        for r in got:
+            null = r.s1 is None or r.s2 is None or seq and (None in r.s1 or None in r.s2)
+            for (name, m, v, _), p in zip(fs, params):
+                if null:
+                    assert r[name] is None, (name, r.s1, r.s2)
+                else:
+                    exp = getattr(getattr(api, m), v)(r.s1, r.s2, **p)
+                    assert r[name] == pytest.approx(exp, abs=1e-9), (name, r.s1, r.s2)

@@ -536,6 +536,11 @@ def tier_d(rng: random.Random, rows: int) -> int:
         Fn.levenshtein_similarity("s1", "s2").alias("lev_sim"),
         Fn.levenshtein_normalized_similarity("s1", "s2").alias("lev_nsim"),
         Fn.levenshtein_distance("s1", "s2", score_cutoff=3).alias("lev_c3"),
+        Fn.levenshtein_similarity("s1", "s2", score_cutoff=20).alias("lev_sim_c"),
+        Fn.levenshtein_normalized_distance("s1", "s2", score_cutoff=0.3).alias(
+            "lev_nd_c"
+        ),
+        Fn.jaro_winkler_distance("s1", "s2", score_cutoff=0.2).alias("jw_d_c"),
         Fn.levenshtein_distance("s1", "s2", weights=(1, 2, 3)).alias("lev_w123"),
         Fn.levenshtein_distance("s1", "s2", score_hint=2).alias("lev_h2"),
         Fn.indel_distance("s1", "s2").alias("indel"),
@@ -551,6 +556,8 @@ def tier_d(rng: random.Random, rows: int) -> int:
         Fn.ratio("s1", "s2", score_cutoff=0.7).alias("ratio_c"),
         Fn.levenshtein_distance_seq("q1", "q2").alias("lev_seq"),
         Fn.osa_distance_seq("q1", "q2").alias("osa_seq"),
+        Fn.levenshtein_distance_seq("q1", "q2", score_cutoff=3).alias("lev_seq_c"),
+        Fn.levenshtein_distance_seq("q1", "q2", score_hint=2).alias("lev_seq_h"),
     ).toPandas()
     checked = 0
     for r in out.itertuples(index=False):
@@ -576,6 +583,9 @@ def tier_d(rng: random.Random, rows: int) -> int:
         ck("lev_sim", A.levenshtein.similarity(a, b))
         ck("lev_nsim", A.levenshtein.normalized_similarity(a, b), 1e-9)
         ck("lev_c3", A.levenshtein.distance(a, b, score_cutoff=3))
+        ck("lev_sim_c", A.levenshtein.similarity(a, b, score_cutoff=20))
+        ck("lev_nd_c", A.levenshtein.normalized_distance(a, b, score_cutoff=0.3), 1e-9)
+        ck("jw_d_c", A.jaro_winkler.distance(a, b, score_cutoff=0.2), 1e-9)
         ck("lev_w123", A.levenshtein.distance(a, b, weights=(1, 2, 3)))
         ck("lev_h2", A.levenshtein.distance(a, b))
         ck("indel", A.indel.distance(a, b))
@@ -592,6 +602,8 @@ def tier_d(rng: random.Random, rows: int) -> int:
         if r.seq_ok:
             ck("lev_seq", A.levenshtein.distance(a, b))
             ck("osa_seq", A.osa.distance(a, b))
+            ck("lev_seq_c", A.levenshtein.distance(a, b, score_cutoff=3))
+            ck("lev_seq_h", A.levenshtein.distance(a, b))
         checked += 1
     spark.stop()
     return checked
