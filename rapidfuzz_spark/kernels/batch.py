@@ -8,13 +8,17 @@ Readme.md:100-106), applied *within* an Arrow batch of a pandas UDF:
   pairs short-cut, the common affix is stripped (not for Jaro, which is
   not affix-invariant), and the shorter side becomes the pattern. Pairs
   with an empty core are scored from the core lengths alone.
-- patterns of up to 64*_BLOCK_MAX_WORDS chars are grouped by word count
-  W and scored by **NumPy-vectorized blockwise Myers/Hyyrö kernels
-  across pairs** (any codepoints — alphabets are densely remapped per
-  batch); patterns of <= 64 chars are simply the W=1 group. The char
-  loop runs over text positions, each step processing every still-active
-  pair with uint64 ops. Pairs are sorted by text length so the active
-  set is a shrinking prefix (no wasted lanes).
+- patterns of up to 64*_BLOCK_MAX_WORDS chars are scored by
+  **NumPy-vectorized blockwise Myers/Hyyrö kernels scheduled along
+  anti-diagonals** (any codepoints — alphabets are densely remapped per
+  chunk). Every 64-char word of every pattern in a chunk is one lane;
+  lane (pair, w) processes text char j = step - w, so its carry-in from
+  word w-1 was produced one step earlier for the same j, and one step of
+  a fixed number of uint64 array ops advances every word of every pair,
+  whatever mix of word counts the chunk holds. Pairs are sorted by the
+  step their wavefront ends, so the active lanes are a shrinking prefix.
+  A chunk of one-word patterns (<= 64 chars) skips the carry plumbing:
+  its carry-in is the constant left boundary.
 - longer patterns take the arbitrary-precision Python-int kernels with a
   per-batch pattern-mask cache keyed by the pattern string (the
   BatchComparator analogue: pattern state is built once per distinct s1).
@@ -95,105 +99,165 @@ def _compact_alphabet(pcodes: np.ndarray, tcodes: np.ndarray):
     return p_new, t_new, nu + 1
 
 
-def _build_pm_block(
-    pats: list, codes, lens, offs, W: int, sigma: int = 256
-) -> np.ndarray:
-    """PM bitmask table, shape (n, W, sigma) uint64, patterns len <= 64*W."""
-    n = len(pats)
-    pm = np.zeros((n, W, sigma), dtype=np.uint64)
-    rows = np.repeat(np.arange(n, dtype=np.intp), lens)
-    pos = np.arange(len(codes), dtype=np.int64) - np.repeat(offs[:-1], lens)
-    word = (pos >> 6).astype(np.intp)
+def _build_pm(codes, lens, starts, row0, nrows: int, sigma: int) -> np.ndarray:
+    """PM bitmask table, shape (nrows, sigma) uint64: pattern p (at
+    ``starts[p]`` in ``codes``) has its char at position i set bit i % 64
+    of row ``row0[p] + i // 64``."""
+    pm = np.zeros((nrows, sigma), dtype=np.uint64)
+    rows = np.repeat(row0, lens)
+    pos = np.arange(len(codes), dtype=np.int64) - np.repeat(starts, lens)
     bits = np.uint64(1) << (pos & 63).astype(np.uint64)
-    np.bitwise_or.at(pm, (rows, word, codes), bits)
+    np.bitwise_or.at(pm, (rows + (pos >> 6), codes), bits)
     return pm
 
 
-def myers_batch_block(pats: list, texts: list, W: int) -> np.ndarray:
-    """Vectorized-across-pairs blockwise Myers/Hyyrö for patterns of
-    word count W (len in (64*(W-1), 64*W]). Semantics follow the
-    reference's hyrroe2003_block (/root/reference/src/distance/
-    levenshtein.rs:769-1019) minus the Ukkonen band: the hp/hn horizontal
-    carries chain low->high word; per text char the distance moves by the
-    carry out of the pattern's last bit. Any Unicode codepoints."""
+class _Lanes(NamedTuple):
+    """A chunk laid out for the wavefront kernels.
+
+    Pair p's pattern of W_p = ceil(len/64) words owns lanes
+    ``off[p] .. off[p+1]-1``, one per word, low word first. At step s,
+    lane (p, w) processes text char j = s - w, so its horizontal carry-in
+    is the carry-out lane (p, w-1) produced at step s-1 for the same j,
+    and one step advances every word of every pair. Pair p is active for
+    its first ``end[p]`` = T_p + W_p - 1 steps; pairs are sorted by
+    ``end`` descending, so the active pairs, and with them the active
+    lanes, are a prefix. Texts sit in ``codes`` W_max - 1 zero codes
+    apart, and code 0 matches no pattern char (``_compact_alphabet``): a
+    lane not yet started (j < 0) reads zeros, which leave every kernel's
+    initial state and carries unchanged. A lane past its text's end
+    (j >= T_p) computes garbage that only reaches higher lanes, also past
+    the end, so the kernels read a pair's score at its last lane while
+    the pair is active."""
+
+    order: np.ndarray  # lane-layout pair -> input pair
+    plen: np.ndarray
+    tlen: np.ndarray
+    end: np.ndarray
+    off: np.ndarray  # first lane per pair, off[-1] = lane count
+    word: np.ndarray  # per lane: word index w
+    pm: np.ndarray  # (lanes * sigma,) match masks, lane-major
+    pmrow: np.ndarray  # per lane: lane * sigma
+    codes: np.ndarray  # remapped text codes with the zero gaps
+    tpos: np.ndarray  # per lane: codes index of the lane's char at step 0
+    top: np.ndarray  # per lane: carry-out bit (the pattern's last at the last lane)
+    pcodes: np.ndarray  # remapped pattern codes, in lane-layout order
+    pstart: np.ndarray  # per pair: pcodes index of the pattern's first char
+    tbase: np.ndarray  # per pair: codes index of the text's first char
+
+
+def _reorder(codes: np.ndarray, offs: np.ndarray, order: np.ndarray, gap: int = 0):
+    """The strings held in ``codes`` at ``offs``, in ``order``, ``gap``
+    zero codes apart and around: the new blob and each string's start."""
+    n = len(order)
+    lens = np.diff(offs)[order]
+    cum = np.zeros(n + 1, dtype=np.intp)
+    np.cumsum(lens, out=cum[1:])
+    k = np.arange(cum[-1], dtype=np.intp)
+    seq = codes[np.repeat(offs[:-1][order] - cum[:-1], lens) + k]
+    if not gap:
+        return seq, cum[:-1]
+    start = cum[:-1] + gap * np.arange(1, n + 1, dtype=np.intp)
+    out = np.zeros(cum[-1] + gap * (n + 1), dtype=codes.dtype)
+    out[np.repeat(start - cum[:-1], lens) + k] = seq
+    return out, start
+
+
+def _lanes(pats: list, texts: list) -> _Lanes:
     n = len(pats)
-    pcodes, plens, poffs = _encode_codes(pats)
-    tcodes, tlens, toffs = _encode_codes(texts)
+    pcodes, plen, poffs = _encode_codes(pats)
+    tcodes, tlen, toffs = _encode_codes(texts)
     pcodes, tcodes, sigma = _compact_alphabet(pcodes, tcodes)
-    order = np.argsort(-tlens, kind="stable")
-    inv = np.empty(n, dtype=np.intp)
-    inv[order] = np.arange(n, dtype=np.intp)
-    pm = _build_pm_block(pats, pcodes, plens, poffs, W, sigma)[order]
-    plens_s = plens[order]
-    tlens_s = tlens[order]
-    toffs_s = toffs[:-1][order]
-    last = np.uint64(1) << ((plens_s.astype(np.uint64) - np.uint64(1)) % np.uint64(64))
-    last_w = ((plens_s - 1) >> 6).astype(np.intp)  # per-pair last word index
-    # exact-W groups have every pattern ending in word W-1; the mixed-word
-    # where() path below is only needed for padded groups
-    uniform_last = bool((last_w == W - 1).all())
+    W = np.maximum(_block_bucket(plen), 1)  # an empty pattern still takes a lane
+    order = np.argsort(-(tlen + W), kind="stable")
+    plen, tlen, W = plen[order], tlen[order], W[order]
+    gap = int(W.max()) - 1 if n else 0
+    pcodes, pstart = _reorder(pcodes, poffs, order)
+    codes, tbase = _reorder(tcodes, toffs, order, gap)
+    off = np.zeros(n + 1, dtype=np.intp)
+    np.cumsum(W, out=off[1:])
+    nl = int(off[-1])
+    pair = np.repeat(np.arange(n, dtype=np.intp), W)
+    word = np.arange(nl, dtype=np.intp) - off[pair]
+    top = np.full(nl, np.uint64(1) << np.uint64(63), dtype=np.uint64)
+    top[off[1:] - 1] = np.uint64(1) << ((plen - 1) % 64).astype(np.uint64)
+    pm = _build_pm(pcodes, plen, pstart, off[:-1], nl, sigma)
+    return _Lanes(
+        order, plen, tlen, tlen + W - 1, off, word, pm.ravel(),
+        np.arange(nl, dtype=np.intp) * sigma, codes, tbase[pair] - word, top,
+        pcodes, pstart, tbase,
+    )
+
+
+def _active(end: np.ndarray, p: int, s: int) -> int:
+    """Pairs still active at step s, from the p active at step s - 1."""
+    while p and end[p - 1] <= s:
+        p -= 1
+    return p
+
+
+def _from_lanes(L: _Lanes, vals: np.ndarray) -> np.ndarray:
+    out = np.empty_like(vals)
+    out[L.order] = vals
+    return out
+
+
+def myers_batch_block(pats: list, texts: list) -> np.ndarray:
+    """Vectorized blockwise Myers/Hyyrö, scheduled along anti-diagonals
+    over (pair, word) lanes (``_Lanes``), for patterns of any mix of word
+    counts. Semantics follow the reference's hyrroe2003_block
+    (/root/reference/src/distance/levenshtein.rs:769-1019) minus the
+    Ukkonen band: the hp/hn horizontal carries chain low->high word; per
+    text char the distance moves by the carry out of the pattern's last
+    bit. Any Unicode codepoints."""
+    L = _lanes(pats, texts)
+    n, nl = len(L.plen), int(L.off[-1])
+    # one word per pair: the carry-in is the constant left boundary
+    wide = nl > n
     one = np.uint64(1)
-    vp = np.full((n, W), ~np.uint64(0), dtype=np.uint64)
-    vn = np.zeros((n, W), dtype=np.uint64)
-    dist = plens_s.astype(np.int64).copy()
-    max_t = int(tlens_s[0]) if n else 0
-    active = n
-    rows = np.arange(n, dtype=np.intp)
-    for j in range(max_t):
-        while active > 0 and tlens_s[active - 1] <= j:
-            active -= 1
-        a = slice(0, active)
-        cj = tcodes[toffs_s[a] + j]
-        hp_c = np.ones(active, dtype=np.uint64)  # left boundary +1 per row
-        hn_c = np.zeros(active, dtype=np.uint64)
-        for w in range(W):
-            vp_w = vp[a, w]
-            vn_w = vn[a, w]
-            pm_j = pm[rows[:active], w, cj]
+    vp = np.full(nl, ~np.uint64(0), dtype=np.uint64)
+    vn = np.zeros(nl, dtype=np.uint64)
+    hpb = np.zeros(nl + 1, dtype=bool)  # hpb[i + 1]: lane i's carry-out
+    hnb = np.zeros(nl + 1, dtype=bool)
+    # left DP boundary: hp carry-in 1, hn carry-in 0 (on bools, c > l0
+    # is c & ~l0)
+    l0 = L.word == 0
+    last = L.off[1:] - 1
+    dist = L.plen.copy()
+    p = n
+    for s in range(int(L.end[0]) if n else 0):
+        p = _active(L.end, p, s)
+        a = int(L.off[p])
+        vp_a, vn_a = vp[:a], vn[:a]
+        pm_j = L.pm[L.pmrow[:a] + L.codes[L.tpos[:a] + s]]
+        if wide:
+            hp_c = hpb[:a] | l0[:a]
+            hn_c = hnb[:a] > l0[:a]
             x = pm_j | hn_c
-            d0 = (((x & vp_w) + vp_w) ^ vp_w) | x | vn_w
-            hp = vn_w | ~(d0 | vp_w)
-            hn = d0 & vp_w
-            # score moves at each pair's own last word (masked top bit),
-            # plain bit-63 carry elsewhere; words past a pair's last are
-            # processed but never read back (upward-only propagation)
-            if uniform_last:
-                if w == W - 1:
-                    hp_c_new = ((hp & last[a]) != 0).astype(np.uint64)
-                    hn_c_new = ((hn & last[a]) != 0).astype(np.uint64)
-                    dist[a] += hp_c_new.astype(np.int64)
-                    dist[a] -= hn_c_new.astype(np.int64)
-                else:
-                    hp_c_new = hp >> np.uint64(63)
-                    hn_c_new = hn >> np.uint64(63)
-            else:
-                is_last = last_w[a] == w
-                if is_last.any():
-                    hp_c_new = np.where(
-                        is_last, (hp & last[a]) != 0, hp >> np.uint64(63)
-                    ).astype(np.uint64)
-                    hn_c_new = np.where(
-                        is_last, (hn & last[a]) != 0, hn >> np.uint64(63)
-                    ).astype(np.uint64)
-                    dist[a] += np.where(is_last, hp_c_new.astype(np.int64), 0)
-                    dist[a] -= np.where(is_last, hn_c_new.astype(np.int64), 0)
-                else:
-                    hp_c_new = hp >> np.uint64(63)
-                    hn_c_new = hn >> np.uint64(63)
-            hp = (hp << one) | hp_c
-            hn = (hn << one) | hn_c
-            vp[a, w] = hn | ~(d0 | hp)
-            vn[a, w] = hp & d0
-            hp_c, hn_c = hp_c_new, hn_c_new
-    return dist[inv]
+        else:
+            hp_c, x = one, pm_j
+        d0 = (((x & vp_a) + vp_a) ^ vp_a) | x | vn_a
+        hp = vn_a | ~(d0 | vp_a)
+        hn = d0 & vp_a
+        hp_o = (hp & L.top[:a]) != 0
+        hn_o = (hn & L.top[:a]) != 0
+        at = last[:p] if wide else slice(0, a)
+        dist[:p] += hp_o[at]
+        dist[:p] -= hn_o[at]
+        hp = (hp << one) | hp_c
+        hn <<= one
+        if wide:
+            hn |= hn_c
+            hpb[1 : a + 1] = hp_o
+            hnb[1 : a + 1] = hn_o
+        vp_a[:] = hn | ~(d0 | hp)
+        vn_a[:] = hp & d0
+    return _from_lanes(L, dist)
 
 
 _BAND_SENTINEL = np.int64(1) << 40  # "> any cutoff" result marker
 
 
-def myers_batch_block_banded(
-    pats: list, texts: list, W: int, ks: np.ndarray
-) -> np.ndarray:
+def myers_batch_block_banded(pats: list, texts: list, ks: np.ndarray) -> np.ndarray:
     """Blockwise Myers with the reference's Ukkonen band maintenance
     (/root/reference/src/distance/levenshtein.rs:769-1019): per pair only
     the words whose cells can still lie on a <= k path are advanced. The
@@ -203,7 +267,8 @@ def myers_batch_block_banded(
     bound (the reference's score-hint logic).
 
     Cross-pair vectorized: the word loop runs over the union band of the
-    chunk with per-pair membership masks. ``ks`` is the per-pair distance
+    chunk with per-pair membership masks, so a chunk may mix word counts:
+    each pair's band stops at its own last word. ``ks`` is the per-pair distance
     cutoff; pairs whose distance exceeds it return ``_BAND_SENTINEL``
     (callers only compare against the cutoff). Patterns must be <= texts
     in length (caller convention).
@@ -215,7 +280,10 @@ def myers_batch_block_banded(
     order = np.argsort(-tlens, kind="stable")
     inv = np.empty(n, dtype=np.intp)
     inv[order] = np.arange(n, dtype=np.intp)
-    pm = _build_pm_block(pats, pcodes, plens, poffs, W, sigma)[order]
+    W = int((plens.max() + 63) >> 6) if n else 1
+    rows = np.arange(n, dtype=np.intp)
+    pm = _build_pm(pcodes, plens, poffs[:-1], rows * W, n * W, sigma)
+    pm = pm.reshape(n, W, sigma)[order]
     pl = plens[order].astype(np.int64)
     tl = tlens[order].astype(np.int64)
     toffs_s = toffs[:-1][order]
@@ -239,7 +307,6 @@ def myers_batch_block_banded(
     )
     lb = np.maximum(lb, 0)
     alive &= lb >= fb
-    rows = np.arange(n, dtype=np.intp)
     max_t = int(tl[0]) if n else 0
     active = n
     for j in range(max_t):
@@ -380,258 +447,205 @@ def myers_batch_block_banded(
     return dist[inv]
 
 
-def lcs_batch_block(pats: list, texts: list, W: int) -> np.ndarray:
-    """Vectorized-across-pairs blockwise Hyyrö LCS for patterns of word
-    count W (reference lcs_blockwise semantics, lcs_seq.rs:267-341, no
-    band): S-vector per word with an emulated add-with-carry chain;
-    LCS = popcount of ~S."""
-    n = len(pats)
-    pcodes, plens, poffs = _encode_codes(pats)
-    tcodes, tlens, toffs = _encode_codes(texts)
-    pcodes, tcodes, sigma = _compact_alphabet(pcodes, tcodes)
-    order = np.argsort(-tlens, kind="stable")
-    inv = np.empty(n, dtype=np.intp)
-    inv[order] = np.arange(n, dtype=np.intp)
-    pm = _build_pm_block(pats, pcodes, plens, poffs, W, sigma)[order]
-    plens_s = plens[order]
-    tlens_s = tlens[order]
-    toffs_s = toffs[:-1][order]
-    s = np.full((n, W), ~np.uint64(0), dtype=np.uint64)
-    max_t = int(tlens_s[0]) if n else 0
-    active = n
-    rows = np.arange(n, dtype=np.intp)
-    for j in range(max_t):
-        while active > 0 and tlens_s[active - 1] <= j:
-            active -= 1
-        a = slice(0, active)
-        cj = tcodes[toffs_s[a] + j]
-        carry = np.zeros(active, dtype=np.uint64)
-        for w in range(W):
-            s_w = s[a, w]
-            u = s_w & pm[rows[:active], w, cj]
-            t1 = s_w + u
-            c1 = t1 < s_w
-            x = t1 + carry
-            c2 = x < t1
-            carry = (c1 | c2).astype(np.uint64)
-            s[a, w] = x | (s_w - u)
-    nots = ~s
+def lcs_batch_block(pats: list, texts: list) -> np.ndarray:
+    """Vectorized blockwise Hyyrö LCS over wavefront lanes (``_Lanes``;
+    reference lcs_blockwise semantics, lcs_seq.rs:267-341, no band): an
+    S-vector per word with the add-with-carry chained low->high word.
+    Bits above the pattern stay set, so the LCS grows by exactly the
+    carry out of each pair's last word."""
+    L = _lanes(pats, texts)
+    n, nl = len(L.plen), int(L.off[-1])
+    wide = nl > n
+    S = np.full(nl, ~np.uint64(0), dtype=np.uint64)
+    cb = np.zeros(nl + 1, dtype=bool)  # cb[i + 1]: lane i's carry-out
+    l0 = L.word == 0  # carry-in 0 at each pair's first word
+    last = L.off[1:] - 1
     sim = np.zeros(n, dtype=np.int64)
-    for w in range(W):
-        sim += _popcount_u64(nots[:, w]).astype(np.int64)
-    return sim[inv]
+    p = n
+    for s in range(int(L.end[0]) if n else 0):
+        p = _active(L.end, p, s)
+        a = int(L.off[p])
+        S_a = S[:a]
+        u = S_a & L.pm[L.pmrow[:a] + L.codes[L.tpos[:a] + s]]
+        x = S_a + u
+        c = x < S_a
+        if wide:
+            c_in = cb[:a] > l0[:a]
+            x += c_in
+            c |= (x == 0) & c_in
+            cb[1 : a + 1] = c
+        S_a[:] = x | (S_a - u)
+        sim[:p] += c[last[:p] if wide else slice(0, a)]
+    return _from_lanes(L, sim)
 
 
-def osa_batch_block(pats: list, texts: list, W: int) -> np.ndarray:
-    """Vectorized-across-pairs blockwise OSA (Hyyrö bit-parallel with
-    transposition carry; semantics per /root/reference/src/distance/
-    osa.rs:156-227). Per-word state adds the previous char's d0 and pm;
-    the transposition mask pulls bit 63 of the word below for both."""
-    n = len(pats)
-    pcodes, plens, poffs = _encode_codes(pats)
-    tcodes, tlens, toffs = _encode_codes(texts)
-    pcodes, tcodes, sigma = _compact_alphabet(pcodes, tcodes)
-    order = np.argsort(-tlens, kind="stable")
-    inv = np.empty(n, dtype=np.intp)
-    inv[order] = np.arange(n, dtype=np.intp)
-    pm = _build_pm_block(pats, pcodes, plens, poffs, W, sigma)[order]
-    plens_s = plens[order]
-    tlens_s = tlens[order]
-    toffs_s = toffs[:-1][order]
-    last = np.uint64(1) << ((plens_s.astype(np.uint64) - np.uint64(1)) % np.uint64(64))
+def osa_batch_block(pats: list, texts: list) -> np.ndarray:
+    """Vectorized blockwise OSA over wavefront lanes (``_Lanes``; Hyyrö
+    bit-parallel with transposition carry, semantics per /root/reference/
+    src/distance/osa.rs:156-227). Per-lane state adds the previous char's
+    d0 and pm; the transposition term pulls bit 63 of the word below's
+    (~d0 at j-1) & (pm at j), which that lane computed one step back, as
+    a third carry beside hp and hn."""
+    L = _lanes(pats, texts)
+    n, nl = len(L.plen), int(L.off[-1])
+    wide = nl > n
     one = np.uint64(1)
     s63 = np.uint64(63)
-    vp = np.full((n, W), ~np.uint64(0), dtype=np.uint64)
-    vn = np.zeros((n, W), dtype=np.uint64)
-    d0s = np.zeros((n, W), dtype=np.uint64)  # previous char's d0 per word
-    pms = np.zeros((n, W), dtype=np.uint64)  # previous char's pm per word
-    dist = plens_s.astype(np.int64).copy()
-    max_t = int(tlens_s[0]) if n else 0
-    active = n
-    rows = np.arange(n, dtype=np.intp)
-    for j in range(max_t):
-        while active > 0 and tlens_s[active - 1] <= j:
-            active -= 1
-        a = slice(0, active)
-        cj = tcodes[toffs_s[a] + j]
-        hp_c = np.ones(active, dtype=np.uint64)
-        hn_c = np.zeros(active, dtype=np.uint64)
-        d0_old_below = np.zeros(active, dtype=np.uint64)
-        pm_cur_below = np.zeros(active, dtype=np.uint64)
-        for w in range(W):
-            vp_w = vp[a, w]
-            vn_w = vn[a, w]
-            # .copy(): d0s[a, w] is a view — d0_old survives as this
-            # word's previous-char d0 for the word above's tr term even
-            # after d0s[a, w] is overwritten below
-            d0_old = d0s[a, w].copy()
-            pm_old = pms[a, w]
-            pm_j = pm[rows[:active], w, cj]
-            tr = (
-                (((~d0_old) & pm_j) << one)
-                | (((~d0_old_below) & pm_cur_below) >> s63)
-            ) & pm_old
+    vp = np.full(nl, ~np.uint64(0), dtype=np.uint64)
+    vn = np.zeros(nl, dtype=np.uint64)
+    d0s = np.zeros(nl, dtype=np.uint64)  # previous char's d0 per lane
+    pms = np.zeros(nl, dtype=np.uint64)  # previous char's pm per lane
+    hpb = np.zeros(nl + 1, dtype=bool)  # hpb[i + 1]: lane i's carry-out
+    hnb = np.zeros(nl + 1, dtype=bool)
+    trb = np.zeros(nl + 1, dtype=bool)
+    l0 = L.word == 0
+    last = L.off[1:] - 1
+    dist = L.plen.copy()
+    p = n
+    for s in range(int(L.end[0]) if n else 0):
+        p = _active(L.end, p, s)
+        a = int(L.off[p])
+        vp_a, vn_a = vp[:a], vn[:a]
+        pm_j = L.pm[L.pmrow[:a] + L.codes[L.tpos[:a] + s]]
+        t = ~d0s[:a] & pm_j
+        tr = t << one
+        if wide:
+            hp_c = hpb[:a] | l0[:a]
+            hn_c = hnb[:a] > l0[:a]
+            # unmasked at lane 0: a carry there meets pms bit 0, which
+            # means vn bit 0 is already set, so d0 is unchanged
+            tr |= trb[:a]
             x = pm_j | hn_c
-            d0 = (((x & vp_w) + vp_w) ^ vp_w) | x | vn_w | tr
-            hp = vn_w | ~(d0 | vp_w)
-            hn = d0 & vp_w
-            if w == W - 1:
-                dist[a] += ((hp & last[a]) != 0).astype(np.int64)
-                dist[a] -= ((hn & last[a]) != 0).astype(np.int64)
-            hp_c_new = hp >> s63
-            hn_c_new = hn >> s63
-            hp = (hp << one) | hp_c
-            hn = (hn << one) | hn_c
-            vp[a, w] = hn | ~(d0 | hp)
-            vn[a, w] = hp & d0
-            d0_old_below = d0_old
-            pm_cur_below = pm_j
-            d0s[a, w] = d0
-            pms[a, w] = pm_j
-            hp_c, hn_c = hp_c_new, hn_c_new
-    return dist[inv]
+        else:
+            hp_c, x = one, pm_j
+        tr &= pms[:a]
+        d0 = (((x & vp_a) + vp_a) ^ vp_a) | x | vn_a | tr
+        hp = vn_a | ~(d0 | vp_a)
+        hn = d0 & vp_a
+        hp_o = (hp & L.top[:a]) != 0
+        hn_o = (hn & L.top[:a]) != 0
+        at = last[:p] if wide else slice(0, a)
+        dist[:p] += hp_o[at]
+        dist[:p] -= hn_o[at]
+        hp = (hp << one) | hp_c
+        hn <<= one
+        if wide:
+            hn |= hn_c
+            hpb[1 : a + 1] = hp_o
+            hnb[1 : a + 1] = hn_o
+            trb[1 : a + 1] = t >> s63
+        vp_a[:] = hn | ~(d0 | hp)
+        vn_a[:] = hp & d0
+        d0s[:a] = d0
+        pms[:a] = pm_j
+    return _from_lanes(L, dist)
 
 
-def jaro_batch_block(pats: list, texts: list, W: int, k=None) -> np.ndarray:
-    """Vectorized-across-pairs Jaro similarity (pattern <= 64*W chars,
-    any codepoints). Two phases mirroring the reference's bit-parallel flagging
+# _LOW[i]: the low i bits set, i = 0..64
+_LOW = np.array([(1 << i) - 1 for i in range(65)], dtype=np.uint64)
+
+
+def jaro_batch_block(pats: list, texts: list, k=None) -> np.ndarray:
+    """Vectorized Jaro similarity over wavefront lanes (``_Lanes``), any
+    codepoints. Two phases mirroring the reference's bit-parallel flagging
     (/root/reference/src/distance/jaro.rs:147-190,286-420):
 
-    1. per text char, build the per-pair match window [j-bound, j+bound]
-       over the pattern's words, flag the lowest unflagged PM bit, and
-       append the text char to the pair's match sequence;
+    1. per step, each lane masks its word of the match window
+       [j-bound, j+bound] and flags its lowest unflagged PM bit unless a
+       lower word already took text char j (the carry); the text char is
+       marked matched;
     2. walk flagged pattern bits in order against the matched text chars
        to count transpositions.
 
     ``k``: optional similarity cutoff (scalar float, shared across the
     chunk) — the reference's in-kernel phase-2 early exit
-    (jaro.rs:300-320 common-character bound): every 32 text chars, pairs
+    (jaro.rs:300-320 common-character bound): every 32 steps, pairs
     whose best still-achievable similarity (m_max = matches so far + the
-    smaller of remaining text chars / unmatched pattern chars; third
-    Jaro term bounded by 1) falls below ``k`` are dropped from the scan
-    and return the -1.0 sentinel (callers only compare against the
-    cutoff). The batch compacts when enough pairs die, so survivors
-    keep full vector width.
+    smaller of text chars not yet seen by every lane / unmatched pattern
+    chars; third Jaro term bounded by 1) falls below ``k`` are dropped
+    from the scan and return the -1.0 sentinel (callers only compare
+    against the cutoff). Their lanes are compacted away when enough pairs
+    die, so survivors keep full vector width.
     """
-    n = len(pats)
-    pcodes, plens, poffs = _encode_codes(pats)
-    tcodes, tlens, toffs = _encode_codes(texts)
-    pcodes, tcodes, sigma = _compact_alphabet(pcodes, tcodes)
-    order = np.argsort(-tlens, kind="stable")
-    pm = _build_pm_block(pats, pcodes, plens, poffs, W, sigma)[order]
-    plens_s = plens[order].astype(np.int64)
-    tlens_s = tlens[order].astype(np.int64)
-    toffs_s = toffs[:-1][order]
-    poffs_s = poffs[:-1][order]
-    orig = order.copy()  # current row -> original batch row
-    bound = np.maximum(np.maximum(plens_s, tlens_s) // 2 - 1, 0)
+    L = _lanes(pats, texts)
+    n, nl = len(L.plen), int(L.off[-1])
+    wide = nl > n
     one = np.uint64(1)
-    flagged = np.zeros((n, W), dtype=np.uint64)
-    max_m = int(plens_s.max()) if n else 0
-    matched2 = np.zeros((n, max(max_m, 1)), dtype=np.intp)
-    cnt = np.zeros(n, dtype=np.int64)
-    max_t = int(tlens_s[0]) if n else 0
-    active = n
-    rows = np.arange(n, dtype=np.intp)
-    # sliding window maintained incrementally: at char j the window is
-    # pattern bits [j-bound, j+bound] — each step sets one new high-edge
-    # bit and clears one low-edge bit (two scatters instead of a full
-    # per-word mask rebuild)
-    window = np.zeros((n, W), dtype=np.uint64)
-    hi_ptr = np.zeros(n, dtype=np.int64)  # next bit to set (exclusive hi)
-    for j in range(max_t):
-        while active > 0 and tlens_s[active - 1] <= j:
-            active -= 1
-        if active == 0 and k is not None:
-            break
-        a = slice(0, active)
-        r = rows[:active]
-        cj = tcodes[toffs_s[a] + j]
-        hi_target = np.minimum(j + bound[a] + 1, plens_s[a])
-        while True:
-            grow = np.nonzero(hi_ptr[:active] < hi_target)[0]
-            if len(grow) == 0:
-                break
-            p = hi_ptr[grow]
-            window[grow, (p >> 6)] |= one << (p & 63).astype(np.uint64)
-            hi_ptr[grow] += 1
-        lo_clear = j - bound[a] - 1
-        shrink = np.nonzero((lo_clear >= 0) & (lo_clear < plens_s[a]))[0]
-        if len(shrink):
-            p = lo_clear[shrink]
-            window[shrink, (p >> 6)] &= ~(one << (p & 63).astype(np.uint64))
-        taken = np.zeros(active, dtype=bool)
-        for w in range(W):
-            cand = pm[r, w, cj] & window[a, w] & ~flagged[a, w]
-            take = (cand != 0) & ~taken
-            if take.any():
-                low = cand & (~cand + one)
-                tr = r[take]
-                flagged[tr, w] |= low[take]
-                taken |= take
-        hit = np.nonzero(taken)[0]
-        if len(hit):
-            matched2[hit, cnt[hit]] = cj[hit]
-            cnt[hit] += 1
-        if k is not None and active > 0 and (j & 31) == 31:
-            # best-achievable bound: each remaining text char adds at most
-            # one match, total matches <= pattern length, third term <= 1
-            rem = tlens_s[a] - (j + 1)
-            m_max = cnt[a] + np.minimum(plens_s[a] - cnt[a], rem)
-            ub = (
-                m_max / plens_s[a] + m_max / tlens_s[a] + 1.0
-            ) / 3.0
+    pl, tl, end, off = L.plen, L.tlen, L.end, L.off
+    W = np.diff(off)
+    pair = np.repeat(np.arange(n, dtype=np.intp), W)
+    # window [j-bound, j+bound] in lane-local bits: [s - lo_c, s + hi_c)
+    bound = np.maximum(np.maximum(pl, tl) // 2 - 1, 0)[pair]
+    lo_c = bound + 65 * L.word
+    hi_c = bound + 1 - 65 * L.word
+    pbase = L.pstart[pair] + 64 * L.word  # pattern index of each lane's bit 0
+    l0 = L.word == 0
+    pmrow, tpos = L.pmrow, L.tpos
+    orig = np.arange(n, dtype=np.intp)  # current pair -> lane-layout pair
+    flagged = np.zeros(nl, dtype=np.uint64)
+    tb = np.zeros(nl + 1, dtype=bool)  # tb[i + 1]: char taken at lane <= i
+    matched = np.zeros(len(L.codes), dtype=bool)
+    p = n
+    for s in range(int(end[0]) if n else 0):
+        p = _active(end, p, s)
+        a = int(off[p])
+        idx = tpos[:a] + s
+        win = _LOW[np.clip(s + hi_c[:a], 0, 64)] ^ _LOW[np.clip(s - lo_c[:a], 0, 64)]
+        cand = L.pm[pmrow[:a] + L.codes[idx]] & win & ~flagged[:a]
+        take = cand != 0
+        if wide:
+            t_in = tb[:a] > l0[:a]
+            tb[1 : a + 1] = take | t_in
+            take &= ~t_in
+        flagged[:a] |= (cand & (~cand + one)) * take
+        matched[idx[take]] = True
+        if k is not None and p and (s & 31) == 31:
+            cnt = np.add.reduceat(_popcount_u64(flagged[:a]), off[:p]).astype(np.int64)
+            rem = tl[:p] - np.maximum(s + 2 - W[:p], 0)
+            m_max = cnt + np.minimum(pl[:p] - cnt, rem)
+            ub = (m_max / pl[:p] + m_max / tl[:p] + 1.0) / 3.0
             dead = ub < k - 1e-9
             ndead = int(dead.sum())
             # compact only when enough died to repay the gather cost
-            if ndead and (ndead >= 64 or ndead * 4 >= active):
+            if ndead and (ndead >= 64 or ndead * 4 >= p):
                 keep = np.ones(len(orig), dtype=bool)
-                keep[:active][dead] = False
-                orig = orig[keep]
-                pm = pm[keep]
-                flagged = flagged[keep]
-                window = window[keep]
-                hi_ptr = hi_ptr[keep]
-                cnt = cnt[keep]
-                bound = bound[keep]
-                plens_s = plens_s[keep]
-                tlens_s = tlens_s[keep]
-                toffs_s = toffs_s[keep]
-                poffs_s = poffs_s[keep]
-                matched2 = matched2[keep]
-                rows = np.arange(len(orig), dtype=np.intp)
-                active -= ndead
-    # phase 2: transpositions, fully vectorized — unpack flagged bits to a
-    # boolean matrix; np.nonzero yields (pair, pos) in row-major order =
-    # flag order per pair; compare against the matched text chars in order
-    cur_n = len(orig)
-    t_cnt = np.zeros(cur_n, dtype=np.int64)
-    if max_m and cur_n:
-        bits = np.unpackbits(
-            flagged.view(np.uint8), axis=1, bitorder="little"
-        )[:, : max(max_m, 1)]
-        ri, ci = np.nonzero(bits)
-        if len(ri):
-            starts = np.zeros(cur_n + 1, dtype=np.int64)
-            np.cumsum(np.bincount(ri, minlength=cur_n), out=starts[1:])
-            seq = np.arange(len(ri)) - starts[ri]
-            ch1 = pcodes[poffs_s[ri] + ci]
-            ch2 = matched2[ri, seq]
-            np.add.at(t_cnt, ri, (ch1 != ch2).astype(np.int64))
+                keep[:p][dead] = False
+                kl = np.repeat(keep, W)
+                orig, pl, tl, end, W = orig[keep], pl[keep], tl[keep], end[keep], W[keep]
+                off = np.zeros(len(orig) + 1, dtype=np.intp)
+                np.cumsum(W, out=off[1:])
+                lo_c, hi_c, pbase, l0 = lo_c[kl], hi_c[kl], pbase[kl], l0[kl]
+                pmrow, tpos, flagged = pmrow[kl], tpos[kl], flagged[kl]
+                tb = np.concatenate((tb[:1], tb[1:][kl]))
+                p -= ndead
+    # phase 2: transpositions, fully vectorized — flagged bits in lane
+    # order are each pair's pattern positions in order, matched text
+    # positions in codes order its text positions in order
+    cur = len(orig)
+    cnt = np.zeros(cur, dtype=np.int64)
+    t_cnt = np.zeros(cur, dtype=np.int64)
+    if cur:
+        cnt = np.add.reduceat(_popcount_u64(flagged), off[:-1]).astype(np.int64)
+        fb = np.nonzero(np.unpackbits(flagged.view(np.uint8), bitorder="little"))[0]
+        ti = np.nonzero(matched)[0]
+        if cur < n:  # drop the matches of dropped pairs
+            live = np.zeros(n, dtype=bool)
+            live[orig] = True
+            ti = ti[live[np.searchsorted(L.tbase, ti, side="right") - 1]]
+        lane = fb >> 6
+        neq = L.pcodes[pbase[lane] + (fb & 63)] != L.codes[ti]
+        t_cnt = np.bincount(
+            np.repeat(np.arange(cur), W)[lane], weights=neq, minlength=cur
+        ).astype(np.int64)
     m = cnt.astype(np.float64)
     with np.errstate(divide="ignore", invalid="ignore"):
         sim = np.where(
             cnt > 0,
-            (
-                m / plens_s
-                + m / tlens_s
-                + (m - (t_cnt // 2)) / np.where(cnt > 0, m, 1.0)
-            )
-            / 3.0,
+            (m / pl + m / tl + (m - (t_cnt // 2)) / np.where(cnt > 0, m, 1.0)) / 3.0,
             0.0,
         )
     result = np.full(n, -1.0, dtype=np.float64)
-    result[orig] = sim
+    result[L.order[orig]] = sim
     return result
 
 
@@ -728,35 +742,29 @@ def damerau_batch_np(pats: list, texts: list, k=None) -> np.ndarray:
 
 _DL_CUBE_BUDGET = 24 * 1024 * 1024  # bytes; int16 cube sized to stay near L3
 
-# Vectorized blockwise path up to 64*_BLOCK_MAX_WORDS-char patterns;
-# ABOVE the cap, pairs route to the per-pair CPython big-int Myers
-# kernel BY MEASUREMENT, not as a concession: a W-word big-int op is one
-# interpreter op dispatching an O(W) C limb loop, so the big-int kernel
-# spends O(1) interpreter ops per text char while the cross-pair numpy
-# kernel spends O(W) array ops per char. Measured crossover (BENCH.md
-# §12, 5%-mutated random text, best-of-2/3): block/big-int wall ratio
-# 0.44x at W=8, ~parity W=16-24 (0.92-1.06), then the numpy path LOSES
-# quadratically — 1.23x at W=32, 2.8x at W=63, 4.7x at W=125, 10.9x at
-# W=250. Cap sits at the top of the measured parity zone.
-_BLOCK_MAX_WORDS = 24
-# Chunk width of the blockwise kernels: bounds the (chunk, W, sigma) u64 PM
-# gather table AND sets the numpy vector width of every per-char step.
-# Swept on ~300-char doc pairs: 512 -> 2048 is +32% under 32 concurrent
-# worker processes (111.7k vs 84.6k pairs/s machine-wide jaro-winkler);
-# 8192 wins single-thread but loses under contention (cache working set).
-_BLOCK_CHUNK = 2048
-# Above W=16 the PM gather table + per-char working set outgrow the
-# cache at full chunk width: 1024 measured >= 2048 at W=20 (1.01 vs
-# 1.00 s) and better at W=24 (1.44 vs 1.56 s), and halves the transient
-# PM footprint under 32 concurrent workers.
-_BLOCK_CHUNK_WIDE = 1024
+# Wavefront blockwise path up to 64*_BLOCK_MAX_WORDS-char patterns; above
+# the cap, pairs route to the per-pair CPython big-int kernels. A W-word
+# big-int op is one interpreter op running an O(W) C limb loop; the
+# wavefront kernel spends a fixed number of array ops per step on all
+# lanes, so both cost O(W) per text char and neither overtakes the other
+# at large W. Measured (BENCH.md §12, Myers, 5%-substituted random text,
+# one lane budget of pairs per W, best-of-2), block/big-int wall: 0.20 at
+# W=8, 0.44 at W=24, 0.66 at W=63, 0.72 at W=125, 0.74 at W=250 (0.44,
+# 0.71-0.85, 0.64-0.72, 0.77-0.81 under 4 concurrent processes). The cap
+# sits at the top of the sweep, where the block path still wins.
+_BLOCK_MAX_WORDS = 250
+# Lane budget of one blockwise chunk (one lane per pattern word): sets
+# the NumPy vector width of every step and bounds the (lanes, sigma) u64
+# PM gather table. Swept on one score_long Arrow batch (4,857 ~300-char
+# pairs, ~24k lanes) under 4 concurrent processes: 2048 lanes is 10-40%
+# slower than 4096-16384, which are within noise of each other on the
+# wavefront kernels; the banded kernel gains from wider chunks.
+_BLOCK_CHUNK = 8192
 
 
 def _block_bucket(plen):
-    """Exact word count — measured better than power-of-two padding:
-    padded groups pay extra word-steps on every char, which outweighs the
-    per-group numpy overhead they save (kernel is compute-bound, not
-    group-bound, at Arrow-batch sizes)."""
+    """Pattern word count W = ceil(len / 64): the lanes a pattern takes in
+    the wavefront kernels, and the length class of the routing gates."""
     return (plen + 63) >> 6
 
 
@@ -843,69 +851,68 @@ def _route(a_arr, b_arr, strip: bool = True) -> _Cores:
 
 def _score(c: _Cores, out, kernel, scalar=None, sel=None, extra=(), **kw) -> None:
     """Score the cores ``sel`` (default: all) into ``out`` at their batch
-    rows. Patterns of up to _BLOCK_MAX_WORDS words run the blockwise
-    ``kernel`` once per word count W, in chunks of _BLOCK_CHUNK pairs
-    (_BLOCK_CHUNK_WIDE above W=16), each chunk getting its slice of the
-    ``extra`` per-core arrays (aligned with ``sel``) and ``kw``. Longer
-    patterns run the big-int ``scalar`` kernel with a per-batch pattern
-    cache. The chunk width keeps the per-char working set cache-resident:
-    on ~20-char name pairs 2048-pair chunks measured +53% single-thread
-    and +35% machine-wide under 16 worker processes against whole Arrow
-    batches (BENCH.md §2)."""
+    rows. Patterns of more than _BLOCK_MAX_WORDS words run the big-int
+    ``scalar`` kernel with a per-batch pattern cache. The rest, every
+    word count together, are sorted by the step their wavefront ends
+    (text length + words, descending: the kernels' own order, so a
+    chunk's active lanes stay a prefix) and run the blockwise ``kernel``
+    in chunks of at most _BLOCK_CHUNK lanes (one lane per pattern word),
+    each chunk getting its slice of the ``extra`` per-core arrays
+    (aligned with ``sel``) and ``kw``."""
     if sel is None:
         sel = np.arange(len(c.rows), dtype=np.intp)
-    words = c.words[sel]
+    big = c.words[sel] > _BLOCK_MAX_WORDS
     pm_cache: dict = {}
-    for W in np.unique(words).tolist():
-        m = words == W
-        s = sel[m]
-        if W > _BLOCK_MAX_WORDS:
-            for r, p, t in zip(c.rows[s], c.pats[s], c.texts[s]):
-                pm = pm_cache.get(p)
-                if pm is None:
-                    pm = pm_cache[p] = pm_vector(p)
-                out[r] = scalar(p, t, pm)
-            continue
-        ex = [x[m] for x in extra]
-        step = _BLOCK_CHUNK if W <= 16 else _BLOCK_CHUNK_WIDE
-        for lo in range(0, len(s), step):
-            q = s[lo : lo + step]
-            out[c.rows[q]] = kernel(
-                c.pats[q].tolist(),
-                c.texts[q].tolist(),
-                W,
-                *(x[lo : lo + step] for x in ex),
-                **kw,
-            )
+    for r, p, t in zip(c.rows[sel[big]], c.pats[sel[big]], c.texts[sel[big]]):
+        pm = pm_cache.get(p)
+        if pm is None:
+            pm = pm_cache[p] = pm_vector(p)
+        out[r] = scalar(p, t, pm)
+    sel, extra = sel[~big], [x[~big] for x in extra]
+    words = c.words[sel]
+    order = np.argsort(-(c.tlen[c.rows[sel]] + words), kind="stable")
+    sel, extra = sel[order], [x[order] for x in extra]
+    lanes = np.cumsum(words[order])
+    lo = 0
+    while lo < len(sel):
+        used = lanes[lo - 1] if lo else 0
+        hi = max(int(np.searchsorted(lanes, used + _BLOCK_CHUNK, "right")), lo + 1)
+        q = sel[lo:hi]
+        out[c.rows[q]] = kernel(
+            c.pats[q].tolist(),
+            c.texts[q].tolist(),
+            *(x[lo:hi] for x in extra),
+            **kw,
+        )
+        lo = hi
 
 
 def _banded_lev_pays(pat_len, W, k, scale: float = 1.0):
     """Per-pair mask: route to myers_batch_block_banded only where the
-    band is narrow enough to beat the full blockwise kernel. The banded
-    kernel carries per-row band bookkeeping, so its breakeven band
-    fraction grows with word count (measured, best-of-3, same-length
-    random pairs): W=3 never wins (0.93x at frac 0.1), W=5 wins below
-    ~0.5, W=10 below ~0.45, W=16 below ~0.8. Thresholds below sit safely
-    under those breakevens; between the measured W=10 and W=16 endpoints
-    they stay at the W=10 figure rather than assuming the W=16 one
-    applies. ``scale`` < 1 tightens them for callers that additionally
-    bet on pruning (the indel prefilter must beat prune_frac * LCS cost,
-    not just the full kernel)."""
-    t = np.select([W <= 5, W <= 10, W <= 15], [0.25, 0.35, 0.45], 0.6)
-    return (W >= 4) & (k < 64 * (W - 1)) & (k <= t * scale * pat_len)
+    band is narrow enough to beat the full wavefront kernel. The banded
+    kernel still loops over the band's words per text char with per-row
+    bookkeeping, so it wins only when most pairs leave the band early.
+    Measured against the wavefront kernel (BENCH.md §7, one lane budget
+    of unrelated same-length pairs, best-of-2): banded wins below a band
+    fraction k/len of ~0.2-0.35 at every W from 3 to 24 (0.19-0.59x at
+    0.1); on near-duplicates that stay inside the band it loses at every
+    fraction (1.9-5.6x). The 0.15 threshold sits under every measured
+    breakeven. Above 24 words near-duplicates lose 1.5-9x (W=32-128)
+    while unrelated pairs win less as W grows (parity at W=128, band
+    fraction 0.15), so the band stays off there. ``scale`` < 1 tightens the threshold for callers that
+    additionally bet on pruning (the indel prefilter must beat
+    prune_frac * LCS cost, not just the full kernel)."""
+    return (W >= 4) & (W <= 24) & (k < 64 * (W - 1)) & (k <= 0.15 * scale * pat_len)
 
 
 def levenshtein_batch(a_arr, b_arr, k=None, hint=None) -> np.ndarray:
     """Uniform Levenshtein distances for paired object arrays of str.
     Routing: the shared pass (``_route``: equal pairs, affix strip,
-    shorter side as pattern) and runner (``_score``: blockwise vectorized
-    Myers grouped by word count up to _BLOCK_MAX_WORDS, <=64-char
-    patterns being the W=1 group; the CPython big-int Myers kernel with a
-    per-batch pattern cache above). The big-int kernel is the
-    MEASURED-fastest kernel above the cap, not a concession: big-int ops
-    run C limb loops with O(1) interpreter dispatch per char vs the numpy
-    path's O(W) array ops per char (crossover sweep at _BLOCK_MAX_WORDS /
-    BENCH.md §12). On top of the shared pass, three selectors take pairs
+    shorter side as pattern) and runner (``_score``: the wavefront
+    blockwise Myers kernel up to _BLOCK_MAX_WORDS words, every word count
+    in one chunk; the CPython big-int Myers kernel with a per-batch
+    pattern cache above, past the measured sweep, BENCH.md §12). On top
+    of the shared pass, three selectors take pairs
     out first: mbleven for cutoffs <= 3 on pairs longer than one word,
     the ``hint`` band schedule, and the Ukkonen-banded kernel when a
     cutoff ``k`` is supplied and the band is narrow enough to pay.
@@ -928,7 +935,6 @@ def levenshtein_batch(a_arr, b_arr, k=None, hint=None) -> np.ndarray:
     out = c.tlen.copy()  # an empty core is all insertions of the other
     pl, tl, W = c.plen[c.rows], c.tlen[c.rows], c.words
     rest = np.ones(len(c.rows), dtype=bool)  # cores no selector took
-    block = W <= _BLOCK_MAX_WORDS
     if k is not None:
         kk = np.asarray(k, dtype=np.int64)[c.rows]
         # tiny bound on a long pair: mbleven enumeration is O(models*len)
@@ -944,15 +950,13 @@ def levenshtein_batch(a_arr, b_arr, k=None, hint=None) -> np.ndarray:
         rest &= ~mb
     if hint is not None:
         # hint-first banding: start at the (narrower) expected band,
-        # verify, double on failure — wins when the hint is accurate and
-        # the cutoff band is too wide (or absent) to pay. Gated at
-        # W >= 14: re-measured on 45-symbol text, banded beats full
-        # blockwise consistently only from ~900 chars up (1.3-1.45x at
-        # W=16, parity-to-0.87x in the W=10-13 zone), and a verify+retry
-        # loop must enter only on a clear win
+        # verify, double on failure. Gated at W >= 14, where it beat the
+        # per-word-count kernels 1.3-1.45x; against the wavefront kernel
+        # it measured 1.8-2.5x slower with accurate hints at every W from
+        # 4 to 24 (BENCH.md §7)
         h = np.asarray(hint, dtype=np.int64)[c.rows]
         cap = kk if k is not None else tl
-        hs = rest & block & (W >= 14) & (h >= 4) & (h < cap)
+        hs = rest & (W >= 14) & (h >= 4) & (h < cap)
         hs &= _banded_lev_pays(pl, W, h)
         rest &= ~hs
         live = np.nonzero(hs)[0]
@@ -970,7 +974,7 @@ def levenshtein_batch(a_arr, b_arr, k=None, hint=None) -> np.ndarray:
         # diagonal band AND the band is narrow enough to amortize the
         # per-row band bookkeeping (affix stripping already happened, so
         # k is usually small relative to the remaining core)
-        bs = rest & block & _banded_lev_pays(pl, W, kk)
+        bs = rest & _banded_lev_pays(pl, W, kk)
         sel = np.nonzero(bs)[0]
         _score(c, out, myers_batch_block_banded, sel=sel, extra=(kk[sel],))
         rest &= ~bs

@@ -435,6 +435,39 @@ class TestDuality:
 # ---------------------------------------------------------------------------
 
 
+def _mixed_word_chunk(seed=31):
+    """Pairs that share one blockwise chunk while their patterns span
+    W = 1..9 words (the wavefront kernels give every pattern word its own
+    lane). Distinct first and last characters keep the affix strip off, so
+    these are the core lengths:
+
+    - per W, a pair whose pattern fills its last word, so every carry out
+      of its last lane is live, followed by a one-word pair with the same
+      end step (text length + words - 1), which the stable sort keeps
+      adjacent: the first pair's last lane sits right before the second's
+      lane 0;
+    - a 5-char text that ends while the longer ones run on;
+    - Cyrillic/CJK pairs."""
+    import random
+
+    rng = random.Random(seed)
+
+    def s(al, n, ends="<>"):
+        return ends[0] + "".join(rng.choice(al) for _ in range(n - 2)) + ends[1]
+
+    out = []
+    for w in range(1, 10):
+        lt = 64 * w + rng.randrange(0, 90)
+        out.append((s("ab", 64 * w, "<b"), s("ab", lt, "[a")))
+        out.append((s("ab", rng.randint(20, 64), "(b"), s("ab", lt + w - 1, "{a")))
+    out.append((s("ab", 4), s("ab", 5, "[]")))
+    for w in (2, 3, 4):
+        lp = 64 * w - rng.randrange(0, 20)
+        lt = lp + rng.randrange(0, 40)
+        out.append((s("абвгд日本語", lp), s("абвгд日本語 ", lt, "[]")))
+    return out
+
+
 class TestBlockwiseBatchKernels:
     """The >64-char vectorized paths must agree with the arbitrary-
     precision Python-int kernels (which are locked to the reference's
@@ -454,7 +487,7 @@ class TestBlockwiseBatchKernels:
             out.append((a, b))
         # word-boundary transpositions and equal strings
         out += [("a" * 63 + "xy", "a" * 63 + "yx"), ("b" * 200, "b" * 200)]
-        return out
+        return out + _mixed_word_chunk()
 
     def test_levenshtein_block_matches_python(self):
         import numpy as np
@@ -492,7 +525,7 @@ class TestBlockwiseBatchKernels:
     def test_osa_block_boundary_transposition(self):
         from rapidfuzz_spark.kernels import batch as B
 
-        assert B.osa_batch_block(["a" * 63 + "xy"], ["a" * 63 + "yx"], 2)[0] == 1
+        assert B.osa_batch_block(["a" * 63 + "xy"], ["a" * 63 + "yx"])[0] == 1
 
     def test_osa_block_matches_python(self):
         import numpy as np
@@ -545,6 +578,7 @@ class TestBlockwiseBatchKernels:
                 a = "<" + "".join(random.choice("ab") for _ in range(lp - 2)) + ">"
                 b = "[" + "".join(random.choice("ab") for _ in range(lt - 2)) + "]"
                 cases += [(a, b), (b, a)]
+        cases += _mixed_word_chunk()
         aa = np.array([c[0] for c in cases], dtype=object)
         bb = np.array([c[1] for c in cases], dtype=object)
         lev = B.levenshtein_batch(aa, bb)
@@ -766,8 +800,8 @@ class TestBlockwiseBatchKernels:
                 texts.append("".join(random.choice(al) for _ in range(lt)))
                 ks.append(random.choice([0, 2, 7, 25, 80, 200]))
             ks = np.asarray(ks, dtype=np.int64)
-            exact = B.myers_batch_block(pats, texts, W)
-            banded = B.myers_batch_block_banded(pats, texts, W, ks)
+            exact = B.myers_batch_block(pats, texts)
+            banded = B.myers_batch_block_banded(pats, texts, ks)
             under = exact <= ks
             assert (banded[under] == exact[under]).all()
             assert (banded[~under] > ks[~under]).all()
@@ -977,13 +1011,13 @@ class TestJaroCutoffEarlyExit:
     pairs provably below the cutoff return the -1.0 sentinel; every
     non-sentinel value must equal the exact similarity."""
 
-    def _pairs(self, n=300, length=300, seed=23):
+    def _pairs(self, n=300, seed=23):
         import random
 
         random.seed(seed)
         words = ["alpha", "bravo", "charlie", "delta", "echo", "foxtrot"]
 
-        def mk():
+        def mk(length):
             s = ""
             while len(s) < length:
                 s += random.choice(words) + " "
@@ -991,11 +1025,12 @@ class TestJaroCutoffEarlyExit:
 
         a, b = [], []
         for i in range(n):
-            x = mk()
+            length = random.randint(40, 700)
+            x = mk(length)
             y = (
                 x[: length // 2] + random.choice(words) + x[length // 2 :][: length // 2 - 6]
                 if i % 3 == 0
-                else mk()
+                else mk(length)
             )
             a.append(x)
             b.append(y)

@@ -53,10 +53,11 @@ ALPHAS = [
     "xyz ",
 ]
 # lengths straddle every routing seam: 0/empty, the 64/65-char seam
-# between the W=1 and W=2 groups of the blockwise kernels (and the
-# all-short whole-batch fast path), the blockwise word-count groups, and
-# BOTH sides of _BLOCK_MAX_WORDS (24 words = 1536 chars) into the
-# big-int route
+# between one-word and multi-word patterns (and the all-short
+# whole-batch fast path), mixed word counts in one blockwise chunk, and
+# BOTH sides of the banded routes' 24-word gate (1536 chars); the big-int
+# route above _BLOCK_MAX_WORDS (250 words) is covered by
+# tests/test_kernels.py::test_long_string_routing_contract
 LENS = [0, 1, 3, 9, 30, 63, 64, 65, 127, 200, 511, 700, 1023, 1024,
         1500, 1535, 1536, 1537, 2100]
 
