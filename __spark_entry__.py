@@ -1825,7 +1825,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def ed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         """EXACT Levenshtein <= k self-join (Ed-Join, Xiao et al. VLDB
         2008): positional q-gram rarest-first prefix filter + positional
-        and length filters, verified by the repo's banded Levenshtein
+        and length filters, verified by the repo's cutoff Levenshtein
         kernel under score_cutoff semantics (reference routing
         levenshtein.rs:1021-1102). The oracle is the NAIVE all-pairs
         definition, so the gate checks the filter chain's losslessness

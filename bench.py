@@ -94,8 +94,8 @@ def q_ratio_cutoff(spark):
 
 
 def q_lev_cutoff(spark):
-    """Cutoff levenshtein on long texts — exercises the Ukkonen-banded
-    blockwise Myers path (distance bound 40 on ~300-char pairs)."""
+    """Cutoff levenshtein on long texts — exercises the blockwise Myers
+    kernel cut at the bound (distance bound 40 on ~300-char pairs)."""
     p = pairs(spark)
     return (
         p.select(RF.levenshtein_distance("t1", "t2", score_cutoff=40).alias("d"))

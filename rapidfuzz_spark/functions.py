@@ -14,10 +14,10 @@ strings in vocabulary-sized chunks. Each chunk then takes the same path
 (details/distance.rs:154-385): every kernel returns a raw score, the edit
 distance or the Jaro similarity; one transform turns it into the
 variant's score, one table turns a variant score back into a raw bound
-for ``score_cutoff`` and ``score_hint``, and one keep test applies the
-cutoff (``<=`` for distances, ``>=`` for similarities) — first to each
-pair's best score reachable from its lengths alone, so pairs that
-cannot pass skip the kernel, then to the exact score.
+for ``score_cutoff``, and one keep test applies the cutoff (``<=`` for
+distances, ``>=`` for similarities) — first to each pair's best score
+reachable from its lengths alone, so pairs that cannot pass skip the
+kernel, then to the exact score. ``score_hint`` is accepted and ignored.
 
 Cutoff semantics (reference src/common.rs:33-86): with a
 ``score_cutoff`` the result column is nullable — null where the score is
@@ -63,28 +63,24 @@ def _lengths(a) -> np.ndarray:
     return np.fromiter((len(x) for x in a), np.int64, len(a))
 
 
-def _raw(metric: str, a, b, k, hint, params: dict) -> np.ndarray:
+def _raw(metric: str, a, b, k, params: dict) -> np.ndarray:
     """Raw score per pair: the edit distance, or the Jaro(-Winkler)
-    similarity. ``k``/``hint`` are the raw scores at the cutoff/hint
-    (``_raw_at``) or None. The Jaro kernels take the similarity as is;
-    the bounded edit kernels take an integer distance bound per pair."""
+    similarity. ``k`` is the raw score at the cutoff (``_raw_at``) or
+    None. The Jaro kernels take the similarity as is; the bounded edit
+    kernels take an integer distance bound per pair."""
     if metric == "jaro":
         return B.jaro_batch(a, b, k=k)
     if metric == "jaro_winkler":
         return B.jaro_winkler_batch(a, b, params.get("prefix_weight", 0.1), k=k)
 
-    def bound(x):
+    if k is not None:
         # +1 slack: the kernels' over-bound sentinel can never hide a pair
         # the exact keep test would accept
-        if x is None:
-            return None
-        return np.broadcast_to(np.maximum(np.floor(x) + 1, 0), len(a)).astype(np.int64)
-
-    k, hint = bound(k), bound(hint)
+        k = np.broadcast_to(np.maximum(np.floor(k) + 1, 0), len(a)).astype(np.int64)
     if metric == "levenshtein":
         w = _weights(params)
         if w == (1, 1, 1):
-            return B.levenshtein_batch(a, b, k=k, hint=hint)
+            return B.levenshtein_batch(a, b, k=k)
         return B.weighted_levenshtein_batch(a, b, w)
     if metric == "damerau_levenshtein":
         return B.damerau_batch(a, b, k=k)
@@ -154,7 +150,7 @@ def _to_variant(variant: str, frame: str, raw, mx):
 
 def _raw_at(variant: str, frame: str, score: float, mx):
     """The variant's score -> the raw score it corresponds to (the
-    inverse of ``_to_variant``): the kernel bound for a cutoff or hint."""
+    inverse of ``_to_variant``): the kernel bound for a cutoff."""
     if variant == frame:
         return score
     if not variant.startswith("normalized"):
@@ -178,7 +174,6 @@ def _score_block(
     a: np.ndarray,
     b: np.ndarray,
     score_cutoff=None,
-    score_hint=None,
     **params,
 ):
     """Score one chunk of pairs -> (values as float64, keep mask)."""
@@ -197,18 +192,14 @@ def _score_block(
         metric != "jaro_winkler" or 0.0 <= params.get("prefix_weight", 0.1) <= 0.25
     )
     live = slice(None)
-    k = hint = None
+    k = None
     if prune:
         best = _to_variant(variant, frame, _best_raw(metric, a, b, params), mx)
         ok = _keeps(variant, best, score_cutoff)
         if not ok.all():
             live = ok
         k = _raw_at(variant, frame, score_cutoff, mx)
-    if score_hint is not None and n:
-        hint = _raw_at(variant, frame, score_hint, mx)
-    raw = _raw(
-        metric, a[live], b[live], _take(k, live), _take(hint, live), params
-    ).astype(np.float64)
+    raw = _raw(metric, a[live], b[live], _take(k, live), params).astype(np.float64)
     vals = np.zeros(n, dtype=np.float64)
     keep = np.zeros(n, dtype=bool)
     vals[live] = _to_variant(variant, frame, raw, _take(mx, live))
@@ -277,16 +268,16 @@ def _column_fn(metric: str, variant: str, seq: bool = False):
                 f"{name}() got an unexpected keyword argument {unknown[0]!r}"
             )
 
-        # score_hint: perf-only expected-score hint (reference
-        # levenshtein.rs:1069-1088) — feeds the banded kernel's start
-        # band + doubling verify loop; results are hint-independent
+        # score_hint, the reference's perf-only expected-score hint
+        # (levenshtein.rs:1069-1088), never changes a result: accepted
+        # for signature parity and ignored
         @pandas_udf("long" if integral else "double")
         def _udf(c1: pd.Series, c2: pd.Series) -> pd.Series:
             null, chunks = decode(c1, c2)
             if params.get("strict"):
                 _hamming_strict_check(chunks, ~null)
             parts = [
-                _score_block(metric, variant, a, b, score_cutoff, score_hint, **params)
+                _score_block(metric, variant, a, b, score_cutoff, **params)
                 for a, b in chunks
             ]
             vals = np.concatenate([v for v, _ in parts])

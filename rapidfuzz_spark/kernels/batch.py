@@ -18,13 +18,13 @@ Readme.md:100-106), applied *within* an Arrow batch of a pandas UDF:
   whatever mix of word counts the chunk holds. Pairs are sorted by the
   step their wavefront ends, so the active lanes are a shrinking prefix.
   A chunk of one-word patterns (<= 64 chars) skips the carry plumbing:
-  its carry-in is the constant left boundary.
+  its carry-in is the constant left boundary. With a cutoff, the Myers
+  and Jaro kernels drop the pairs that provably miss it as they go.
 - longer patterns take the arbitrary-precision Python-int kernels with a
   per-batch pattern-mask cache keyed by the pattern string (the
   BatchComparator analogue: pattern state is built once per distinct s1).
-- ``levenshtein_batch`` adds its own selectors on top of the shared
-  pass: mbleven for cutoffs <= 3, the Ukkonen-banded kernel, and the
-  score-hint band schedule.
+- ``levenshtein_batch`` adds one selector on top of the shared pass:
+  mbleven for cutoffs <= 3.
 
 No per-row Python UDF dispatch ever happens on the Spark side — one UDF
 call scores the whole Arrow batch.
@@ -195,20 +195,66 @@ def _active(end: np.ndarray, p: int, s: int) -> int:
     return p
 
 
+def _drop_dead(dead, p: int, W, pairs, lanes, carries):
+    """Compact a cut kernel's state: drop the pairs ``dead`` marks among
+    the first ``p`` (the active ones), so the survivors keep full vector
+    width. ``W`` is the per-pair word count, ``pairs`` and ``lanes`` are
+    per-pair and per-lane arrays, ``carries`` per-lane carry arrays one
+    longer (``[i + 1]`` holds lane i's carry-out). Compacts only when
+    enough died to repay the gathers (>= 64 pairs, or >= 1/4 of the
+    active ones): -> None, or the new (p, W, off, pairs, lanes,
+    carries)."""
+    ndead = int(dead.sum())
+    if not ndead or (ndead < 64 and ndead * 4 < p):
+        return None
+    keep = np.ones(len(W), dtype=bool)
+    keep[:p][dead] = False
+    kl = np.repeat(keep, W)
+    kc = np.concatenate(([True], kl))
+    W = W[keep]
+    off = np.zeros(len(W) + 1, dtype=np.intp)
+    np.cumsum(W, out=off[1:])
+    return (
+        p - ndead,
+        W,
+        off,
+        [x[keep] for x in pairs],
+        [x[kl] for x in lanes],
+        [x[kc] for x in carries],
+    )
+
+
 def _from_lanes(L: _Lanes, vals: np.ndarray) -> np.ndarray:
     out = np.empty_like(vals)
     out[L.order] = vals
     return out
 
 
-def myers_batch_block(pats: list, texts: list) -> np.ndarray:
+# per-pair result of a cut kernel for a pair dropped above its cutoff
+_CUT_SENTINEL = np.int64(1) << 40
+
+
+def myers_batch_block(pats: list, texts: list, k=None) -> np.ndarray:
     """Vectorized blockwise Myers/Hyyrö, scheduled along anti-diagonals
     over (pair, word) lanes (``_Lanes``), for patterns of any mix of word
     counts. Semantics follow the reference's hyrroe2003_block
-    (/root/reference/src/distance/levenshtein.rs:769-1019) minus the
-    Ukkonen band: the hp/hn horizontal carries chain low->high word; per
-    text char the distance moves by the carry out of the pattern's last
-    bit. Any Unicode codepoints."""
+    (reference src/distance/levenshtein.rs:769-1019): the hp/hn
+    horizontal carries chain low->high word, and each lane keeps the
+    score S = D[R][C] of its word's last row R at its column C, moved by
+    the carry out of row R. A pair's distance is S at its last lane. Any
+    Unicode codepoints.
+
+    ``k``: optional per-pair distance cutoffs. The reference drops the
+    DP cells no path of cost <= k can reach (the Ukkonen band); this
+    kernel drops whole pairs. A path's last cell (R, C) in row R costs
+    D[R][C] to reach and at least |C - C*| more to end at (P, T), where
+    C* = T - (P - R), and D moves by at most 1 per column, so the
+    distance is at least D[R][C*]. Each lane's S therefore stops at C*
+    (the last lane's C* is T), and S - (C* - C) bounds the distance
+    from below before it gets there. Every 32 steps, a pair whose
+    largest bound over its lanes exceeds its cutoff is dropped
+    (``_drop_dead``) and returns ``_CUT_SENTINEL`` (callers only compare
+    those against the cutoff)."""
     L = _lanes(pats, texts)
     n, nl = len(L.plen), int(L.off[-1])
     # one word per pair: the carry-in is the constant left boundary
@@ -220,15 +266,24 @@ def myers_batch_block(pats: list, texts: list) -> np.ndarray:
     hnb = np.zeros(nl + 1, dtype=bool)
     # left DP boundary: hp carry-in 1, hn carry-in 0 (on bools, c > l0
     # is c & ~l0)
-    l0 = L.word == 0
-    last = L.off[1:] - 1
-    dist = L.plen.copy()
+    l0, pmrow, tpos, top = L.word == 0, L.pmrow, L.tpos, L.top
+    W, off, end = np.diff(L.off), L.off, L.end
+    pair = np.repeat(np.arange(n, dtype=np.intp), W)
+    S = np.minimum(64 * (L.word + 1), L.plen[pair]).astype(np.int32)  # D[R][0] = R
+    orig = np.arange(n, dtype=np.intp)  # current pair -> lane-layout pair
+    cut = k is not None
+    if cut:
+        k = np.asarray(k, dtype=np.int64)[L.order]
+        # the step that would take a lane past C*: C = s + 1 - w
+        stop = L.tlen[pair] - L.plen[pair] + S + L.word
     p = n
-    for s in range(int(L.end[0]) if n else 0):
-        p = _active(L.end, p, s)
-        a = int(L.off[p])
+    for s in range(int(end[0]) if n else 0):
+        p = _active(end, p, s)
+        if not p:  # every pair left was dropped
+            break
+        a = int(off[p])
         vp_a, vn_a = vp[:a], vn[:a]
-        pm_j = L.pm[L.pmrow[:a] + L.codes[L.tpos[:a] + s]]
+        pm_j = L.pm[pmrow[:a] + L.codes[tpos[:a] + s]]
         if wide:
             hp_c = hpb[:a] | l0[:a]
             hn_c = hnb[:a] > l0[:a]
@@ -238,11 +293,13 @@ def myers_batch_block(pats: list, texts: list) -> np.ndarray:
         d0 = (((x & vp_a) + vp_a) ^ vp_a) | x | vn_a
         hp = vn_a | ~(d0 | vp_a)
         hn = d0 & vp_a
-        hp_o = (hp & L.top[:a]) != 0
-        hn_o = (hn & L.top[:a]) != 0
-        at = last[:p] if wide else slice(0, a)
-        dist[:p] += hp_o[at]
-        dist[:p] -= hn_o[at]
+        hp_o = (hp & top[:a]) != 0
+        hn_o = (hn & top[:a]) != 0
+        ds = hp_o.view(np.int8) - hn_o.view(np.int8)
+        if cut:
+            ds *= s < stop[:a]
+        S_a = S[:a]
+        S_a += ds
         hp = (hp << one) | hp_c
         hn <<= one
         if wide:
@@ -251,200 +308,18 @@ def myers_batch_block(pats: list, texts: list) -> np.ndarray:
             hnb[1 : a + 1] = hn_o
         vp_a[:] = hn | ~(d0 | hp)
         vn_a[:] = hp & d0
-    return _from_lanes(L, dist)
-
-
-_BAND_SENTINEL = np.int64(1) << 40  # "> any cutoff" result marker
-
-
-def myers_batch_block_banded(pats: list, texts: list, ks: np.ndarray) -> np.ndarray:
-    """Blockwise Myers with the reference's Ukkonen band maintenance
-    (/root/reference/src/distance/levenshtein.rs:769-1019): per pair only
-    the words whose cells can still lie on a <= k path are advanced. The
-    band's first word moves up monotonically; the last word shrinks and
-    regrows with explicit re-initialization (vp=~0, score from the word
-    below), and the cutoff tightens per row from the remaining-diagonal
-    bound (the reference's score-hint logic).
-
-    Cross-pair vectorized: the word loop runs over the union band of the
-    chunk with per-pair membership masks, so a chunk may mix word counts:
-    each pair's band stops at its own last word. ``ks`` is the per-pair distance
-    cutoff; pairs whose distance exceeds it return ``_BAND_SENTINEL``
-    (callers only compare against the cutoff). Patterns must be <= texts
-    in length (caller convention).
-    """
-    n = len(pats)
-    pcodes, plens, poffs = _encode_codes(pats)
-    tcodes, tlens, toffs = _encode_codes(texts)
-    pcodes, tcodes, sigma = _compact_alphabet(pcodes, tcodes)
-    order = np.argsort(-tlens, kind="stable")
-    inv = np.empty(n, dtype=np.intp)
-    inv[order] = np.arange(n, dtype=np.intp)
-    W = int((plens.max() + 63) >> 6) if n else 1
-    rows = np.arange(n, dtype=np.intp)
-    pm = _build_pm(pcodes, plens, poffs[:-1], rows * W, n * W, sigma)
-    pm = pm.reshape(n, W, sigma)[order]
-    pl = plens[order].astype(np.int64)
-    tl = tlens[order].astype(np.int64)
-    toffs_s = toffs[:-1][order]
-    k = np.minimum(ks[order].astype(np.int64), np.maximum(pl, tl))
-    last = np.uint64(1) << ((pl.astype(np.uint64) - np.uint64(1)) % np.uint64(64))
-    last_w = ((pl - 1) >> 6).astype(np.intp)
-    one = np.uint64(1)
-    u0 = np.uint64(0)
-    vp = np.full((n, W), ~u0, dtype=np.uint64)
-    vn = np.zeros((n, W), dtype=np.uint64)
-    # score at the last row of each word, column 0 state: D(i, 0) = i
-    scores = np.minimum(
-        (np.arange(1, W + 1, dtype=np.int64) * 64)[None, :], pl[:, None]
-    )
-    alive = k >= np.abs(pl - tl)
-    dist = np.full(n, _BAND_SENTINEL, dtype=np.int64)
-    fb = np.zeros(n, dtype=np.int64)
-    lb = np.minimum(
-        last_w.astype(np.int64),
-        (np.minimum(k, (k + pl - tl) // 2) + 1 + 63) // 64 - 1,
-    )
-    lb = np.maximum(lb, 0)
-    alive &= lb >= fb
-    max_t = int(tl[0]) if n else 0
-    active = n
-    for j in range(max_t):
-        while active > 0 and tl[active - 1] <= j:
-            active -= 1
-        a = slice(0, active)
-        r = rows[a]
-        live = alive[a]
-        if not live.any():
-            break
-        cj = tcodes[toffs_s[a] + j]
-        w_lo = int(fb[a][live].min())
-        w_hi = int(lb[a][live].max())
-        hp_c = np.ones(active, dtype=np.uint64)
-        hn_c = np.zeros(active, dtype=np.uint64)
-        # carries out of each pair's own last-band word (feed lb extension)
-        lb_hp = np.zeros(active, dtype=np.uint64)
-        lb_hn = np.zeros(active, dtype=np.uint64)
-        for w in range(w_lo, w_hi + 1):
-            m = live & (fb[a] <= w) & (w <= lb[a])
-            if not m.any():
-                continue
-            # left DP boundary (+1 per row) enters at each pair's first word
-            at_fb = m & (fb[a] == w)
-            hp_c = np.where(at_fb, one, hp_c)
-            hn_c = np.where(at_fb, u0, hn_c)
-            vp_w = vp[r, w]
-            vn_w = vn[r, w]
-            pm_j = pm[r, w, cj]
-            x = pm_j | hn_c
-            d0 = (((x & vp_w) + vp_w) ^ vp_w) | x | vn_w
-            hp = vn_w | ~(d0 | vp_w)
-            hn = d0 & vp_w
-            is_last = last_w[a] == w
-            hp_out = np.where(is_last, (hp & last[a]) != 0, hp >> np.uint64(63))
-            hn_out = np.where(is_last, (hn & last[a]) != 0, hn >> np.uint64(63))
-            hp_out = hp_out.astype(np.uint64)
-            hn_out = hn_out.astype(np.uint64)
-            scores[r, w] = np.where(
-                m,
-                scores[r, w] + hp_out.astype(np.int64) - hn_out.astype(np.int64),
-                scores[r, w],
+        if cut and (s & 31) == 31:
+            lb = S_a - np.maximum(stop[:a] - 1 - s, 0)
+            r = _drop_dead(
+                np.maximum.reduceat(lb, off[:p]) > k[:p], p, W, (orig, end, k),
+                (vp, vn, S, stop, l0, pmrow, tpos, top), (hpb, hnb),
             )
-            hps = (hp << one) | hp_c
-            hns = (hn << one) | hn_c
-            vp[r, w] = np.where(m, hns | ~(d0 | hps), vp_w)
-            vn[r, w] = np.where(m, hps & d0, vn_w)
-            at_lb = m & (lb[a] == w)
-            lb_hp = np.where(at_lb, hp_out, lb_hp)
-            lb_hn = np.where(at_lb, hn_out, lb_hn)
-            hp_c = np.where(m, hp_out, hp_c)
-            hn_c = np.where(m, hn_out, hn_c)
-        lbi = np.minimum(lb[a], last_w[a]).astype(np.intp)
-        s_lb = scores[r, lbi]
-        # tighten the cutoff: best still-achievable final score from here
-        k_a = np.minimum(
-            k[a],
-            s_lb
-            + np.maximum(tl[a] - j - 1, pl[a] - ((1 + lb[a]) * 64 - 1) - 1),
-        )
-        k[a] = np.where(live, k_a, k[a])
-        row_num = np.minimum((lb[a] + 1) * 64, pl[a]) - 1
-        # regrow the band's last word where the edge re-enters it
-        ext = (
-            live
-            & (lb[a] < last_w[a])
-            & (row_num <= k[a] + 128 + j + pl[a] - s_lb - 2 - tl[a])
-        )
-        if ext.any():
-            nlb = (lb[a] + 1).astype(np.intp)
-            er = r[ext]
-            en = nlb[ext]
-            vp[er, en] = ~u0
-            vn[er, en] = u0
-            chars = np.where(
-                en == last_w[a][ext], (pl[a][ext] - 1) % 64 + 1, 64
-            ).astype(np.int64)
-            carry_in_p = lb_hp[ext]
-            carry_in_n = lb_hn[ext]
-            base = (
-                scores[er, lb[a][ext].astype(np.intp)]
-                + chars
-                - carry_in_p.astype(np.int64)
-                + carry_in_n.astype(np.int64)
-            )
-            # advance the re-entered word once for this column
-            vp_w = vp[er, en]
-            vn_w = vn[er, en]
-            pm_j = pm[er, en, cj[ext]]
-            x = pm_j | carry_in_n
-            d0 = (((x & vp_w) + vp_w) ^ vp_w) | x | vn_w
-            hp = vn_w | ~(d0 | vp_w)
-            hn = d0 & vp_w
-            is_last = last_w[a][ext] == en
-            hp_out = np.where(
-                is_last, (hp & last[a][ext]) != 0, hp >> np.uint64(63)
-            ).astype(np.uint64)
-            hn_out = np.where(
-                is_last, (hn & last[a][ext]) != 0, hn >> np.uint64(63)
-            ).astype(np.uint64)
-            scores[er, en] = (
-                base + hp_out.astype(np.int64) - hn_out.astype(np.int64)
-            )
-            hps = (hp << one) | carry_in_p
-            hns = (hn << one) | carry_in_n
-            vp[er, en] = hns | ~(d0 | hps)
-            vn[er, en] = hps & d0
-            lb[a] = np.where(ext, lb[a] + 1, lb[a])
-        # shrink last word while its cells are provably outside the band
-        while True:
-            lbi = np.maximum(np.minimum(lb[a], last_w[a]), 0).astype(np.intp)
-            s_lb = scores[r, lbi]
-            row_num = np.minimum((lb[a] + 1) * 64, pl[a]) - 1
-            in1 = s_lb < k[a] + 64
-            in2 = row_num <= k[a] + 128 + j + pl[a] + 1 - s_lb - 2 - tl[a]
-            shrink = live & (lb[a] >= fb[a]) & ~(in1 & in2)
-            if not shrink.any():
-                break
-            lb[a] = np.where(shrink, lb[a] - 1, lb[a])
-        # advance first word while its cells are provably outside the band
-        while True:
-            fbi = np.minimum(fb[a], last_w[a]).astype(np.intp)
-            s_fb = scores[r, fbi]
-            row_num = np.minimum((fb[a] + 1) * 64, pl[a]) - 1
-            in1 = s_fb < k[a] + 64
-            in2 = row_num >= s_fb + pl[a] + j - k[a] - tl[a]
-            adv = live & (fb[a] <= lb[a]) & ~(in1 & in2)
-            if not adv.any():
-                break
-            fb[a] = np.where(adv, fb[a] + 1, fb[a])
-        dead = live & (lb[a] < fb[a])
-        if dead.any():
-            alive[a] = np.where(dead, False, alive[a])
-    ok = alive & (fb <= last_w) & (last_w <= lb)
-    dist[ok] = scores[rows[ok], last_w[ok]]
-    dist = np.where(ok & (dist <= np.minimum(ks[order], np.maximum(pl, tl))),
-                    dist, _BAND_SENTINEL)
-    return dist[inv]
+            if r:
+                p, W, off, (orig, end, k), lanes, (hpb, hnb) = r
+                vp, vn, S, stop, l0, pmrow, tpos, top = lanes
+    out = np.full(n, _CUT_SENTINEL, dtype=np.int64)
+    out[L.order[orig]] = S[off[1:] - 1]
+    return out
 
 
 def lcs_batch_block(pats: list, texts: list) -> np.ndarray:
@@ -588,6 +463,8 @@ def jaro_batch_block(pats: list, texts: list, k=None) -> np.ndarray:
     p = n
     for s in range(int(end[0]) if n else 0):
         p = _active(end, p, s)
+        if not p:  # every pair left was dropped
+            break
         a = int(off[p])
         idx = tpos[:a] + s
         win = _LOW[np.clip(s + hi_c[:a], 0, 64)] ^ _LOW[np.clip(s - lo_c[:a], 0, 64)]
@@ -599,25 +476,18 @@ def jaro_batch_block(pats: list, texts: list, k=None) -> np.ndarray:
             take &= ~t_in
         flagged[:a] |= (cand & (~cand + one)) * take
         matched[idx[take]] = True
-        if k is not None and p and (s & 31) == 31:
+        if k is not None and (s & 31) == 31:
             cnt = np.add.reduceat(_popcount_u64(flagged[:a]), off[:p]).astype(np.int64)
             rem = tl[:p] - np.maximum(s + 2 - W[:p], 0)
             m_max = cnt + np.minimum(pl[:p] - cnt, rem)
             ub = (m_max / pl[:p] + m_max / tl[:p] + 1.0) / 3.0
-            dead = ub < k - 1e-9
-            ndead = int(dead.sum())
-            # compact only when enough died to repay the gather cost
-            if ndead and (ndead >= 64 or ndead * 4 >= p):
-                keep = np.ones(len(orig), dtype=bool)
-                keep[:p][dead] = False
-                kl = np.repeat(keep, W)
-                orig, pl, tl, end, W = orig[keep], pl[keep], tl[keep], end[keep], W[keep]
-                off = np.zeros(len(orig) + 1, dtype=np.intp)
-                np.cumsum(W, out=off[1:])
-                lo_c, hi_c, pbase, l0 = lo_c[kl], hi_c[kl], pbase[kl], l0[kl]
-                pmrow, tpos, flagged = pmrow[kl], tpos[kl], flagged[kl]
-                tb = np.concatenate((tb[:1], tb[1:][kl]))
-                p -= ndead
+            r = _drop_dead(
+                ub < k - 1e-9, p, W, (orig, pl, tl, end),
+                (lo_c, hi_c, pbase, l0, pmrow, tpos, flagged), (tb,),
+            )
+            if r:
+                p, W, off, (orig, pl, tl, end), lanes, (tb,) = r
+                lo_c, hi_c, pbase, l0, pmrow, tpos, flagged = lanes
     # phase 2: transpositions, fully vectorized — flagged bits in lane
     # order are each pair's pattern positions in order, matched text
     # positions in codes order its text positions in order
@@ -757,8 +627,7 @@ _BLOCK_MAX_WORDS = 250
 # the NumPy vector width of every step and bounds the (lanes, sigma) u64
 # PM gather table. Swept on one score_long Arrow batch (4,857 ~300-char
 # pairs, ~24k lanes) under 4 concurrent processes: 2048 lanes is 10-40%
-# slower than 4096-16384, which are within noise of each other on the
-# wavefront kernels; the banded kernel gains from wider chunks.
+# slower than 4096-16384, which are within noise of each other.
 _BLOCK_CHUNK = 8192
 
 
@@ -887,56 +756,28 @@ def _score(c: _Cores, out, kernel, scalar=None, sel=None, extra=(), **kw) -> Non
         lo = hi
 
 
-def _banded_lev_pays(pat_len, W, k, scale: float = 1.0):
-    """Per-pair mask: route to myers_batch_block_banded only where the
-    band is narrow enough to beat the full wavefront kernel. The banded
-    kernel still loops over the band's words per text char with per-row
-    bookkeeping, so it wins only when most pairs leave the band early.
-    Measured against the wavefront kernel (BENCH.md §7, one lane budget
-    of unrelated same-length pairs, best-of-2): banded wins below a band
-    fraction k/len of ~0.2-0.35 at every W from 3 to 24 (0.19-0.59x at
-    0.1); on near-duplicates that stay inside the band it loses at every
-    fraction (1.9-5.6x). The 0.15 threshold sits under every measured
-    breakeven. Above 24 words near-duplicates lose 1.5-9x (W=32-128)
-    while unrelated pairs win less as W grows (parity at W=128, band
-    fraction 0.15), so the band stays off there. ``scale`` < 1 tightens the threshold for callers that
-    additionally bet on pruning (the indel prefilter must beat
-    prune_frac * LCS cost, not just the full kernel)."""
-    return (W >= 4) & (W <= 24) & (k < 64 * (W - 1)) & (k <= 0.15 * scale * pat_len)
-
-
-def levenshtein_batch(a_arr, b_arr, k=None, hint=None) -> np.ndarray:
+def levenshtein_batch(a_arr, b_arr, k=None) -> np.ndarray:
     """Uniform Levenshtein distances for paired object arrays of str.
     Routing: the shared pass (``_route``: equal pairs, affix strip,
     shorter side as pattern) and runner (``_score``: the wavefront
     blockwise Myers kernel up to _BLOCK_MAX_WORDS words, every word count
-    in one chunk; the CPython big-int Myers kernel with a per-batch
-    pattern cache above, past the measured sweep, BENCH.md §12). On top
-    of the shared pass, three selectors take pairs
-    out first: mbleven for cutoffs <= 3 on pairs longer than one word,
-    the ``hint`` band schedule, and the Ukkonen-banded kernel when a
-    cutoff ``k`` is supplied and the band is narrow enough to pay.
-    Long-document corpora should still prefer set-based ops
-    (ngram_jaccard/MinHash-LSH) over pairwise edit distance at scale.
+    in one chunk and each pair cut at its own cutoff; the CPython big-int
+    Myers kernel with a per-batch pattern cache above, past the measured
+    sweep, BENCH.md §12). With a cutoff, mbleven takes the pairs longer
+    than one word whose cutoff is <= 3 first. Long-document corpora
+    should still prefer set-based ops (ngram_jaccard/MinHash-LSH) over
+    pairwise edit distance at scale.
 
     ``k``: optional int64 array of per-pair distance cutoffs. Pairs whose
     distance exceeds their cutoff MAY return a large sentinel instead of
     the exact distance — callers must only compare those against the
-    cutoff (the Column API's keep-mask does exactly that).
-
-    ``hint``: optional int64 array of EXPECTED per-pair distances
-    (reference score_hint, levenshtein.rs:1069-1088,1176-1209): blockwise
-    pairs start at band = hint; a result <= band is exact and final, a
-    result above it doubles the band and retries, capped at ``k`` (where
-    the regular sentinel contract takes over) or at the max possible
-    distance when no cutoff is given — so results are IDENTICAL to the
-    hint-less path, only the band schedule changes."""
+    cutoff (the Column API's keep-mask does exactly that)."""
     c = _route(a_arr, b_arr)
     out = c.tlen.copy()  # an empty core is all insertions of the other
-    pl, tl, W = c.plen[c.rows], c.tlen[c.rows], c.words
-    rest = np.ones(len(c.rows), dtype=bool)  # cores no selector took
+    sel, extra = None, ()
     if k is not None:
         kk = np.asarray(k, dtype=np.int64)[c.rows]
+        pl, tl = c.plen[c.rows], c.tlen[c.rows]
         # tiny bound on a long pair: mbleven enumeration is O(models*len)
         # vs O(ceil(len/64)*len) for any DP (reference routes cutoff < 4
         # here too, levenshtein.rs:1142-1147)
@@ -947,38 +788,9 @@ def levenshtein_batch(a_arr, b_arr, k=None, hint=None) -> np.ndarray:
                 out[c.rows[j]] = max(kb, 0) + 1
             else:
                 out[c.rows[j]] = _mbleven(c.pats[j], c.texts[j], kb)
-        rest &= ~mb
-    if hint is not None:
-        # hint-first banding: start at the (narrower) expected band,
-        # verify, double on failure. Gated at W >= 14, where it beat the
-        # per-word-count kernels 1.3-1.45x; against the wavefront kernel
-        # it measured 1.8-2.5x slower with accurate hints at every W from
-        # 4 to 24 (BENCH.md §7)
-        h = np.asarray(hint, dtype=np.int64)[c.rows]
-        cap = kk if k is not None else tl
-        hs = rest & (W >= 14) & (h >= 4) & (h < cap)
-        hs &= _banded_lev_pays(pl, W, h)
-        rest &= ~hs
-        live = np.nonzero(hs)[0]
-        band, cap = h[live], cap[live]
-        while len(live):
-            _score(c, out, myers_batch_block_banded, sel=live, extra=(band,))
-            # exact once the result fits the band; at band >= cap the
-            # regular contract applies (exact, or sentinel > cap when a
-            # cutoff cap is set — callers only compare those against it)
-            done = (out[c.rows[live]] <= band) | (band >= cap)
-            live, band, cap = live[~done], band[~done], cap[~done]
-            band = np.minimum(band * 2, cap)
-    if k is not None:
-        # banded pays off once whole words fall outside the |i-j|<=k
-        # diagonal band AND the band is narrow enough to amortize the
-        # per-row band bookkeeping (affix stripping already happened, so
-        # k is usually small relative to the remaining core)
-        bs = rest & _banded_lev_pays(pl, W, kk)
-        sel = np.nonzero(bs)[0]
-        _score(c, out, myers_batch_block_banded, sel=sel, extra=(kk[sel],))
-        rest &= ~bs
-    _score(c, out, myers_batch_block, myers_distance, sel=np.nonzero(rest)[0])
+        sel = np.nonzero(~mb)[0]
+        extra = (kk[sel],)
+    _score(c, out, myers_batch_block, myers_distance, sel=sel, extra=extra)
     return out
 
 
@@ -994,15 +806,10 @@ def lcs_similarity_batch(a_arr, b_arr) -> np.ndarray:
 def indel_batch(a_arr, b_arr, k=None) -> np.ndarray:
     """Indel distances. ``k``: optional per-pair distance bounds; results
     above a pair's bound MAY be a sentinel instead of the exact distance
-    — callers only compare those against the bound. Bounded routing:
-
-    - bound <= 4 on long pairs: {delete, insert} mbleven enumeration
-      (reference lcs_seq.rs:113-197 semantics);
-    - otherwise, pairs whose shorter side is longer than one word are
-      prefiltered by the Ukkonen-banded Myers kernel at the same bound:
-      levenshtein <= indel (a substitution costs 1 vs 2), so lev > k
-      proves indel > k and only survivors pay the full-width LCS kernel.
-    """
+    — callers only compare those against the bound. A bound <= 4 on a
+    long pair takes the {delete, insert} mbleven enumeration (reference
+    lcs_seq.rs:113-197 semantics); every other pair is exact, from the
+    LCS kernel."""
     n = len(a_arr)
     la = np.fromiter(map(len, a_arr), dtype=np.int64, count=n)
     lb = np.fromiter(map(len, b_arr), dtype=np.int64, count=n)
@@ -1015,18 +822,6 @@ def indel_batch(a_arr, b_arr, k=None) -> np.ndarray:
     out = np.empty(n, dtype=np.int64)
     for i in np.nonzero(done)[0]:
         out[i] = bounded_indel_distance(a_arr[i], b_arr[i], int(kv[i]))
-    # banded-lev prefilter — only where the band is narrow enough that
-    # the banded kernel costs well under the LCS it may save (scale=0.5
-    # tightens the _banded_lev_pays thresholds: the prefilter is a bet on
-    # pruning, and at wide bands it measured 3x SLOWER than just
-    # computing the full LCS on the sf0.1 bench mix)
-    pl = np.minimum(la, lb)
-    wide = ~done & (pl > 64) & _banded_lev_pays(pl, _block_bucket(pl), kv, 0.5)
-    wi = np.nonzero(wide)[0]
-    if len(wi):
-        pruned = wi[levenshtein_batch(a_arr[wi], b_arr[wi], k=kv[wi]) > kv[wi]]
-        out[pruned] = kv[pruned] + 1
-        done[pruned] = True
     li = np.nonzero(~done)[0]
     if len(li):
         out[li] = la[li] + lb[li] - 2 * lcs_similarity_batch(a_arr[li], b_arr[li])

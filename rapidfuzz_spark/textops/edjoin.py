@@ -8,8 +8,8 @@ for that kernel: find EVERY pair of documents within edit distance
 ``k`` — no false negatives, no quadratic all-pairs work — using the
 positional q-gram prefix filter of Ed-Join (Xiao, Wang, Lin, VLDB
 2008) + the positional-gram count lemma (Gravano et al., VLDB 2001),
-then verify survivors with the repo's own Ukkonen-banded Levenshtein
-kernel under ``score_cutoff`` semantics (`kernels/batch.py`).
+then verify survivors with the repo's own cutoff Levenshtein kernel
+under ``score_cutoff`` semantics (`kernels/batch.py`).
 
 Filter chain (each step lossless, argued inline):
 
@@ -52,7 +52,7 @@ Filter chain (each step lossless, argued inline):
 
 4. **Exact verification.** Survivors are scored with
    `functions.levenshtein_distance(score_cutoff=k)` — the same
-   mbleven/bit-parallel/banded routing the pairwise API uses
+   mbleven/bit-parallel routing, cut at k, that the pairwise API uses
    (reference semantics `levenshtein.rs:324-427,769-1019`), Option ->
    null under cutoff, then `WHERE dist IS NOT NULL`.
 
@@ -136,7 +136,7 @@ def _prefixes(grams: DataFrame, census: DataFrame, plen: int) -> DataFrame:
 def _verify(
     cands: DataFrame, left: DataFrame, right: DataFrame, k: int
 ) -> DataFrame:
-    """Attach both strings and run the exact banded kernel under
+    """Attach both strings and run the exact Levenshtein kernel under
     score_cutoff; keep dist <= k."""
     return (
         cands.join(

@@ -1,14 +1,15 @@
 """Seeded differential fuzz: batch kernels vs the scalar API across every
 routing boundary at once.
 
-The per-pair routing in kernels/batch.py (one-word <=64 chars, blockwise
-<=1024, banded under a bound, mbleven under tiny bounds, Python-int
-fallback beyond) means a single logical query can take four different code
-paths inside one Arrow batch. tests/test_properties.py covers short
-strings vs brute-force DPs; this file stresses the *routing seams* —
-mixed-length batches with per-pair bounds straddling the mbleven (<=3/4),
-banded (k < pattern), and block-width cutovers — against the scalar
-kernels, which are themselves locked to the reference oracle vectors
+The per-pair routing in kernels/batch.py (the wavefront blockwise kernels
+for every word count, cut at a per-pair bound, mbleven under tiny bounds,
+Python-int fallback beyond) means a single logical query can take three
+different code paths inside one Arrow batch. tests/test_properties.py
+covers short strings vs brute-force DPs; this file stresses the *routing
+seams* — mixed-length batches with per-pair bounds straddling the
+mbleven (<=3/4) cutover, bounds below and above the pair's distance, and
+the one-word/multi-word seam — against the scalar kernels, which are
+themselves locked to the reference oracle vectors
 (/root/reference/src/distance/*.rs) by test_kernels.py.
 
 Deterministic (fixed seed): failures reproduce exactly.
@@ -45,8 +46,8 @@ def test_single_pair_all_metrics_all_cutoffs():
         if maxlen <= 900:
             assert int(B.damerau_batch(aa, bb)[0]) == A.damerau_levenshtein.distance(a, b)
         assert abs(float(B.jaro_batch(aa, bb)[0]) - A.jaro.similarity(a, b)) < 1e-12
-        # cutoffs straddle every routing boundary: 0-3 mbleven, 4-7 banded
-        # or one-word, 25/120 wide-band or unbounded
+        # cutoffs straddle every routing boundary: 0-3 mbleven, 4 and up
+        # the cut blockwise kernel, below and above the distance
         for k in (0, 1, 2, 3, 4, 7, 25, 120):
             ka = np.array([k], dtype=np.int64)
             want = A.levenshtein.distance(a, b, score_cutoff=k)

@@ -546,7 +546,7 @@ class TestBlockwiseBatchKernels:
         IDENTICAL whichever side of the cap a pair lands on — exercised
         here with lengths straddling the cap (W-1, W, W+1, ~2W words)
         for every metric that routes through it, plus the lev cutoff
-        and hint variants on the long side."""
+        variant on the long side."""
         import random
 
         import numpy as np
@@ -592,12 +592,10 @@ class TestBlockwiseBatchKernels:
             assert lcs[i] == lcs_length(p, t, pm)
             assert osa_d[i] == _osa.osa_distance_kernel(p, t, pm)
             assert jar[i] == pytest.approx(jaro_similarity(p, t, pm))
-        # cutoff + hint variants stay exact at and above the cap
+        # the cutoff variant stays exact at and above the cap
         ks = lev + 2
         with_k = B.levenshtein_batch(aa, bb, k=ks)
         assert (with_k == lev).all()
-        with_hint = B.levenshtein_batch(aa, bb, k=ks, hint=np.maximum(lev - 1, 1))
-        assert (with_hint == lev).all()
 
     def test_damerau_vectorized_matches_python(self):
         import numpy as np
@@ -780,9 +778,11 @@ class TestBlockwiseBatchKernels:
             )
 
     def test_banded_block_matches_exact(self):
-        """Ukkonen-banded blockwise Myers must equal the exact kernel for
-        all pairs at/below cutoff and never report <= cutoff for a pair
-        above it (reference levenshtein.rs:769-1019 band semantics)."""
+        """Blockwise Myers cut at per-pair cutoffs must equal the exact
+        kernel for all pairs at/below cutoff and never report <= cutoff
+        for a pair above it (reference levenshtein.rs:769-1019 band
+        semantics), per word count and with every word count in one
+        chunk, where dead pairs are dropped from mixed-W lanes."""
         import random
 
         import numpy as np
@@ -790,21 +790,27 @@ class TestBlockwiseBatchKernels:
         from rapidfuzz_spark.kernels import batch as B
 
         random.seed(5)
-        for W in (2, 3, 5):
-            pats, texts, ks = [], [], []
-            for _ in range(200):
-                lp = random.randint(64 * (W - 1) + 1, 64 * W)
-                lt = random.randint(lp, lp + random.randint(0, 150))
-                al = random.choice(["ab", "abcdef月日 "])
-                pats.append("".join(random.choice(al) for _ in range(lp)))
-                texts.append("".join(random.choice(al) for _ in range(lt)))
-                ks.append(random.choice([0, 2, 7, 25, 80, 200]))
+        mixed = ([], [], [])
+        for W in (1, 2, 3, 5, 9, None):
+            if W is None:  # every word count above in one chunk
+                pats, texts, ks = mixed
+            else:
+                pats, texts, ks = [], [], []
+                for _ in range(200):
+                    lp = random.randint(64 * (W - 1) + 1, 64 * W)
+                    lt = random.randint(lp, lp + random.randint(0, 150))
+                    al = random.choice(["ab", "abcdef月日 "])
+                    pats.append("".join(random.choice(al) for _ in range(lp)))
+                    texts.append("".join(random.choice(al) for _ in range(lt)))
+                    ks.append(random.choice([0, 2, 7, 25, 80, 200]))
+                for acc, x in zip(mixed, (pats, texts, ks)):
+                    acc += x
             ks = np.asarray(ks, dtype=np.int64)
             exact = B.myers_batch_block(pats, texts)
-            banded = B.myers_batch_block_banded(pats, texts, ks)
+            cut = B.myers_batch_block(pats, texts, ks)
             under = exact <= ks
-            assert (banded[under] == exact[under]).all()
-            assert (banded[~under] > ks[~under]).all()
+            assert (cut[under] == exact[under]).all()
+            assert (cut[~under] > ks[~under]).all()
 
     def test_damerau_banded_matches_exact(self):
         """Cutoff-banded damerau DP (reference damerau_levenshtein.rs:
@@ -969,9 +975,8 @@ class TestMblevenIndelLcs:
         assert LI.bounded_lcs_dist(a, b, 1) > 1
 
     def test_batch_lev_prefilter_bounds(self):
-        """indel_batch with per-pair bounds: levenshtein <= indel, so the
-        banded-Myers prefilter may only prune pairs provably above the
-        bound; survivors must be exact."""
+        """indel_batch with per-pair bounds: every pair at or below its
+        bound is exact, and no pair above it reports <= the bound."""
         import random
 
         import numpy as np
@@ -1140,10 +1145,10 @@ class TestWeightedBatchVectorized:
 
 
 class TestScoreHintBanding:
-    """score_hint feeds the banded kernel's start band with a verify +
-    band-doubling loop (reference levenshtein.rs:1069-1088,1176-1209).
-    Results must be IDENTICAL for every hint value — right, too small,
-    too large — with and without a cutoff."""
+    """score_hint is accepted and ignored (in the reference it only
+    picks a start band, levenshtein.rs:1069-1088,1176-1209). Long
+    near-duplicates cut at cutoffs from below to far above their
+    distances keep every exact keep decision and every value <= k."""
 
     def _pairs(self, L=1000, n=200, seed=11):
         import random
@@ -1176,15 +1181,11 @@ class TestScoreHintBanding:
         aa = np.array(a, dtype=object)
         bb = np.array(b, dtype=object)
         exact = B.levenshtein_batch(aa, bb)
-        for hval in (4, 8, 40, 120, 10_000):
-            hint = np.full(len(aa), hval, dtype=np.int64)
-            got = B.levenshtein_batch(aa, bb, hint=hint)
-            assert (got == exact).all(), hval
-            # with a cutoff: keep-decision must match the exact one
-            kb = np.full(len(aa), 60, dtype=np.int64)
-            gk = B.levenshtein_batch(aa, bb, k=kb, hint=hint)
-            assert ((gk <= 60) == (exact <= 60)).all(), hval
-            assert (gk[exact <= 60] == exact[exact <= 60]).all(), hval
+        for kval in (4, 8, 40, 120, 10_000):
+            kb = np.full(len(aa), kval, dtype=np.int64)
+            gk = B.levenshtein_batch(aa, bb, k=kb)
+            assert ((gk <= kval) == (exact <= kval)).all(), kval
+            assert (gk[exact <= kval] == exact[exact <= kval]).all(), kval
 
     def test_hint_through_column_api(self, spark):
         import rapidfuzz_spark.functions as RF

@@ -11,8 +11,6 @@ identities and routing-contract checks that need no per-pair Python:
   * weighted (1,1,1) == lev; (1,1,2) == indel   (rewrite routes)
   * cutoff contract: result <= k  ->  equals the uncut distance;
                      result >  k  ->  uncut distance also > k
-  * hint contract: hint-supplied results identical to hint-less for
-    accurate, low, and high hints (batch.py documents identical output)
   * prefix/postfix vs a direct vectorized common-affix computation
 
 Tier B — depth (default 24k pairs): per-pair batch vs the scalar API
@@ -54,9 +52,9 @@ ALPHAS = [
 ]
 # lengths straddle every routing seam: 0/empty, the 64/65-char seam
 # between one-word and multi-word patterns (and the all-short
-# whole-batch fast path), mixed word counts in one blockwise chunk, and
-# BOTH sides of the banded routes' 24-word gate (1536 chars); the big-int
-# route above _BLOCK_MAX_WORDS (250 words) is covered by
+# whole-batch fast path), and word counts from 1 to 33 mixed in one
+# blockwise chunk, whose cutoff drops pairs of every word count; the
+# big-int route above _BLOCK_MAX_WORDS (250 words) is covered by
 # tests/test_kernels.py::test_long_string_routing_contract
 LENS = [0, 1, 3, 9, 30, 63, 64, 65, 127, 200, 511, 700, 1023, 1024,
         1500, 1535, 1536, 1537, 2100]
@@ -71,7 +69,7 @@ def _rand_str(rng: random.Random, maxlen: int) -> str:
 
 def _mutate(rng: random.Random, s: str, edits: int) -> str:
     """Apply `edits` random edit ops so pair distances are small — this is
-    what makes mbleven / banded / hint paths produce meaningful (non-
+    what makes the mbleven and cut-kernel paths produce meaningful (non-
     sentinel) results instead of the far-apart random-pair regime."""
     out = list(s)
     al = rng.choice(ALPHAS)
@@ -197,24 +195,6 @@ def tier_a(rng: random.Random, total: int, batch: int = 20000) -> int:
             if bad.any():
                 i = int(np.nonzero(bad)[0][0])
                 _fail(f"{name} cutoff sentinel soundness", (aa[i], bb[i], int(ks[i]), int(cut[i]), int(uncut[i])))
-
-        # hint contract: identical output for accurate / low / high hints
-        for hints in (
-            lev.copy(),  # exact hint
-            np.maximum(lev // 2, 1),  # too-low hint (forces doubling)
-            lev + 64,  # too-high hint
-            np.ones(n, dtype=np.int64),
-        ):
-            hl = B.levenshtein_batch(aa, bb, hint=hints.astype(np.int64))
-            if not np.array_equal(hl, lev):
-                i = int(np.nonzero(hl != lev)[0][0])
-                _fail("hint==hintless", (aa[i], bb[i], int(hints[i]), int(hl[i]), int(lev[i])))
-        # hint composed with cutoff keeps the sentinel contract
-        hc = B.levenshtein_batch(aa, bb, k=ks, hint=np.maximum(lev // 2, 1))
-        bad = ((hc <= ks) & (hc != lev)) | ((hc > ks) & (lev <= ks))
-        if bad.any():
-            i = int(np.nonzero(bad)[0][0])
-            _fail("hint+cutoff contract", (aa[i], bb[i], int(ks[i]), int(hc[i]), int(lev[i])))
 
         # prefix/postfix vs direct computation
         pre = B.prefix_batch(aa, bb)
