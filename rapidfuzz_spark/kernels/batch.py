@@ -318,7 +318,8 @@ def myers_batch_block(pats: list, texts: list, k=None) -> np.ndarray:
                 p, W, off, (orig, end, k), lanes, (hpb, hnb) = r
                 vp, vn, S, stop, l0, pmrow, tpos, top = lanes
     out = np.full(n, _CUT_SENTINEL, dtype=np.int64)
-    out[L.order[orig]] = S[off[1:] - 1]
+    # an empty pattern's lane has no row to track: its distance is T
+    out[L.order[orig]] = np.where(L.plen[orig] == 0, L.tlen[orig], S[off[1:] - 1])
     return out
 
 
@@ -413,7 +414,8 @@ def osa_batch_block(pats: list, texts: list) -> np.ndarray:
         vn_a[:] = hp & d0
         d0s[:a] = d0
         pms[:a] = pm_j
-    return _from_lanes(L, dist)
+    # an empty pattern's lane has no row to track: its distance is T
+    return _from_lanes(L, np.where(L.plen == 0, L.tlen, dist))
 
 
 # _LOW[i]: the low i bits set, i = 0..64
@@ -512,7 +514,7 @@ def jaro_batch_block(pats: list, texts: list, k=None) -> np.ndarray:
         sim = np.where(
             cnt > 0,
             (m / pl + m / tl + (m - (t_cnt // 2)) / np.where(cnt > 0, m, 1.0)) / 3.0,
-            0.0,
+            (pl == 0) & (tl == 0),  # jaro("", "") = 1.0, as the scalar API
         )
     result = np.full(n, -1.0, dtype=np.float64)
     result[L.order[orig]] = sim
@@ -915,18 +917,9 @@ def jaro_winkler_batch(
     out = jaro_batch(a_arr, b_arr, k=jk)
     boost = np.nonzero(out > 0.7)[0]
     if len(boost):
-        # vectorized common-prefix length over the first 4 chars: pad with
-        # DISTINCT sentinels so length mismatches break the cumprod run
-        A, _ = _pad_codes([a_arr[i][:4] for i in boost], 0xFFFFFFFE)
-        Bm, _ = _pad_codes([b_arr[i][:4] for i in boost], 0xFFFFFFFF)
-        L = max(A.shape[1], Bm.shape[1], 1)
-        if A.shape[1] < L:
-            A = np.pad(A, ((0, 0), (0, L - A.shape[1])), constant_values=0xFFFFFFFE)
-        if Bm.shape[1] < L:
-            Bm = np.pad(
-                Bm, ((0, 0), (0, L - Bm.shape[1])), constant_values=0xFFFFFFFF
-            )
-        pfx = np.cumprod(A == Bm, axis=1).sum(axis=1).astype(np.float64)
+        pfx = prefix_batch(
+            [a_arr[i][:4] for i in boost], [b_arr[i][:4] for i in boost]
+        ).astype(np.float64)
         ob = out[boost]
         out[boost] = np.minimum(ob + pfx * prefix_weight * (1.0 - ob), 1.0)
     return out

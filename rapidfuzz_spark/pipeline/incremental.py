@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import blocking, ingest, scoring
-from .run import PipelineConfig
+from .run import PipelineConfig, pipeline_blocking_keys
 
 
 def link_increment(
@@ -71,33 +71,12 @@ def link_increment(
     # run_pipeline: prune at the key join, before the candidate dedup and
     # the base-text attach join (same pairs score_pairs would discard)
     prunable = conf.metric in scoring.PRUNABLE_METRICS
-    len_src = "canon_text" if prunable else None
-
-    def _keys(docs_t: DataFrame) -> DataFrame:
-        # same key families as run_pipeline so the increment finds every
-        # match the batch pipeline would (minus sorted-neighborhood,
-        # which needs a global order over base+new and is a batch-rerun
-        # concern, not an increment one)
-        k = blocking.blocking_keys(
-            docs_t,
-            use_prefix=conf.doc_prefix_blocking,
-            use_sorted_neighborhood=False,
-            carry_len_from=len_src,
-        )
-        if conf.deletion_sig_blocking:
-            k = k.unionByName(
-                blocking.token_deletion_keys(
-                    docs_t, df_cap=conf.drop_cap, carry_len_from=len_src
-                )
-            )
-        if conf.media_ref_blocking and "spans" in docs_t.columns:
-            k = k.unionByName(
-                blocking.media_ref_keys(docs_t, carry_len_from=len_src)
-            )
-        return k
-
-    keys_new = _keys(new_t)
-    keys_base = _keys(base_docs_t)
+    # same key families as run_pipeline so the increment finds every
+    # match the batch pipeline would (minus sorted-neighborhood, which
+    # needs a global order over base+new and is a batch-rerun concern,
+    # not an increment one)
+    keys_new = pipeline_blocking_keys(new_t, conf, carry_len=prunable)
+    keys_base = pipeline_blocking_keys(base_docs_t, conf, carry_len=prunable)
     # census over the BASE keys: hot/stopword keys are dropped exactly as
     # in batch blocking (the increment inherits the same skew policy)
     census = blocking.hot_key_census(

@@ -943,6 +943,11 @@ def prefix_filter_jaccard_join(
     array attaches for the exact verify. Output:
     (doc_id_1, doc_id_2, inter_sz, union_sz, jacc) for pairs >= t.
     """
+    if not 0 < threshold_num <= threshold_den:
+        raise ValueError(
+            "jaccard needs 0 < threshold_num <= threshold_den, "
+            f"got {threshold_num}/{threshold_den}"
+        )
     ordered = _rarity_ordered_sets(docs, text_col)
     # L = n - ceil(num*n/den) + 1, exact integer ceil: ceil(a/b) =
     # floor((a + b - 1) / b) for positive ints

@@ -522,6 +522,30 @@ class TestBlockwiseBatchKernels:
             p, t = (x, y) if len(x) <= len(y) else (y, x)
             assert got[i] == (lcs_length(p, t, pm_vector(p)) if p else 0)
 
+    def test_empty_pattern_matches_scalar(self):
+        """A direct call with an empty pattern, alone and among one- and
+        multi-word pairs, gives the scalar API's value."""
+        from rapidfuzz_spark.kernels import batch as B
+
+        kernels = [
+            (B.myers_batch_block, levenshtein.distance),
+            (B.lcs_batch_block, lcs_seq.similarity),
+            (B.osa_batch_block, osa.distance),
+            (B.jaro_batch_block, jaro.similarity),
+        ]
+        alone = [("", "x" * 97), ("", ""), ("", "y")]
+        mixed = alone + [
+            ("ab" * 40, "ba" * 50),
+            ("", "z" * 300),
+            ("a" * 200, "a" * 150 + "b" * 70),
+            ("q", ""),
+        ]
+        batches = [[pair] for pair in alone] + [mixed]
+        for kernel, scalar in kernels:
+            for batch in batches:
+                got = kernel([p for p, _ in batch], [t for _, t in batch])
+                assert list(got) == [scalar(p, t) for p, t in batch], kernel.__name__
+
     def test_osa_block_boundary_transposition(self):
         from rapidfuzz_spark.kernels import batch as B
 

@@ -1495,12 +1495,19 @@ def test_set_join_cosine_o_req_integer_exact(spark):
         ("dice", 25, 10),
         ("overlap", 0, 1),
         ("overlap", -2, 1),
+        ("jaccard", 0, 5),
+        ("jaccard", -1, 5),
+        ("jaccard", 6, 5),
+        ("jaccard", 1, 0),
     ],
 )
 def test_set_join_rejects_bad_thresholds(spark, measure, num, den):
     docs = spark.createDataFrame([(1, "a b")], "doc_id int, text string")
     with pytest.raises(ValueError, match="threshold_num"):
-        dedup.prefix_filter_set_join(docs, "text", measure, num, den)
+        if measure == "jaccard":
+            dedup.prefix_filter_jaccard_join(docs, "text", num, den)
+        else:
+            dedup.prefix_filter_set_join(docs, "text", measure, num, den)
 
 
 def test_set_join_sim_values(spark):
