@@ -1735,23 +1735,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         planted entities. The oracle replays every key family in SQL
         (the er_pipeline_f1 arms) and the exact count arithmetic —
         salting/surrogates change pair distribution, never the set."""
-        from rapidfuzz_spark.pipeline import blocking, ingest
+        from rapidfuzz_spark.pipeline import ingest
         from rapidfuzz_spark.pipeline import metrics as M
         from rapidfuzz_spark.pipeline import run as P
 
         corpus = spark.read.parquet(_SYNTH_FIXTURE)
         truth = corpus.select("doc_id", "entity_id")
         docs_t = ingest.with_match_text(corpus.drop("entity_id"))
-        conf = P.PipelineConfig(checkpoint=False)
-        keys = P.pipeline_blocking_keys(docs_t, conf)
-        sn = blocking.sorted_neighborhood_pairs(docs_t, window=conf.sn_window)
-        caches: list = []
-        pairs = blocking.candidate_pairs(
-            keys,
-            hot_cap=conf.hot_cap,
-            drop_cap=conf.drop_cap,
-            extra_pairs=sn,
-            cache_out=caches,
+        pairs, caches = P.pipeline_candidates(
+            docs_t, P.PipelineConfig(checkpoint=False), prune=False
         )
         out = M.blocking_quality(pairs, truth)
         for c in caches:
@@ -2125,22 +2117,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         form 2tp/(2tp+fp+fn) — exact integers, ONE division — so the
         value is bit-reproducible in any engine. The oracle replays
         keys, scoring, and arithmetic in SQL."""
-        from rapidfuzz_spark.pipeline import blocking, ingest
+        from rapidfuzz_spark.pipeline import ingest
         from rapidfuzz_spark.pipeline import run as P
 
         corpus = spark.read.parquet(_SYNTH_FIXTURE)
         truth = corpus.select("doc_id", "entity_id")
         docs_t = ingest.with_match_text(corpus.drop("entity_id"))
-        conf = P.PipelineConfig(checkpoint=False)
-        keys = P.pipeline_blocking_keys(docs_t, conf)
-        sn = blocking.sorted_neighborhood_pairs(docs_t, window=conf.sn_window)
-        caches: list = []
-        pairs = blocking.candidate_pairs(
-            keys,
-            hot_cap=conf.hot_cap,
-            drop_cap=conf.drop_cap,
-            extra_pairs=sn,
-            cache_out=caches,
+        pairs, caches = P.pipeline_candidates(
+            docs_t, P.PipelineConfig(checkpoint=False), prune=False
         )
         # score the SAME derived columns the shipped scorer uses (and the
         # oracle replays): norm_text / canon_text, not raw match_text
@@ -2270,9 +2254,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             P.pipeline_blocking_keys(docs_t, conf)
             .select("block_key", "doc_id")
             .unionByName(
-                blocking.sorted_neighborhood_keys(
-                    docs_t, window=conf.sn_window
-                ).select("block_key", "doc_id")
+                blocking.sorted_neighborhood_keys(docs_t).select(
+                    "block_key", "doc_id"
+                )
             )
             .unionByName(blocking.phonetic_keys(docs_t, "norm_text"))
         )

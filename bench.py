@@ -116,8 +116,9 @@ def q_jw_topk(spark):
 def synth_corpus(spark):
     """Materialize the synthesized interleaved corpus (scaled to the sf's
     document count) BEFORE the pipeline clock starts — the same
-    input-outside-the-clock policy as tools/scaling_bench.py, so
-    pipeline_e2e measures the pipeline, not the test-data generator."""
+    input-outside-the-clock policy as the scaling workloads of
+    tools/harness.py, so pipeline_e2e measures the pipeline, not the
+    test-data generator."""
     from pyspark.storagelevel import StorageLevel
 
     n_docs = docs(spark).count()

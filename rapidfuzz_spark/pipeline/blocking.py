@@ -1,11 +1,16 @@
 """Blocking-key generation with explicit hot-key skew handling.
 
-Produces (block_key, doc_id, norm_text) pairs from multiple passes:
-- token keys: explode distinct tokens of the normalized text
-- prefix keys: first N chars of the token-sorted canonical key
-- sorted-neighborhood: rank docs by sort key inside bounded range buckets
-  and pair each doc with its w successors (Window over the bucket — bucket
-  sizes are bounded by the range partitioner, so no single-partition sort).
+The shipped recipe (``run.pipeline_candidates``) blocks on these families:
+- ``t:`` whole tokens, ``tp:``/``ts:`` token prefix/suffix affixes, and
+  (``doc_prefix_blocking`` only) ``p:`` the first PREFIX_N chars of the
+  squashed canonical text: all fused into one projection by
+  ``blocking_keys``;
+- ``e:`` del<=1 signatures of discriminative tokens
+  (``token_deletion_keys``, DF-prefiltered at ``drop_cap``);
+- ``mr:`` shared non-text span media refs (``media_ref_keys``);
+- sorted-neighborhood pairs (``sorted_neighborhood_pairs``): each doc
+  with its SN_WINDOW successors in sort order inside prefix-range
+  buckets, produced directly as pairs.
 
 Skew: a census (groupBy(block_key).count()) finds hot keys; keys above
 ``hot_cap`` get a replication factor G = ceil(count / hot_cap). The pair
@@ -31,9 +36,12 @@ PREFIX_N = 4
 AFFIX_N = 4
 AFFIX_MIN_LEN = 5
 SN_BUCKET_CHARS = 2
-PAIR_MAX_TOKENS = 8
+SN_WINDOW = 3
 DELSIG_MIN_LEN = 5
 DELSIG_MAX_LEN = 16
+# census: keys above HOT_CAP members are salted over ceil(count / HOT_CAP)
+# join partitions
+HOT_CAP = 200
 
 
 def _sn_ranked(docs: DataFrame):
@@ -77,42 +85,6 @@ def token_affix_keys(
         "doc_id",
     )
     return pfx.unionByName(sfx).dropDuplicates(["block_key", "doc_id"])
-
-
-def token_pair_keys(
-    docs: DataFrame, min_len: int = TOKEN_MIN_LEN, max_tokens: int = PAIR_MAX_TOKENS
-) -> DataFrame:
-    """Conjunctive (token-pair) keys: one key ``d:tok1|tok2`` per unordered
-    pair of distinct tokens (sorted order, first ``max_tokens`` tokens).
-
-    The recall carrier for records whose DISCRIMINATIVE token is corrupted
-    independently on both sides (two edits apart — every single-token and
-    affix key breaks) while the shared tokens are individually
-    stopword-grade: a pair of common tokens ("david"+"jones") is orders of
-    magnitude rarer than either alone, so it passes under ``drop_cap``
-    where the single-token keys are census-dropped. Key count is
-    O(max_tokens^2) per doc — bounded, and hot pairs are themselves
-    salted/dropped by the census like any other key."""
-    toks = F.slice(
-        F.array_sort(
-            F.filter(
-                F.array_distinct(F.split("norm_text", r"\s+")),
-                lambda t: F.length(t) >= min_len,
-            )
-        ),
-        1,
-        max_tokens,
-    )
-    pairs = F.flatten(
-        F.transform(
-            toks,
-            lambda x, i: F.transform(
-                F.slice(toks, i + 2, F.size(toks)),
-                lambda y: F.concat(F.lit("d:"), x, F.lit("|"), y),
-            ),
-        )
-    )
-    return docs.select(F.explode(pairs).alias("block_key"), "doc_id")
 
 
 def _deletion_sig_arr(tok):
@@ -250,7 +222,7 @@ def prefix_keys(docs: DataFrame, n: int = PREFIX_N) -> DataFrame:
     ).where(F.length("block_key") > 2)
 
 
-def sorted_neighborhood_keys(docs: DataFrame, window: int = 3) -> DataFrame:
+def sorted_neighborhood_keys(docs: DataFrame, window: int = SN_WINDOW) -> DataFrame:
     """Neighbor keys via rank inside prefix-range buckets: each doc pairs
     with its ``window`` successors in sort order. The bucket is the sort
     key's 2-char prefix — a range partition of the lexicographic order, so
@@ -279,7 +251,7 @@ def sorted_neighborhood_keys(docs: DataFrame, window: int = 3) -> DataFrame:
     return out
 
 
-def sorted_neighborhood_pairs(docs: DataFrame, window: int = 3) -> DataFrame:
+def sorted_neighborhood_pairs(docs: DataFrame, window: int = SN_WINDOW) -> DataFrame:
     """Candidate pairs of the sorted-neighborhood pass, produced DIRECTLY:
     each doc paired with its ``window`` successors in sort order inside
     prefix-range buckets, via one window pass with ``lead``.
@@ -312,44 +284,30 @@ def sorted_neighborhood_pairs(docs: DataFrame, window: int = 3) -> DataFrame:
 
 def blocking_keys(
     docs: DataFrame,
-    use_tokens: bool = True,
     use_prefix: bool = True,
-    use_token_affixes: bool = True,
-    use_sorted_neighborhood: bool = True,
-    use_token_pairs: bool = False,
-    use_deletion_sigs: bool = False,
-    sn_window: int = 3,
     carry_len_from: str | None = None,
 ) -> DataFrame:
-    """All key passes fused into ONE narrow projection + explode: the
-    per-doc key set is built with higher-order functions (transform /
-    filter over the token array) and deduped per doc with array_distinct
-    — key namespaces (t:/p:/tp:/ts:) are disjoint, so per-doc distinct
-    equals the old per-pass global dedup. vs the previous
-    one-DataFrame-per-pass union this removes the affix-key
-    dropDuplicates SHUFFLE, two redundant explode scans of the doc
-    cache, and the union's partition concatenation (the 7x-partition
-    cache problem candidate_pairs coalesces away). Per-pass outputs are
-    still exposed above (token_keys & co.) and CI asserts set equality
-    with their union."""
-    if not (
-        use_tokens
-        or use_prefix
-        or use_token_affixes
-        or use_sorted_neighborhood
-        or use_token_pairs
-        or use_deletion_sigs
-    ):
-        raise ValueError("no blocking passes enabled")
+    """The token (t:), affix (tp:/ts:) and, with ``use_prefix``, doc-prefix
+    (p:) passes fused into ONE narrow projection + explode: the per-doc
+    key set is built with higher-order functions (transform / filter over
+    the token array) and deduped per doc with array_distinct — key
+    namespaces are disjoint, so per-doc distinct equals the per-pass
+    global dedup. vs one DataFrame per pass unioned, this removes the
+    affix-key dropDuplicates SHUFFLE, two redundant explode scans of the
+    doc cache, and the union's partition concatenation. Per-pass outputs
+    are still exposed above (token_keys & co.) and CI asserts set
+    equality with their union.
+
+    ``carry_len_from``: ride that column's length through the key explode
+    as ``tlen`` (one int per row) so candidate_pairs can apply the
+    length-difference prune BEFORE the pair-dedup shuffle."""
     toks = F.array_distinct(F.split("norm_text", r"\s+"))
-    arrs = []
-    if use_tokens:
-        arrs.append(
-            F.transform(
-                F.filter(toks, lambda t: F.length(t) >= TOKEN_MIN_LEN),
-                lambda t: F.concat(F.lit("t:"), t),
-            )
+    arrs = [
+        F.transform(
+            F.filter(toks, lambda t: F.length(t) >= TOKEN_MIN_LEN),
+            lambda t: F.concat(F.lit("t:"), t),
         )
+    ]
     if use_prefix:
         squashed = F.regexp_replace("canon_text", r"\s", "")
         arrs.append(
@@ -358,72 +316,20 @@ def blocking_keys(
                 F.array(F.concat(F.lit("p:"), F.substring(squashed, 1, PREFIX_N))),
             ).otherwise(F.array().cast("array<string>"))
         )
-    if use_token_affixes:
-        longs = F.filter(toks, lambda t: F.length(t) >= AFFIX_MIN_LEN)
-        arrs.append(
-            F.transform(
-                longs, lambda t: F.concat(F.lit("tp:"), F.substring(t, 1, AFFIX_N))
-            )
+    longs = F.filter(toks, lambda t: F.length(t) >= AFFIX_MIN_LEN)
+    arrs.append(
+        F.transform(longs, lambda t: F.concat(F.lit("tp:"), F.substring(t, 1, AFFIX_N)))
+    )
+    arrs.append(
+        F.transform(
+            longs, lambda t: F.concat(F.lit("ts:"), F.substring(t, -AFFIX_N, AFFIX_N))
         )
-        arrs.append(
-            F.transform(
-                longs,
-                lambda t: F.concat(F.lit("ts:"), F.substring(t, -AFFIX_N, AFFIX_N)),
-            )
-        )
-    if use_deletion_sigs:
-        # del<=1 signature neighborhood per discriminative token (see
-        # token_deletion_keys for the recall rationale)
-        sig_toks = F.filter(
-            toks, lambda t: F.length(t).between(DELSIG_MIN_LEN, DELSIG_MAX_LEN)
-        )
-        arrs.append(F.flatten(F.transform(sig_toks, _deletion_sig_arr)))
-    if use_token_pairs:
-        # conjunctive pairs over the sorted distinct tokens (see
-        # token_pair_keys for the recall rationale); sorted order makes
-        # the unordered pair canonical without least/greatest
-        sorted_toks = F.slice(
-            F.array_sort(F.filter(toks, lambda t: F.length(t) >= TOKEN_MIN_LEN)),
-            1,
-            PAIR_MAX_TOKENS,
-        )
-        arrs.append(
-            F.flatten(
-                F.transform(
-                    sorted_toks,
-                    lambda x, i: F.transform(
-                        F.slice(sorted_toks, i + 2, F.size(sorted_toks)),
-                        lambda y: F.concat(F.lit("d:"), x, F.lit("|"), y),
-                    ),
-                )
-            )
-        )
-    out = None
-    if arrs:
-        # distinct even for a single arm: the deletion-sig generator emits
-        # in-array duplicates (doubled letters), and duplicate (key, doc)
-        # rows would inflate the hot-key census counts
-        key_arr = (
-            F.array_distinct(F.concat(*arrs))
-            if len(arrs) > 1
-            else F.array_distinct(arrs[0])
-        )
-        cols = [F.explode(key_arr).alias("block_key"), F.col("doc_id")]
-        if carry_len_from is not None:
-            # ride the scoring-text length through the key explode (one
-            # int per row) so candidate_pairs can apply the length-
-            # difference prune BEFORE the pair-dedup shuffle
-            cols.append(F.length(carry_len_from).alias("tlen"))
-        out = docs.select(*cols)
-    if use_sorted_neighborhood:
-        sn = sorted_neighborhood_keys(docs, window=sn_window)
-        if carry_len_from is not None:
-            sn = sn.join(
-                docs.select("doc_id", F.length(carry_len_from).alias("tlen")),
-                "doc_id",
-            ).select("block_key", "doc_id", "tlen")
-        out = sn if out is None else out.unionByName(sn)
-    return out
+    )
+    key_arr = F.array_distinct(F.concat(*arrs))
+    cols = [F.explode(key_arr).alias("block_key"), F.col("doc_id")]
+    if carry_len_from is not None:
+        cols.append(F.length(carry_len_from).alias("tlen"))
+    return docs.select(*cols)
 
 
 def hot_key_census(keys: DataFrame, hot_cap: int, drop_cap: int) -> DataFrame:
@@ -448,7 +354,7 @@ def hot_key_census(keys: DataFrame, hot_cap: int, drop_cap: int) -> DataFrame:
 
 def candidate_pairs(
     keys: DataFrame,
-    hot_cap: int = 200,
+    hot_cap: int = HOT_CAP,
     drop_cap: int = 20000,
     seed: int = 42,
     extra_pairs: DataFrame = None,

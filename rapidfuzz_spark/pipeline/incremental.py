@@ -80,7 +80,7 @@ def link_increment(
     # census over the BASE keys: hot/stopword keys are dropped exactly as
     # in batch blocking (the increment inherits the same skew policy)
     census = blocking.hot_key_census(
-        keys_base.select("block_key", "doc_id"), conf.hot_cap, conf.drop_cap
+        keys_base.select("block_key", "doc_id"), blocking.HOT_CAP, conf.drop_cap
     )
     keep_cols = ["block_key", "doc_id"] + (["tlen"] if prunable else [])
     keys_base = (
@@ -209,7 +209,13 @@ def stream_link_cc(
     clusters is remapped), unmatched batch docs become singletons via
     their self-edge, and untouched entities pass through byte-identical.
     The updated assignment is the next batch's base, so merges chain
-    across micro-batches.
+    across micro-batches through base docs.
+
+    Limitation: every micro-batch is matched only against the static
+    ``base_docs_t``, never against earlier stream docs or the other docs
+    of its own batch. Two stream docs that match only each other are
+    therefore never linked; each stays its own entity (ROADMAP.md
+    direction 5).
 
     Snapshots are written to ``out_dir``/assign/version=<batch_id>
     (whole-directory overwrite per version); a replayed micro-batch

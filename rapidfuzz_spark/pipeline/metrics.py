@@ -72,12 +72,17 @@ def _pairs_within(entities: DataFrame, id_col: str) -> DataFrame:
 
 def cluster_pairwise_f1(predicted: DataFrame, truth: DataFrame) -> dict:
     """predicted/truth: (doc_id, entity_id). Pairwise P/R/F1 over
-    same-cluster pairs (cluster sizes bounded, so pair expansion is safe)."""
-    p = _pairs_within(predicted, "entity_id")
-    t = _pairs_within(truth, "entity_id")
-    tp = p.join(t, ["doc_id_1", "doc_id_2"]).count()
-    fp = p.count() - tp
-    fn = t.count() - tp
+    same-cluster pairs (cluster sizes bounded, so pair expansion is safe).
+    tp/fp/fn come from ONE full outer join of the two pair expansions and
+    one aggregate over its side flags, so each self-join runs once."""
+    p = _pairs_within(predicted, "entity_id").withColumn("in_p", F.lit(True))
+    t = _pairs_within(truth, "entity_id").withColumn("in_t", F.lit(True))
+    in_p, in_t = F.col("in_p").isNotNull(), F.col("in_t").isNotNull()
+    tp, fp, fn = p.join(t, ["doc_id_1", "doc_id_2"], "full").agg(
+        F.count(F.when(in_p & in_t, 1)),
+        F.count(F.when(in_p & ~in_t, 1)),
+        F.count(F.when(~in_p & in_t, 1)),
+    ).first()
     prec = tp / (tp + fp) if tp + fp else 1.0
     rec = tp / (tp + fn) if tp + fn else 1.0
     f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0

@@ -40,14 +40,22 @@ if __package__ in (None, ""):
 else:
     from . import blocking, cluster, ingest, metrics, scoring
 
+# broadcast the skinny (doc_id, texts) projection into the attach joins
+# when the corpus is at most BROADCAST_DOCS_MAX docs AND its measured text
+# volume is at most BROADCAST_DOCS_BYTES_MAX — the pair stream then never
+# shuffles for text attachment. At 10^12 docs the gates are never met and
+# the shuffle join (which scales with cluster size) is used. The byte gate
+# exists because row count alone is unsafe: 400k docs of 20 KB each is an
+# ~8 GB broadcast that OOMs executors where the shuffle join works fine.
+BROADCAST_DOCS_MAX = 500_000
+BROADCAST_DOCS_BYTES_MAX = 256 << 20
+
 
 @dataclass
 class PipelineConfig:
     metric: str = "ratio"
     threshold: float = 0.85
-    hot_cap: int = 200
     drop_cap: int = 20000
-    sn_window: int = 3
     # del<=1 signature keys on discriminative tokens (blocking.
     # token_deletion_keys): closes the recall gap for records whose rare
     # token is corrupted anywhere (candidate recall 0.985 -> 1.000,
@@ -63,8 +71,8 @@ class PipelineConfig:
     media_ref_blocking: bool = True
     # 'p:'-namespaced doc-prefix keys (4-char prefix of the squashed
     # canonical text). OFF by default: measured cost/benefit on the ER
-    # corpus (tools/key_family_audit.py, BENCH.md §3c) shows the family
-    # is ~12-30% of scored pairs for 10-16 candidate truth pairs, ALL
+    # corpus (harness workload key_families, BENCH.md §3c) shows the
+    # family is ~12-30% of scored pairs for 10-16 candidate truth pairs, ALL
     # of which CC closure recovers — the shipped rule's F1/precision/
     # recall at 50k entities are identical to 5 decimals with the
     # family off (0.99837/0.99818/0.99855), and its marginal recall
@@ -88,16 +96,6 @@ class PipelineConfig:
     n_buckets: int = 16
     run_id: str = "run0"
     checkpoint: bool = True
-    # broadcast the skinny (doc_id, texts) projection into the attach
-    # joins when the corpus is at most this many docs AND its measured
-    # text volume is at most broadcast_docs_bytes_max — the pair stream
-    # then never shuffles for text attachment. 0 disables. At 10^12 docs
-    # the thresholds are never met and the shuffle join (which scales
-    # with cluster size) is used. The byte gate exists because row count
-    # alone is unsafe: 400k docs of 20 KB each is an ~8 GB broadcast
-    # that OOMs executors where the shuffle join works fine.
-    broadcast_docs_max: int = 500_000
-    broadcast_docs_bytes_max: int = 256 << 20
 
 
 def pipeline_blocking_keys(
@@ -105,18 +103,16 @@ def pipeline_blocking_keys(
 ) -> DataFrame:
     """The SHIPPED blocking-key recipe for a derived-text doc frame (all
     passes except sorted-neighborhood, which is generated directly as
-    pairs). Shared by run_pipeline and the evaluation tools so a default
-    change cannot silently drift between them.
+    pairs by ``pipeline_candidates``). Shared by run_pipeline, the
+    incremental linker and the evaluation tools so a default change
+    cannot silently drift between them.
 
     ``carry_len``: ride the scoring-text length (canon_text — same value
     attach_texts exposes as len_1/len_2) on every key row so
     candidate_pairs can length-prune pairs before the dedup shuffle."""
     src = "canon_text" if carry_len else None
     keys = blocking.blocking_keys(
-        docs_t,
-        use_prefix=conf.doc_prefix_blocking,
-        use_sorted_neighborhood=False,
-        carry_len_from=src,
+        docs_t, use_prefix=conf.doc_prefix_blocking, carry_len_from=src
     )
     if conf.deletion_sig_blocking:
         # standalone (not fused) so sig generation can be DF-prefiltered:
@@ -132,6 +128,38 @@ def pipeline_blocking_keys(
     if conf.media_ref_blocking and "spans" in docs_t.columns:
         keys = keys.unionByName(blocking.media_ref_keys(docs_t, carry_len_from=src))
     return keys
+
+
+def pipeline_candidates(
+    docs_t: DataFrame, conf: PipelineConfig, prune: bool
+) -> tuple:
+    """Candidate pairs of the SHIPPED blocking recipe: the keys of
+    ``pipeline_blocking_keys`` through candidate_pairs' salted,
+    census-capped self-join, plus the sorted-neighborhood pairs (size-2
+    blocks never need the census/salted-join machinery, so they are
+    produced directly), deduped across passes inside candidate_pairs.
+    Returns (pairs, caches): unpersist each cache once the pairs have
+    been consumed.
+
+    ``prune``: for metrics with the indel-family length prefilter
+    (scoring.PRUNABLE_METRICS), apply the same length-difference prune at
+    the blocking join, before the pair-dedup shuffle and both attach
+    joins. The pairs it removes are exactly the ones score_pairs would
+    discard post-attach, so edges are unchanged (locked by
+    test_len_prune_matches_score_prefilter); evaluations of the candidate
+    set itself pass False."""
+    prunable = prune and conf.metric in scoring.PRUNABLE_METRICS
+    keys = pipeline_blocking_keys(docs_t, conf, carry_len=prunable)
+    sn = blocking.sorted_neighborhood_pairs(docs_t)
+    caches: list = []
+    pairs = blocking.candidate_pairs(
+        keys,
+        drop_cap=conf.drop_cap,
+        extra_pairs=sn,
+        cache_out=caches,
+        len_frac=(1.0 - conf.threshold) if prunable else None,
+    )
+    return pairs, caches
 
 
 def _parquet_has_rows(spark: SparkSession, path: str) -> bool:
@@ -285,28 +313,7 @@ def run_pipeline(
     from pyspark.storagelevel import StorageLevel
 
     docs_t = docs_t.persist(StorageLevel.MEMORY_AND_DISK)
-    # sorted-neighborhood pairs are produced directly (size-2 blocks never
-    # need the census/salted-join machinery); the remaining passes go
-    # through the salted self-join, with cross-pass dedup inside
-    # candidate_pairs
-    # metrics with the indel-family length prefilter (scoring.score_pairs)
-    # get the SAME prune applied at the blocking join, before the pair
-    # dedup shuffle and both attach joins — the pairs it removes are
-    # exactly the ones score_pairs would discard post-attach, so results
-    # are unchanged (locked by test_len_prune_matches_score_prefilter)
-    prunable = conf.metric in scoring.PRUNABLE_METRICS
-    len_frac = (1.0 - conf.threshold) if prunable else None
-    keys = pipeline_blocking_keys(docs_t, conf, carry_len=prunable)
-    sn = blocking.sorted_neighborhood_pairs(docs_t, window=conf.sn_window)
-    caches: list = []
-    pairs = blocking.candidate_pairs(
-        keys,
-        hot_cap=conf.hot_cap,
-        drop_cap=conf.drop_cap,
-        extra_pairs=sn,
-        cache_out=caches,
-        len_frac=len_frac,
-    )
+    pairs, caches = pipeline_candidates(docs_t, conf, prune=True)
     # docs_t is already persisted; this aggregate is the same cache scan
     # the first blocking job performs, so the extra action is cheap. The
     # byte estimate covers what attach_texts actually broadcasts: both
@@ -324,9 +331,8 @@ def run_pipeline(
         F.sum(_bytes_est).alias("bytes"),
     ).first()
     bc = (
-        conf.broadcast_docs_max > 0
-        and _st["n"] <= conf.broadcast_docs_max
-        and (_st["bytes"] or 0) <= conf.broadcast_docs_bytes_max
+        _st["n"] <= BROADCAST_DOCS_MAX
+        and (_st["bytes"] or 0) <= BROADCAST_DOCS_BYTES_MAX
     )
     pairs_t = scoring.attach_texts(pairs, docs_t, broadcast_docs=bc)
     if conf.checkpoint:

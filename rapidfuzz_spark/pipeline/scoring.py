@@ -105,17 +105,16 @@ def score_pairs(
     pairs_with_text: DataFrame,
     metric: str = "ratio",
     threshold: float = 0.85,
-    length_prefilter: bool = True,
-    dual_pass: bool = True,
 ) -> DataFrame:
     """UDF scoring with the reference's length-difference pruning
     (levenshtein.rs:1045-1047) hoisted into a cheap Catalyst pre-filter
     *before* the Arrow exchange: |len1-len2| bounds indel-family
     normalized similarity by 1 - |Δlen|/(len1+len2) >= t.
 
-    ``dual_pass``: score = greatest(metric on canonical token-sorted text,
-    metric on unsorted normalized text) — catches token reorders (canon
-    pass) and token-resorting first-char typos (raw pass)."""
+    When the pairs carry ``raw_1``/``raw_2`` (attach_texts), score =
+    greatest(metric on canonical token-sorted text, metric on unsorted
+    normalized text) — catches token reorders (canon pass) and
+    token-resorting first-char typos (raw pass)."""
     _check_threshold(threshold)
     df = pairs_with_text
     if "len_1" not in df.columns or "len_2" not in df.columns:
@@ -165,7 +164,7 @@ def score_pairs(
             .where((F.col("score") >= st_high) | (F.col("jw") >= jw_gate))
             .select("doc_id_1", "doc_id_2", "score")
         )
-    if length_prefilter and metric in PRUNABLE_METRICS:
+    if metric in PRUNABLE_METRICS:
         # 1 - |l1-l2|/(l1+l2) >= t  <=>  |l1-l2| <= (1-t)*(l1+l2)
         df = df.where(
             F.abs(F.col("len_1") - F.col("len_2"))
@@ -173,7 +172,7 @@ def score_pairs(
         )
     scorer = SCORERS[metric]
     score = scorer("text_1", "text_2", score_cutoff=threshold)
-    if dual_pass and "raw_1" in df.columns:
+    if "raw_1" in df.columns:
         score = F.greatest(
             score, scorer("raw_1", "raw_2", score_cutoff=threshold)
         )

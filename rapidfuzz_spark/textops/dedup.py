@@ -936,121 +936,18 @@ def prefix_filter_jaccard_join(
     which is what lets the oracle be the naive all-pairs definition
     (the gate then checks the filter's losslessness itself).
 
-    Scale shape: one token-keyed shuffle for the df census + ordering
-    join, one doc-keyed regroup to sort/slice the prefix (collect_list
-    of (df, tok) structs, partial-agg'd), one equi-join on prefix
-    tokens (bounded, rare-key blocks), pair dedup, then two id-keyed
-    array attaches for the exact verify. Output:
+    The ``jaccard`` measure of ``prefix_filter_set_join``, projected to
     (doc_id_1, doc_id_2, inter_sz, union_sz, jacc) for pairs >= t.
     """
-    if not 0 < threshold_num <= threshold_den:
-        raise ValueError(
-            "jaccard needs 0 < threshold_num <= threshold_den, "
-            f"got {threshold_num}/{threshold_den}"
-        )
-    ordered = _rarity_ordered_sets(docs, text_col)
-    # L = n - ceil(num*n/den) + 1, exact integer ceil: ceil(a/b) =
-    # floor((a + b - 1) / b) for positive ints
-    L = (
-        F.col("n")
-        - F.floor(
-            (F.lit(threshold_num) * F.col("n") + threshold_den - 1)
-            / threshold_den
-        )
-        + 1
-    ).cast("int")
-    prefixes = ordered.select(
-        "doc_id",
-        "n",
-        F.posexplode(F.slice("toks", 1, L)).alias("pos0", "ptok"),
+    out = prefix_filter_set_join(
+        docs, text_col, "jaccard", threshold_num, threshold_den
     )
-    a = prefixes.select(
-        F.col("doc_id").alias("doc_id_1"),
-        F.col("n").alias("n1"),
-        (F.col("pos0") + 1).alias("i"),
-        "ptok",
-    )
-    b = prefixes.select(
-        F.col("doc_id").alias("doc_id_2"),
-        F.col("n").alias("n2"),
-        (F.col("pos0") + 1).alias("j"),
-        "ptok",
-    )
-    # required overlap for Jaccard >= num/den: o = ceil(num*(n1+n2) /
-    # (num+den)) — exact integer ceil again
-    o_req = F.floor(
-        (
-            F.lit(threshold_num) * (F.col("n1") + F.col("n2"))
-            + (threshold_num + threshold_den)
-            - 1
-        )
-        / (threshold_num + threshold_den)
-    )
-    cands = (
-        a.join(b, "ptok")
-        .where(F.col("doc_id_1") < F.col("doc_id_2"))
-        # size filter: t*|x| <= |y| given |x| <= |y| — exact integers
-        .where(
-            F.lit(threshold_den) * F.least("n1", "n2")
-            >= F.lit(threshold_num) * F.greatest("n1", "n2")
-        )
-        # PPJoin positional filter (Xiao et al. TODS'11 §3.2): a shared
-        # prefix token at (1-based) positions i, j bounds the overlap by
-        # 1 + min(n1-i, n2-j); rows that cannot reach o_req are dropped
-        # BEFORE the pair-dedup exchange — the pair still survives iff
-        # its FIRST shared prefix token passes (maximal bound), so the
-        # join stays lossless while the shuffle sheds the long tail of
-        # single-shared-deep-token collisions
-        .where(
-            F.lit(1)
-            + F.least(
-                F.col("n1") - F.col("i"), F.col("n2") - F.col("j")
-            )
-            >= o_req
-        )
-        .select("doc_id_1", "doc_id_2")
-        .dropDuplicates(["doc_id_1", "doc_id_2"])
-    )
-    sets = ordered.select("doc_id", "toks")
-    verified = (
-        cands.join(
-            sets.select(
-                F.col("doc_id").alias("doc_id_1"),
-                F.col("toks").alias("toks_1"),
-            ),
-            "doc_id_1",
-        )
-        .join(
-            sets.select(
-                F.col("doc_id").alias("doc_id_2"),
-                F.col("toks").alias("toks_2"),
-            ),
-            "doc_id_2",
-        )
-        .select(
-            "doc_id_1",
-            "doc_id_2",
-            F.size(F.array_intersect("toks_1", "toks_2"))
-            .cast("long")
-            .alias("inter_sz"),
-            (
-                F.size("toks_1") + F.size("toks_2")
-                - F.size(F.array_intersect("toks_1", "toks_2"))
-            ).cast("long").alias("union_sz"),
-        )
-        .where(
-            F.lit(threshold_den) * F.col("inter_sz")
-            >= F.lit(threshold_num) * F.col("union_sz")
-        )
-    )
-    return verified.select(
+    return out.select(
         "doc_id_1",
         "doc_id_2",
         "inter_sz",
-        "union_sz",
-        F.round(
-            F.col("inter_sz").cast("double") / F.col("union_sz"), 6
-        ).alias("jacc"),
+        (F.col("n1") + F.col("n2") - F.col("inter_sz")).alias("union_sz"),
+        F.col("sim").alias("jacc"),
     )
 
 
@@ -1061,12 +958,12 @@ def prefix_filter_set_join(
     threshold_num: int = 7,
     threshold_den: int = 10,
 ) -> DataFrame:
-    """EXACT token-set similarity self-join for the other three set
-    measures of the AllPairs/PPJoin family — ``cosine``
+    """EXACT token-set similarity self-join for the four set measures of
+    the AllPairs/PPJoin family — ``jaccard`` (I/(n1+n2-I)), ``cosine``
     (I/sqrt(n1*n2)), ``dice`` (2I/(n1+n2)), and ``overlap`` (absolute
-    I >= c) — completing ``prefix_filter_jaccard_join`` into the full
-    similarity-join family of Bayardo et al. WWW'07 / Xiao et al.
-    TODS'11. Same guarantees: every qualifying pair, NO false
+    I >= c) — the full similarity-join family of Bayardo et al. WWW'07 /
+    Xiao et al. TODS'11 (see ``prefix_filter_jaccard_join`` for the
+    prefix-filter principle). Every qualifying pair, NO false
     negatives, no all-pairs work, candidates drawn only from each
     doc's rarest tokens (anti-skew by construction).
 
@@ -1074,6 +971,9 @@ def prefix_filter_set_join(
     t = num/den (for ``overlap``, threshold_num is the absolute
     required intersection c and threshold_den is ignored):
 
+    - jaccard: prefix L = n - ceil(num*n/den) + 1; length filter
+      den*min >= num*max; o = ceil(num*(n1+n2)/(num+den)); verify
+      den*I >= num*(n1+n2-I).
     - cosine: prefix L = n - ceil(num^2*n/den^2) + 1; pair length
       filter den^2*min^2 >= num^2*n1*n2 (squaring is monotone for
       nonneg ints); required overlap o = the SMALLEST integer with
@@ -1091,11 +991,15 @@ def prefix_filter_set_join(
     The oracle for the driver query is the naive all-pairs definition
     with the SAME integer verifies, so the gate checks the filter
     chain's losslessness itself (the ppjoin_jaccard proof shape).
-    Scale shape identical to the Jaccard join: census + regroup +
-    bounded rare-token equi-join + pair dedup + two id-keyed array
-    attaches; one shared (doc_id, toks, n) materialization.
+    Scale shape: one token-keyed shuffle for the df census + ordering
+    join, one doc-keyed regroup to sort/slice the prefix (collect_list
+    of (df, tok) structs, partial-agg'd), one equi-join on prefix
+    tokens (bounded, rare-key blocks), pair dedup, then two id-keyed
+    array attaches for the exact verify; one shared (doc_id, toks, n)
+    materialization. Output: (measure, doc_id_1, doc_id_2, inter_sz, n1,
+    n2, sim) for pairs >= t.
     """
-    if measure not in ("cosine", "dice", "overlap"):
+    if measure not in ("jaccard", "cosine", "dice", "overlap"):
         raise ValueError(f"unknown measure: {measure!r}")
     num, den = int(threshold_num), int(threshold_den)
     if measure == "overlap":
@@ -1108,8 +1012,10 @@ def prefix_filter_set_join(
         )
     ordered = _rarity_ordered_sets(docs, text_col)
     n = F.col("n")
-    if measure == "cosine":
-        # ceil(num^2 * n / den^2) via floor((a + b - 1) / b)
+    # exact integer ceil(a / b) = floor((a + b - 1) / b) throughout
+    if measure == "jaccard":
+        L = n - F.floor((F.lit(num) * n + den - 1) / den) + 1
+    elif measure == "cosine":
         L = n - F.floor(
             (F.lit(num * num) * n + den * den - 1) / (den * den)
         ) + 1
@@ -1137,7 +1043,12 @@ def prefix_filter_set_join(
     )
     n1, n2 = F.col("n1").cast("long"), F.col("n2").cast("long")
     mn, mx = F.least(n1, n2), F.greatest(n1, n2)
-    if measure == "cosine":
+    if measure == "jaccard":
+        len_ok = F.lit(den) * mn >= F.lit(num) * mx
+        o_req = F.floor(
+            (F.lit(num) * (n1 + n2) + num + den - 1) / (num + den)
+        )
+    elif measure == "cosine":
         s = F.lit(num * num) * n1 * n2
         len_ok = F.lit(den * den) * mn * mn >= s
         seed = F.floor(
@@ -1165,8 +1076,11 @@ def prefix_filter_set_join(
         a.join(b, "ptok")
         .where(F.col("doc_id_1") < F.col("doc_id_2"))
         .where(len_ok)
-        # PPJoin positional filter — lossless for the pair because its
-        # FIRST shared prefix token carries the maximal bound
+        # PPJoin positional filter (Xiao et al. TODS'11 §3.2): a shared
+        # prefix token at (1-based) positions i, j bounds the overlap by
+        # 1 + min(n1-i, n2-j); rows that cannot reach o_req are dropped
+        # BEFORE the pair-dedup exchange — lossless for the pair because
+        # its FIRST shared prefix token carries the maximal bound
         .where(
             F.lit(1)
             + F.least(F.col("n1") - F.col("i"), F.col("n2") - F.col("j"))
@@ -1201,7 +1115,10 @@ def prefix_filter_set_join(
     )
     I = F.col("inter_sz")
     vn1, vn2 = F.col("n1"), F.col("n2")
-    if measure == "cosine":
+    if measure == "jaccard":
+        keep = F.lit(den) * I >= F.lit(num) * (vn1 + vn2 - I)
+        sim = F.round(I.cast("double") / (vn1 + vn2 - I), 6)
+    elif measure == "cosine":
         keep = F.lit(den * den) * I * I >= F.lit(num * num) * vn1 * vn2
         sim = F.round(
             I.cast("double") / F.sqrt((vn1 * vn2).cast("double")), 6

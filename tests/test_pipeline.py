@@ -116,7 +116,9 @@ def test_blocking_recall(spark, corpus):
     docs_t = ingest.with_match_text(corpus)
     _, labels = synth.truth_tables(corpus)
     keys = blocking.blocking_keys(docs_t)
-    pairs = blocking.candidate_pairs(keys)
+    pairs = blocking.candidate_pairs(
+        keys, extra_pairs=blocking.sorted_neighborhood_pairs(docs_t)
+    )
     found = labels.join(pairs, ["doc_id_1", "doc_id_2"], "left_semi").count()
     total = labels.count()
     assert total > 200
@@ -128,7 +130,7 @@ def test_fused_blocking_keys_match_per_pass_union(spark, corpus):
     its output must equal the union of the per-pass generators exactly
     (same multiset — all passes are per-doc distinct)."""
     docs_t = ingest.with_match_text(corpus)
-    fused = blocking.blocking_keys(docs_t, use_sorted_neighborhood=False)
+    fused = blocking.blocking_keys(docs_t)
     union = (
         blocking.token_keys(docs_t)
         .unionByName(blocking.prefix_keys(docs_t))
@@ -136,21 +138,6 @@ def test_fused_blocking_keys_match_per_pass_union(spark, corpus):
     )
     assert fused.exceptAll(union).isEmpty()
     assert union.exceptAll(fused).isEmpty()
-    # optional passes fuse the same way: per-pass generators == fused slice
-    fused_all = blocking.blocking_keys(
-        docs_t,
-        use_sorted_neighborhood=False,
-        use_token_pairs=True,
-        use_deletion_sigs=True,
-    )
-    for prefix, gen in (
-        ("d:", blocking.token_pair_keys),
-        ("e:", blocking.token_deletion_keys),
-    ):
-        sliced = fused_all.where(F.col("block_key").startswith(prefix))
-        alone = gen(docs_t)
-        assert sliced.exceptAll(alone).isEmpty()
-        assert alone.exceptAll(sliced).isEmpty()
 
 
 def test_sorted_neighborhood_pairs_match_keyed_path(spark, corpus):
@@ -229,7 +216,7 @@ def test_deletion_sig_df_cap_monotone(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id string, norm_text string")
     docs = docs.withColumn("canon_text", F.col("norm_text"))
-    base = blocking.blocking_keys(docs, use_sorted_neighborhood=False)
+    base = blocking.blocking_keys(docs)
     full = base.unionByName(blocking.token_deletion_keys(docs))
     filt = base.unionByName(blocking.token_deletion_keys(docs, df_cap=5))
     # the cap must actually remove generation work...
@@ -300,6 +287,19 @@ def test_end_to_end_f1(spark, corpus, tmp_path):
         entities.select("doc_id", "entity_id"), truth
     )
     assert res["f1"] >= 0.95, res
+    # hand-counted: truth a = {a1,a2,a3} split into {a1,a2} + {a3};
+    # truth b = {b1,b2} and c = {c1,c2,c3} merged into one cluster.
+    # truth pairs 3 + 1 + 3 = 7, predicted 1 + 10 = 11; shared: a1-a2,
+    # b1-b2 and the 3 c pairs -> tp 5, fp 11 - 5 = 6, fn 7 - 5 = 2
+    ents = "a1 a a1|a2 a a1|a3 a a3|b1 b b|b2 b b|c1 c b|c2 c b|c3 c b"
+    rows = [tuple(r.split()) for r in ents.split("|")]
+    hand = spark.createDataFrame(rows, "doc_id string, truth string, pred string")
+    res = metrics.cluster_pairwise_f1(
+        hand.select("doc_id", F.col("pred").alias("entity_id")),
+        hand.select("doc_id", F.col("truth").alias("entity_id")),
+    )
+    assert (res["tp"], res["fp"], res["fn"]) == (5, 6, 2), res
+    assert res["f1"] == 2 * 5 / (2 * 5 + 6 + 2)
     # span invariant end-to-end
     joined = (
         entities.select("doc_id", "spans")
@@ -336,7 +336,9 @@ def test_pairwise_f1_vs_oracle(spark, corpus):
     reference-parity oracle, F1 >= 0.99 (it is 1.0 by construction)."""
     docs_t = ingest.with_match_text(corpus)
     keys = blocking.blocking_keys(docs_t)
-    pairs = blocking.candidate_pairs(keys)
+    pairs = blocking.candidate_pairs(
+        keys, extra_pairs=blocking.sorted_neighborhood_pairs(docs_t)
+    )
     pairs_t = scoring.attach_texts(pairs, docs_t)
     scored = pairs_t.withColumn(
         "score",

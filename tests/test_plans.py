@@ -139,9 +139,7 @@ def test_length_prefilter_precedes_arrow_exchange(spark, docs):
             F.length("b.text_x").alias("len_2"),
         )
     )
-    edges = scoring.score_pairs(
-        pairs, metric="ratio", threshold=0.9, dual_pass=False
-    )
+    edges = scoring.score_pairs(pairs, metric="ratio", threshold=0.9)
     p = plan_str(edges, "simple")
     arrow_pos = p.find("ArrowEvalPython")
     assert arrow_pos != -1

@@ -6,9 +6,10 @@ Each workload is a registration: an input builder, one or more named jobs
 (variants), and the result fields that must not change from run to run.
 The harness owns everything else:
 
-- the session: ``local-cluster[N, cores, 8 GB]`` (N executor JVMs) for the
+- the session: ``local-cluster[N, cores, heap]`` (N executor JVMs) for the
   N-vs-4N workloads, or ``local[4N]`` threads in one JVM for the
-  in-process ones (BENCH's ``local[32]`` rows are ``--executors 8``);
+  in-process ones (BENCH's ``local[32]`` rows are ``--executors 8``), with
+  heaps sized to the host's memory (``heaps_mb``);
 - inputs pinned with ``localCheckpoint`` before any clock, at 128
   partitions (in-process: one per thread, as BENCH's ``local[k]`` rows ran);
 - per variant, one warm-up run, then the best of ``trials`` runs with
@@ -47,7 +48,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from perfbench.spans import MB, read_event_log  # noqa: E402
 
 PARTS = 128  # N-vs-4N task count: identical work at every parallelism
-EXEC_MB = 8192  # heap per executor; in-process runs get EXEC_MB per 4 cores
+HEAP_CAP_MB = 8192  # heap per executor at most; in-process, per 4 cores
 TOP_STAGES = 3  # stages reported per row, longest task first
 
 
@@ -95,21 +96,34 @@ def digest(df, *cols) -> dict:
     return {"rows": int(row["rows"]), "md5": row["md5"]}
 
 
+def heaps_mb(executors: int, cluster: bool) -> tuple:
+    """(executor, driver) heap MB: half the host's physical memory (the
+    rest is for Python workers, off-heap buffers and the OS), split evenly
+    over the executor JVMs and the driver, or given whole to the one
+    in-process JVM; never above HEAP_CAP_MB per executor."""
+    half_mb = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20) // 2
+    if cluster:
+        each = min(HEAP_CAP_MB, half_mb // (executors + 1))
+        return each, each
+    return HEAP_CAP_MB, min(HEAP_CAP_MB * executors, half_mb)
+
+
 def session(executors: int, wl: Workload, events: str):
     from pyspark.sql import SparkSession
 
+    exec_mb, driver_mb = heaps_mb(executors, wl.cluster)
     if wl.cluster:
-        master = f"local-cluster[{executors},{wl.cores},{EXEC_MB}]"
-        driver_mb, parts = EXEC_MB, PARTS
+        master = f"local-cluster[{executors},{wl.cores},{exec_mb}]"
+        parts = PARTS
     else:
         master = f"local[{executors * wl.cores}]"
-        driver_mb, parts = EXEC_MB * executors, executors * wl.cores
+        parts = executors * wl.cores
     spark = (
         SparkSession.builder.master(master)
         .appName(f"rf-harness-{executors}x{wl.cores}")
         # local-cluster's third field sizes the worker; executor heaps
         # follow spark.executor.memory, so set it to the same budget
-        .config("spark.executor.memory", f"{EXEC_MB}m")
+        .config("spark.executor.memory", f"{exec_mb}m")
         # Python workers import the package from this checkout
         .config("spark.executorEnv.PYTHONPATH", ROOT)
         .config("spark.driver.memory", f"{driver_mb}m")
@@ -296,11 +310,11 @@ def scoring_pairs(spark, n_entities: int) -> dict:
     from rapidfuzz_spark.pipeline import blocking, ingest, scoring
 
     docs_t = pin(ingest.with_match_text(er_corpus(spark, n_entities).drop("entity_id")))
-    keys = blocking.blocking_keys(docs_t, use_sorted_neighborhood=False)
-    sn = blocking.sorted_neighborhood_pairs(docs_t, window=3)
+    keys = blocking.blocking_keys(docs_t)
+    sn = blocking.sorted_neighborhood_pairs(docs_t)
     caches: list = []
     cand = blocking.candidate_pairs(
-        keys, hot_cap=200, drop_cap=500, extra_pairs=sn, cache_out=caches
+        keys, drop_cap=500, extra_pairs=sn, cache_out=caches
     )
     pairs = pin(
         scoring.attach_texts(cand, docs_t).select(
@@ -414,17 +428,16 @@ def pipeline_phases(i) -> dict:
         "census",
         lambda: checkpoint(
             blocking.hot_key_census(
-                keys.select("block_key", "doc_id"), conf.hot_cap, conf.drop_cap
+                keys.select("block_key", "doc_id"), blocking.HOT_CAP, conf.drop_cap
             )
         ),
     )
-    sn = blocking.sorted_neighborhood_pairs(docs_t, window=conf.sn_window)
+    sn = blocking.sorted_neighborhood_pairs(docs_t)
     pairs = lap(
         "pairs+dedup",
         lambda: checkpoint(
             blocking.candidate_pairs(
                 keys,
-                hot_cap=conf.hot_cap,
                 drop_cap=conf.drop_cap,
                 extra_pairs=sn,
                 len_frac=1.0 - conf.threshold,
@@ -988,20 +1001,16 @@ def scored_edges(spark, n_entities: int) -> dict:
     """Candidate pairs of the shipped recipe (drop cap 500), scored once
     with Soft TF-IDF and dual-pass Jaro-Winkler, shared by every rule."""
     import rapidfuzz_spark.functions as RF
-    from rapidfuzz_spark.pipeline import blocking, ingest, scoring, synth
-    from rapidfuzz_spark.pipeline.run import PipelineConfig, pipeline_blocking_keys
+    from rapidfuzz_spark.pipeline import ingest, scoring, synth
+    from rapidfuzz_spark.pipeline.run import PipelineConfig, pipeline_candidates
     from rapidfuzz_spark.textops import softtfidf as ST
 
     corpus = pin(er_corpus(spark, n_entities))
     truth = pin(synth.truth_tables(corpus)[0])
     docs_t = ingest.with_match_text(corpus.drop("entity_id"))
     docs_t = pin(ST.attach_token_idf(docs_t, ST.idf_table(docs_t)))
-    keys = pipeline_blocking_keys(docs_t, PipelineConfig(drop_cap=500))
-    sn = blocking.sorted_neighborhood_pairs(docs_t, window=3)
-    caches: list = []
-    cand = blocking.candidate_pairs(
-        keys, hot_cap=200, drop_cap=500, extra_pairs=sn, cache_out=caches
-    )
+    conf = PipelineConfig(drop_cap=500)
+    cand, caches = pipeline_candidates(docs_t, conf, prune=False)
     jw = RF.jaro_winkler_similarity
     st = ST.soft_tfidf_similarity("toks_1", "idfs_1", "toks_2", "idfs_2")
     scored = pin(
@@ -1108,7 +1117,7 @@ def key_families(i) -> dict:
     conf = PipelineConfig(drop_cap=drop_cap, doc_prefix_blocking=True)
     keys = pipeline_blocking_keys(docs_t, conf).withColumn(
         "fam",
-        F.when(F.col("block_key").rlike("^(e|d):"), "delsig").otherwise(
+        F.when(F.col("block_key").rlike("^e:"), "delsig").otherwise(
             F.regexp_extract("block_key", r"^([a-z]+):", 1)
         ),
     )
@@ -1136,8 +1145,9 @@ def key_families(i) -> dict:
         .select("fam", F.col("i").alias("doc_id_1"), F.col("j").alias("doc_id_2"))
         .dropDuplicates(["fam", "doc_id_1", "doc_id_2"])
     )
-    sn = blocking.sorted_neighborhood_pairs(docs_t, window=conf.sn_window)
-    sn = sn.select(F.lit("sn").alias("fam"), "doc_id_1", "doc_id_2")
+    sn = blocking.sorted_neighborhood_pairs(docs_t).select(
+        F.lit("sn").alias("fam"), "doc_id_1", "doc_id_2"
+    )
     pair_fam = pin(pair_fam.unionByName(sn))
     agg = pair_fam.groupBy("doc_id_1", "doc_id_2").agg(F.collect_set("fam").alias("fs"))
     hit = pin(i["truth"].join(agg, ["doc_id_1", "doc_id_2"]))
