@@ -94,6 +94,37 @@ def _pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _jw_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The JW >= 0.85 edges over ``_pairs``: (doc_id_1, doc_id_2, jw),
+    jw rounded to 6 dp — the edge set every clustering query shares."""
+    return (
+        _pairs(spark, sf_dir)
+        .select(
+            F.col("id_1").alias("doc_id_1"),
+            F.col("id_2").alias("doc_id_2"),
+            F.round(RF.jaro_winkler_similarity("t1", "t2"), 6).alias("jw"),
+        )
+        .where(F.col("jw") >= 0.85)
+    )
+
+
+def _jw_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every document with the entity_id of its ``_jw_edges`` connected
+    component (singletons are their own entity)."""
+    from rapidfuzz_spark.pipeline import cluster
+
+    comps = cluster.connected_components(_jw_edges(spark, sf_dir))
+    return cluster.assign_entities(_docs(spark, sf_dir), comps)
+
+
+def _jw_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(pred, truth): the ``_jw_clustered`` entity against the corpus
+    ``source`` partition, for the clustering evaluations."""
+    return _jw_clustered(spark, sf_dir).select(
+        F.col("entity_id").alias("pred"), F.col("source").alias("truth")
+    )
+
+
 _PAIRS_SQL = """
   SELECT a.doc_id AS id_1, b.doc_id AS id_2, a.text AS t1, b.text AS t2
   FROM documents a JOIN documents b
@@ -586,19 +617,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["media_byte_hist"] = media_byte_hist
 
     def er_cluster_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from rapidfuzz_spark.pipeline import cluster
-
-        p = _pairs(spark, sf_dir)
-        edges = p.select(
-            F.col("id_1").alias("doc_id_1"),
-            F.col("id_2").alias("doc_id_2"),
-            F.round(RF.jaro_winkler_similarity("t1", "t2"), 6).alias("jw"),
-        ).where(F.col("jw") >= 0.85)
-        comps = cluster.connected_components(edges)
-        docs = _docs(spark, sf_dir).select("doc_id")
-        return docs.join(comps, "doc_id", "left").select(
-            "doc_id", F.coalesce("entity_id", "doc_id").alias("entity_id")
-        )
+        return _jw_clustered(spark, sf_dir).select("doc_id", "entity_id")
 
     q["er_cluster_cc"] = er_cluster_cc
 
@@ -1665,24 +1684,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         to (pred, truth)-cell aggregates, integer-micro accumulation so
         the doc means are bit-reproducible. The oracle replays the
         closure (recursive CTE) and the whole cell arithmetic."""
-        from rapidfuzz_spark.pipeline import cluster, metrics
+        from rapidfuzz_spark.pipeline import metrics
 
-        p = _pairs(spark, sf_dir)
-        edges = p.select(
-            F.col("id_1").alias("doc_id_1"),
-            F.col("id_2").alias("doc_id_2"),
-            F.round(RF.jaro_winkler_similarity("t1", "t2"), 6).alias("jw"),
-        ).where(F.col("jw") >= 0.85)
-        comps = cluster.connected_components(edges)
-        d = _docs(spark, sf_dir)
-        assign = (
-            d.join(comps, "doc_id", "left")
-            .select(
-                F.coalesce("entity_id", "doc_id").alias("pred"),
-                F.col("source").alias("truth"),
-            )
-        )
-        return metrics.bcubed(assign)
+        return metrics.bcubed(_jw_assign(spark, sf_dir))
 
     q["bcubed_eval"] = bcubed_eval
 
@@ -1694,19 +1698,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         closure + survivorship rules in SQL."""
         from rapidfuzz_spark.pipeline import cluster
 
-        p = _pairs(spark, sf_dir)
-        edges = p.select(
-            F.col("id_1").alias("doc_id_1"),
-            F.col("id_2").alias("doc_id_2"),
-            F.round(RF.jaro_winkler_similarity("t1", "t2"), 6).alias("jw"),
-        ).where(F.col("jw") >= 0.85)
-        comps = cluster.connected_components(edges)
-        d = _docs(spark, sf_dir)
-        assigned = d.join(comps, "doc_id", "left").withColumn(
-            "entity_id", F.coalesce("entity_id", "doc_id")
-        )
         return cluster.golden_records(
-            assigned, fields=["lang", "source"], rep_len_col="text"
+            _jw_clustered(spark, sf_dir), fields=["lang", "source"], rep_len_col="text"
         )
 
     q["golden_records"] = golden_records
@@ -1761,17 +1754,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         division."""
         from rapidfuzz_spark.pipeline import cluster
 
-        p = _pairs(spark, sf_dir)
-        edges = p.select(
-            F.col("id_1").alias("doc_id_1"),
-            F.col("id_2").alias("doc_id_2"),
-            F.round(RF.jaro_winkler_similarity("t1", "t2"), 6).alias("jw"),
-        ).where(F.col("jw") >= 0.85)
-        comps = cluster.connected_components(edges)
-        all_docs = cluster.assign_entities(
-            _docs(spark, sf_dir).select("doc_id"), comps
+        all_docs = _jw_clustered(spark, sf_dir).select("doc_id", "entity_id")
+        return cluster.cluster_stats(
+            _jw_edges(spark, sf_dir), all_docs, score_col="jw"
         )
-        return cluster.cluster_stats(edges, all_docs, score_col="jw")
 
     q["cluster_stats"] = cluster_stats
 
@@ -1925,21 +1911,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         partition — the chance-corrected pair-counting evaluation.
         All contingency arithmetic is exact BIGINT (formula cleared of
         inner divisions); ONE final division, 6-dp."""
-        from rapidfuzz_spark.pipeline import cluster, metrics
+        from rapidfuzz_spark.pipeline import metrics
 
-        p = _pairs(spark, sf_dir)
-        edges = p.select(
-            F.col("id_1").alias("doc_id_1"),
-            F.col("id_2").alias("doc_id_2"),
-            F.round(RF.jaro_winkler_similarity("t1", "t2"), 6).alias("jw"),
-        ).where(F.col("jw") >= 0.85)
-        comps = cluster.connected_components(edges)
-        d = _docs(spark, sf_dir)
-        assign = d.join(comps, "doc_id", "left").select(
-            F.coalesce("entity_id", "doc_id").alias("pred"),
-            F.col("source").alias("truth"),
-        )
-        return metrics.adjusted_rand_index(assign)
+        return metrics.adjusted_rand_index(_jw_assign(spark, sf_dir))
 
     q["ari_eval"] = ari_eval
 
@@ -1976,21 +1950,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         closure vs the `source` truth: homogeneity/completeness/V from
         contingency entropies, each ln micro-int-rounded once and
         summed as exact BIGINTs (the bcubed recipe for entropies)."""
-        from rapidfuzz_spark.pipeline import cluster, metrics
+        from rapidfuzz_spark.pipeline import metrics
 
-        p = _pairs(spark, sf_dir)
-        edges = p.select(
-            F.col("id_1").alias("doc_id_1"),
-            F.col("id_2").alias("doc_id_2"),
-            F.round(RF.jaro_winkler_similarity("t1", "t2"), 6).alias("jw"),
-        ).where(F.col("jw") >= 0.85)
-        comps = cluster.connected_components(edges)
-        d = _docs(spark, sf_dir)
-        assign = d.join(comps, "doc_id", "left").select(
-            F.coalesce("entity_id", "doc_id").alias("pred"),
-            F.col("source").alias("truth"),
-        )
-        return metrics.v_measure(assign)
+        return metrics.v_measure(_jw_assign(spark, sf_dir))
 
     q["vmeasure_eval"] = vmeasure_eval
 
@@ -2007,12 +1969,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         path's exact equivalence to re-clustering from scratch."""
         from rapidfuzz_spark.pipeline import cluster
 
-        p = _pairs(spark, sf_dir)
-        edges = p.select(
-            F.col("id_1").alias("doc_id_1"),
-            F.col("id_2").alias("doc_id_2"),
-            F.round(RF.jaro_winkler_similarity("t1", "t2"), 6).alias("jw"),
-        ).where(F.col("jw") >= 0.85)
+        edges = _jw_edges(spark, sf_dir)
         both_old = (F.col("doc_id_1") % 2 == 0) & (F.col("doc_id_2") % 2 == 0)
         e_old = edges.where(both_old).drop("jw")
         e_new = edges.where(~both_old).drop("jw")
@@ -2118,6 +2075,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         value is bit-reproducible in any engine. The oracle replays
         keys, scoring, and arithmetic in SQL."""
         from rapidfuzz_spark.pipeline import ingest
+        from rapidfuzz_spark.pipeline import metrics as M
         from rapidfuzz_spark.pipeline import run as P
 
         corpus = spark.read.parquet(_SYNTH_FIXTURE)
@@ -2134,7 +2092,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.col("canon_text").alias("canon"),
         )
         lab = (
-            pairs.join(
+            M.label_pairs(pairs, truth)
+            .join(
                 mt.select(
                     F.col("doc_id").alias("doc_id_1"),
                     F.col("norm").alias("n1"),
@@ -2150,20 +2109,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 ),
                 "doc_id_2",
             )
-            .join(
-                truth.select(
-                    F.col("doc_id").alias("doc_id_1"),
-                    F.col("entity_id").alias("e1"),
-                ),
-                "doc_id_1",
-            )
-            .join(
-                truth.select(
-                    F.col("doc_id").alias("doc_id_2"),
-                    F.col("entity_id").alias("e2"),
-                ),
-                "doc_id_2",
-            )
             .select(
                 F.round(
                     F.greatest(
@@ -2172,15 +2117,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                     ),
                     6,
                 ).alias("score"),
-                (F.col("e1") == F.col("e2")).alias("is_true"),
+                "is_true",
             )
         )
         ths = spark.createDataFrame(
             [(round(0.80 + 0.02 * k, 2),) for k in range(9)],
             "threshold double",
-        )
-        ntot = truth.groupBy("entity_id").agg(F.count("*").alias("n")).agg(
-            F.sum(F.expr("n * (n - 1) DIV 2")).alias("ntp")
         )
         agg = (
             lab.crossJoin(F.broadcast(ths))
@@ -2191,13 +2133,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 F.sum(F.when(F.col("is_true"), 0).otherwise(1)).alias("fp"),
             )
         )
-        tp, fp, ntp = F.col("tp"), F.col("fp"), F.col("ntp")
+        tp, fp, ntp = F.col("tp"), F.col("fp"), F.col("true_pairs")
         den = F.lit(2) * tp + fp + (ntp - tp)
         out = (
             ths.join(agg, "threshold", "left")
             .withColumn("tp", F.coalesce("tp", F.lit(0)))
             .withColumn("fp", F.coalesce("fp", F.lit(0)))
-            .crossJoin(F.broadcast(ntot))
+            .crossJoin(F.broadcast(M.truth_sums(truth)))
             .select(
                 "threshold",
                 tp.cast("long").alias("tp"),
@@ -2241,9 +2183,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         scheme learner ranks to assemble its DNF. One key equi-join
         builds every family's pair set at once (prefixes partition the
         key space); conjunctions are ONE pair-level self-join on
-        (d1, d2) — no per-scheme rescans. The oracle replays all six
-        families and the intersection arithmetic in SQL."""
+        (doc_id_1, doc_id_2) — no per-scheme rescans. The oracle replays
+        all six families and the intersection arithmetic in SQL."""
         from rapidfuzz_spark.pipeline import blocking, ingest
+        from rapidfuzz_spark.pipeline import metrics as M
         from rapidfuzz_spark.pipeline import run as P
 
         corpus = spark.read.parquet(_SYNTH_FIXTURE)
@@ -2272,31 +2215,25 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         fk = keys.select(fam.alias("fam"), "block_key", "doc_id").where(
             F.col("fam").isNotNull()
         )
-        a = fk.select("fam", "block_key", F.col("doc_id").alias("d1"))
-        b = fk.select("block_key", F.col("doc_id").alias("d2"))
+        a = fk.select("fam", "block_key", F.col("doc_id").alias("doc_id_1"))
+        b = fk.select("block_key", F.col("doc_id").alias("doc_id_2"))
         pairs = (
             a.join(b, "block_key")
-            .where(F.col("d1") < F.col("d2"))
-            .select("fam", "d1", "d2")
+            .where(F.col("doc_id_1") < F.col("doc_id_2"))
+            .select("fam", "doc_id_1", "doc_id_2")
             .distinct()
             .localCheckpoint(eager=False)  # read by singles + both
             # sides of the conjunction self-join
         )
-        t1 = truth.select(F.col("doc_id").alias("d1"), F.col("entity_id").alias("e1"))
-        t2 = truth.select(F.col("doc_id").alias("d2"), F.col("entity_id").alias("e2"))
-        lab = (
-            pairs.join(F.broadcast(t1), "d1")
-            .join(F.broadcast(t2), "d2")
-            .select("fam", "d1", "d2", (F.col("e1") == F.col("e2")).alias("is_true"))
-        )
+        lab = M.label_pairs(pairs, truth)
         singles = lab.groupBy("fam").agg(
             F.count("*").alias("n_cand"),
             F.sum(F.when(F.col("is_true"), 1).otherwise(0)).alias("tp"),
         ).select(F.col("fam").alias("scheme"), "n_cand", "tp")
         conj = (
             lab.join(
-                pairs.select(F.col("fam").alias("fam2"), "d1", "d2"),
-                ["d1", "d2"],
+                pairs.select(F.col("fam").alias("fam2"), "doc_id_1", "doc_id_2"),
+                ["doc_id_1", "doc_id_2"],
             )
             .where(F.col("fam") < F.col("fam2"))
             .groupBy("fam", "fam2")
@@ -2310,19 +2247,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 "tp",
             )
         )
-        ntot = truth.groupBy("entity_id").agg(F.count("*").alias("n")).agg(
-            F.sum(F.expr("n * (n - 1) DIV 2")).alias("ntp")
-        )
         return (
             singles.unionByName(conj)
-            .crossJoin(F.broadcast(ntot))
+            .crossJoin(F.broadcast(M.truth_sums(truth)))
             .select(
                 "scheme",
                 F.col("n_cand").cast("long").alias("n_cand"),
                 F.col("tp").cast("long").alias("tp"),
                 F.round(
-                    F.when(F.col("ntp") == 0, F.lit(1.0)).otherwise(
-                        F.col("tp").cast("double") / F.col("ntp")
+                    F.when(F.col("true_pairs") == 0, F.lit(1.0)).otherwise(
+                        F.col("tp").cast("double") / F.col("true_pairs")
                     ),
                     6,
                 ).alias("pc"),
@@ -2520,30 +2454,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         and scoring in SQL."""
         from rapidfuzz_spark.pipeline import cluster
 
-        p = _pairs(spark, sf_dir)
-        edges = p.select(
-            F.col("id_1").alias("doc_id_1"),
-            F.col("id_2").alias("doc_id_2"),
-            F.round(RF.jaro_winkler_similarity("t1", "t2"), 6).alias("jw"),
-        ).where(F.col("jw") >= 0.85)
-        comps = cluster.connected_components(edges)
         d = _docs(spark, sf_dir)
-        base = (
-            d.join(comps, "doc_id", "left")
-            .select(
-                F.coalesce("entity_id", "doc_id").alias("entity_id"),
-                "doc_id",
-                F.length(F.coalesce("text", F.lit(""))).alias("len0"),
-            )
-        )
-        best = base.groupBy("entity_id").agg(F.max("len0").alias("bl"))
-        rep = (
-            base.join(best, "entity_id")
-            .where(F.col("len0") == F.col("bl"))
-            .groupBy("entity_id")
-            .agg(F.min("doc_id").alias("rep_doc_id"))
-        )
-        reps = rep.join(
+        rep = cluster.golden_records(_jw_clustered(spark, sf_dir), fields=[])
+        reps = rep.select("entity_id", "rep_doc_id").join(
             d.select(
                 F.col("doc_id").alias("rep_doc_id"),
                 "text",
@@ -5936,10 +5849,10 @@ FROM wscore GROUP BY id_1, id_2"""
         CASE WHEN h + c = 0 THEN 0.0
              ELSE round(2 * h * c / (h + c), 6) END FROM hv"""
     )
-    # golden-record replay: longest-text representative (ties min
-    # doc_id) + per-field mode survivorship (ties min value), all as
-    # max-then-filter aggregates — the same windowless shape as the
-    # Spark plan
+    # golden-record replay: longest-text representative (NULL text
+    # counts as length 0, ties min doc_id) + per-field mode survivorship
+    # (ties min value), all as max-then-filter aggregates — the same
+    # windowless shape as the Spark plan
     o["golden_records"] = (
         _closure
         + """,
@@ -5947,14 +5860,14 @@ FROM wscore GROUP BY id_1, id_2"""
         SELECT d.doc_id, ent.entity_id, d.text, d.lang, d.source
         FROM documents d JOIN ent USING (doc_id)
       ),
-      bl AS (SELECT entity_id, max(len(text)) AS best_len,
+      bl AS (SELECT entity_id, max(len(coalesce(text, ''))) AS best_len,
                     count(*) AS n_members
              FROM asg GROUP BY 1),
       rep AS (
         SELECT a.entity_id, min(a.doc_id) AS rep_doc_id,
                min(bl.n_members) AS n_members
         FROM asg a JOIN bl ON a.entity_id = bl.entity_id
-                          AND len(a.text) = bl.best_len
+                          AND len(coalesce(a.text, '')) = bl.best_len
         GROUP BY a.entity_id
       ),
       lc AS (SELECT entity_id, lang, count(*) AS cnt FROM asg

@@ -127,7 +127,8 @@ def golden_records(
     Rules (all deterministic, total orders — resume-safe and
     engine-replayable):
     - representative row: the member with the LONGEST ``rep_len_col``
-      (most-complete-record heuristic), ties to the smallest doc_id;
+      (most-complete-record heuristic; NULL counts as length 0), ties
+      to the smallest doc_id;
     - per-field survivor: the most frequent non-NULL value in the
       cluster (mode), ties to the lexicographically smallest value;
       all-NULL fields survive as NULL.
@@ -149,7 +150,9 @@ def golden_records(
     base = assigned.select(
         "entity_id",
         F.col("doc_id"),
-        F.length(F.col(rep_len_col)).alias("_rep_len"),
+        # a NULL counts as length 0: length(NULL) is NULL, which never
+        # equals the entity's maximum and would drop an all-NULL entity
+        F.length(F.coalesce(F.col(rep_len_col), F.lit(""))).alias("_rep_len"),
         *fields,
     )
     best_len = base.groupBy("entity_id").agg(

@@ -963,6 +963,71 @@ def test_golden_records_rep_tie_breaks_to_min_doc_id(spark):
     assert len(out) == 1 and out[0].rep_doc_id == 3 and out[0].n_members == 2
 
 
+def test_golden_records_keeps_entity_with_only_null_texts(spark):
+    """A NULL rep_len_col counts as length 0, so an entity whose members
+    all have NULL text still gets its record (min doc_id), and a NULL
+    never beats a text."""
+    assigned = spark.createDataFrame(
+        [("a", "e1", None), ("b", "e1", None), ("c", "e2", "xx"), ("d", "e2", None)],
+        "doc_id string, entity_id string, text string",
+    )
+    out = {r.entity_id: r for r in cluster.golden_records(assigned, fields=[]).collect()}
+    assert sorted(out) == ["e1", "e2"]
+    assert (out["e1"].rep_doc_id, out["e1"].n_members) == ("a", 2)
+    assert (out["e2"].rep_doc_id, out["e2"].n_members) == ("c", 2)
+
+
+def _same_label_pairs(labels: dict) -> set:
+    """Every doc pair with equal labels, enumerated; None matches None."""
+    docs = sorted(labels)
+    return {
+        (a, b)
+        for i, a in enumerate(docs)
+        for b in docs[i + 1 :]
+        if labels[a] == labels[b]
+    }
+
+
+def test_pair_counts_match_brute_force_enumeration(spark):
+    """cluster_pairwise_f1's tp/fp/fn and adjusted_rand_index's
+    idx/a_sum/b_sum equal doc pairs enumerated in Python, over random
+    labelings with docs present in only one table, NULL labels and one
+    all-docs cluster. F1 gives a NULL entity_id no pairs; ARI counts
+    NULL as one more label."""
+    import random
+
+    rng = random.Random(13)
+    for case in range(5):
+        n, k = rng.randint(2, 40), rng.randint(1, 6)
+        pred = {d: rng.randrange(k) for d in range(n) if rng.random() < 0.9}
+        if case == 0:  # everything in one predicted cluster
+            pred = dict.fromkeys(range(n), 0)
+        truth = {
+            d: rng.choice([None, *range(k)]) for d in range(n) if rng.random() < 0.9
+        }
+        frame = lambda lab: spark.createDataFrame(  # noqa: E731
+            list(lab.items()), "doc_id int, entity_id int"
+        )
+        p = _same_label_pairs({d: v for d, v in pred.items() if v is not None})
+        t = _same_label_pairs({d: v for d, v in truth.items() if v is not None})
+        res = metrics.cluster_pairwise_f1(frame(pred), frame(truth))
+        assert (res["tp"], res["fp"], res["fn"]) == (
+            len(p & t), len(p - t), len(t - p)
+        ), (case, res)
+
+        both = sorted(set(pred) & set(truth))
+        assign = spark.createDataFrame(
+            [(d, pred[d], truth[d]) for d in both],
+            "doc_id int, pred int, truth int",
+        )
+        bp = _same_label_pairs({d: pred[d] for d in both})
+        bt = _same_label_pairs({d: truth[d] for d in both})
+        r = metrics.adjusted_rand_index(assign).first()
+        assert (r.n_docs, r.idx, r.a_sum, r.b_sum) == (
+            len(both), len(bp & bt), len(bp), len(bt)
+        ), (case, r)
+
+
 def test_blocking_quality_planted_counts(spark):
     # 4 docs, truth = {1,2},{3},{4}; candidates = (1,2),(1,3) ->
     # tp=1, true=1, cand=2; PC=1, PQ=0.5, RR=1-2/6

@@ -483,25 +483,55 @@ def test_golden_records_windowless_aggregate_survivorship(spark, docs):
     assert "CartesianProduct" not in p
 
 
+def _plan_nodes(node):
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+def _above_aggregate(node) -> bool:
+    """True iff every path from this logical-plan node down to a leaf
+    passes an Aggregate: the rows it carries are groups, not docs."""
+    if node.nodeName() == "Aggregate":
+        return True
+    kids = node.children()
+    return kids.size() > 0 and all(
+        _above_aggregate(kids.apply(i)) for i in range(kids.size())
+    )
+
+
 def test_bcubed_aggregates_cells_not_docs(spark, docs):
-    """B-cubed's joins run on cluster-cell tables (post-aggregation),
-    never on doc-level rows, and nothing in the plan is a window or
-    cartesian — the property that keeps it one-row-per-cell at 10^12
-    docs. bcubed() itself collects the final scalar row, so assert on
-    the internal contrib frame shape via the public output's job plan:
-    re-derive the same frame here."""
-    from pyspark.sql import functions as FF
+    """The contingency core that B-cubed, V-measure, ARI and pairwise F1
+    read (metrics._cells over metrics._contingency) joins cluster-level
+    rows only: both inputs of each join sit above an Aggregate, so no
+    doc-level frame is joined with itself on a cluster label (the pair
+    expansion), and nothing in the plan is a window or cartesian — the
+    property that keeps it one row per cell at 10^12 docs."""
+    from rapidfuzz_spark.pipeline import metrics
 
     assign = docs.select(
         (F.col("doc_id") % 37).alias("pred"), F.col("source").alias("truth")
     )
-    cells = assign.groupBy("pred", "truth").agg(FF.count("*").alias("n_pt"))
-    n_p = assign.groupBy("pred").agg(FF.count("*").alias("n_p"))
-    joined = cells.join(n_p, "pred")
-    p = plan_str(joined)
-    assert "Window" not in p and "CartesianProduct" not in p
-    # both join inputs are HashAggregates (cell/cluster granularity)
-    assert p.count("HashAggregate") >= 4  # partial+final on each side
+    cells = metrics._cells(assign)
+    p = plan_str(cells)
+    assert "Window" not in p and "CartesianProduct" not in p, p
+    assert "BroadcastNestedLoopJoin" not in p, p
+    plan = cells._jdf.queryExecution().optimizedPlan()
+    joins = [n for n in _plan_nodes(plan) if n.nodeName() == "Join"]
+    assert len(joins) == 2, plan.toString()
+    for j in joins:
+        kids = j.children()
+        assert all(_above_aggregate(kids.apply(i)) for i in range(2)), j.toString()
+    # the pair sums read the cube aggregate itself, with no join at all
+    cube = metrics._contingency(assign)._jdf.queryExecution().optimizedPlan()
+    assert not [n for n in _plan_nodes(cube) if n.nodeName() == "Join"]
+    # the check has teeth: a pair expansion's join sees doc rows
+    a, b = assign.alias("a"), assign.alias("b")
+    expand = a.join(b, F.col("a.pred") == F.col("b.pred"))
+    top = expand._jdf.queryExecution().optimizedPlan()
+    join = [n for n in _plan_nodes(top) if n.nodeName() == "Join"][0]
+    assert not _above_aggregate(join.children().apply(0))
 
 
 def test_monge_elkan_pure_codegen(spark, docs):

@@ -1,17 +1,25 @@
 """Simulate the driver's correctness gate: run each __spark_entry__
 query on Spark and its oracle_sql on DuckDB at sf0.01; compare row count,
-schema width, and order-insensitive values."""
+schema width, and order-insensitive values.
+
+The checkout this file lives in is the one tested, whatever the working
+directory: the driver imports its entry file, and the Spark Python
+workers import its package (the run prints both and stops if they
+differ)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as E  # noqa: E402
+import rapidfuzz_spark as RF  # noqa: E402
 
 STRICT = "--strict" in sys.argv
 if STRICT:
@@ -69,8 +77,21 @@ def main() -> None:
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.ui.enabled", "false")
+        # Python workers would put their working directory ahead of
+        # PYTHONPATH, and import the package of whatever checkout the run
+        # was started from
+        .config("spark.executorEnv.PYTHONPATH", ROOT)
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
         .getOrCreate()
     )
+    worker_root = (
+        spark.sparkContext.parallelize([0], 1)
+        .map(lambda _: os.path.dirname(os.path.dirname(RF.__file__)))
+        .first()
+    )
+    print(f"entry file {E.__file__}; workers import rapidfuzz_spark from {worker_root}")
+    if worker_root != ROOT:
+        raise SystemExit(f"workers import {worker_root}, not {ROOT}")
     con = duckdb.connect()
     for t in [
         "region", "nation", "customer", "supplier", "part", "orders",

@@ -29,13 +29,16 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import random
 import sys
 
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, ".")
+# the checkout this file lives in, whatever the working directory
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import rapidfuzz_spark.api as A  # noqa: E402
 import rapidfuzz_spark.kernels.batch as B  # noqa: E402
@@ -478,6 +481,11 @@ def tier_d(rng: random.Random, rows: int) -> int:
         SparkSession.builder.master("local[8]")
         .config("spark.sql.shuffle.partitions", "8")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
+        # Python workers import the package from this checkout too: a
+        # local worker puts its working directory first without
+        # PYTHONSAFEPATH
+        .config("spark.executorEnv.PYTHONPATH", ROOT)
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
         .appName("fuzz_sweep_tier_d")
         .getOrCreate()
     )

@@ -124,8 +124,10 @@ def session(executors: int, wl: Workload, events: str):
         # local-cluster's third field sizes the worker; executor heaps
         # follow spark.executor.memory, so set it to the same budget
         .config("spark.executor.memory", f"{exec_mb}m")
-        # Python workers import the package from this checkout
+        # Python workers import the package from this checkout; without
+        # PYTHONSAFEPATH a local worker puts its working directory first
         .config("spark.executorEnv.PYTHONPATH", ROOT)
+        .config("spark.executorEnv.PYTHONSAFEPATH", "1")
         .config("spark.driver.memory", f"{driver_mb}m")
         .config("spark.sql.shuffle.partitions", str(parts))
         .config("spark.ui.enabled", "false")
