@@ -80,6 +80,23 @@ def pairwise_f1_vs_oracle(
     return {"tp": tp, "fp": fp, "fn": fn, "precision": prec, "recall": rec, "f1": f1}
 
 
+def _local_frame(spark, schema: str, rows: list) -> DataFrame:
+    """``rows`` of driver-side numbers as a local relation: an inline
+    VALUES table of typed literals (``schema`` is "name type, ..."), so
+    collecting it runs no Spark job — ``createDataFrame(list)`` is
+    RDD-backed and runs one. A float's repr round-trips exactly."""
+    cols = [c.split() for c in schema.split(",")]
+
+    def cell(v, t: str) -> str:
+        return f"CAST({'NULL' if v is None else repr(str(v))} AS {t})"
+
+    values = ", ".join(
+        "(" + ", ".join(cell(v, t) for v, (_, t) in zip(r, cols)) + ")" for r in rows
+    )
+    names = ", ".join(n for n, _ in cols)
+    return spark.sql(f"SELECT * FROM VALUES {values} AS t({names})")
+
+
 def _contingency(assign: DataFrame) -> DataFrame:
     """(pred, truth, g, n): the contingency table of a (pred, truth)
     labelling, as one cube aggregate. g = grouping_id() marks the kind
@@ -203,13 +220,10 @@ def bcubed(assign: DataFrame) -> DataFrame:
         prec = _r6(row.p_sum / (n * 1000000.0))
         rec = _r6(row.r_sum / (n * 1000000.0))
         f1 = _r6(2 * prec * rec / (prec + rec)) if prec + rec else 0.0
-    return assign.sparkSession.createDataFrame(
-        [
-            ("bcubed_f1", float(f1)),
-            ("bcubed_precision", float(prec)),
-            ("bcubed_recall", float(rec)),
-        ],
+    return _local_frame(
+        assign.sparkSession,
         "stat string, value double",
+        [("bcubed_f1", f1), ("bcubed_precision", prec), ("bcubed_recall", rec)],
     )
 
 
@@ -288,16 +302,17 @@ def blocking_quality(pairs: DataFrame, truth: DataFrame) -> DataFrame:
     pc = _r6(n_tp / n_true) if n_true else 1.0
     pq = _r6(n_tp / n_cand) if n_cand else 1.0
     rr = _r6(1 - n_cand / total) if total else 0.0
-    return pairs.sparkSession.createDataFrame(
+    return _local_frame(
+        pairs.sparkSession,
+        "stat string, value double",
         [
             ("cand_pairs", float(n_cand)),
-            ("pair_completeness", float(pc)),
-            ("pairs_quality", float(pq)),
-            ("reduction_ratio", float(rr)),
+            ("pair_completeness", pc),
+            ("pairs_quality", pq),
+            ("reduction_ratio", rr),
             ("tp_pairs", float(n_tp)),
             ("true_pairs", float(n_true)),
         ],
-        "stat string, value double",
     )
 
 
@@ -338,9 +353,10 @@ def adjusted_rand_index(assign: DataFrame) -> DataFrame:
     # C-style round-half-away (what SQL engines' round() does on
     # doubles), NOT Python's banker's rounding
     ari = _r6(num / den) if den != 0 else None
-    return assign.sparkSession.createDataFrame(
-        [(n, idx, a_sum, b_sum, ari)],
+    return _local_frame(
+        assign.sparkSession,
         "n_docs long, idx long, a_sum long, b_sum long, ari double",
+        [(n, idx, a_sum, b_sum, ari)],
     )
 
 
@@ -369,7 +385,8 @@ def v_measure(assign: DataFrame) -> DataFrame:
     Output: 3 rows — (stat ∈ {homogeneity, completeness, v_measure},
     value).
     """
-    n = F.lit(_contingency(assign).where(F.col("g") == 3).first()["n"] or 0)
+    total = _contingency(assign).where(F.col("g") == 3).first()
+    n = F.lit(total["n"] if total else 0)
     table = _cells(assign)
 
     def h_sum(num, den, label: str | None = None):
@@ -380,16 +397,20 @@ def v_measure(assign: DataFrame) -> DataFrame:
 
     # H(truth|pred): cells vs pred marginal; H(pred|truth): cells vs
     # truth marginal; H(truth)/H(pred): marginals vs N
-    ctk, ckt, ht, hp = table.agg(
-        h_sum("n_pt", F.col("n_p"), "pred"),
-        h_sum("n_pt", F.col("n_t"), "truth"),
-        h_sum("n_t", n),
-        h_sum("n_p", n),
-    ).first()
+    ctk, ckt, ht, hp = (
+        v or 0
+        for v in table.agg(
+            h_sum("n_pt", F.col("n_p"), "pred"),
+            h_sum("n_pt", F.col("n_t"), "truth"),
+            h_sum("n_t", n),
+            h_sum("n_p", n),
+        ).first()
+    )
     h = 1.0 if ht == 0 else _r6(1.0 - ctk / ht)
     c = 1.0 if hp == 0 else _r6(1.0 - ckt / hp)
     v = _r6(2 * h * c / (h + c)) if h + c else 0.0
-    return assign.sparkSession.createDataFrame(
-        [("completeness", float(c)), ("homogeneity", float(h)), ("v_measure", float(v))],
+    return _local_frame(
+        assign.sparkSession,
         "stat string, value double",
+        [("completeness", c), ("homogeneity", h), ("v_measure", v)],
     )

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..textops.dedup import word_ngram_hashes
+from ..textops.training import _eval_grams
 
 __all__ = ["collect_eval_grams", "stream_decontaminate"]
 
@@ -35,13 +36,10 @@ def collect_eval_grams(
     eval_docs: DataFrame, n: int = 13, text_col: str = "text"
 ) -> list:
     """Distinct word-``n``-gram md5 hashes of the (static, bounded)
-    eval/benchmark set, collected once for ``stream_decontaminate``'s
-    plan literal. Sorted for a deterministic plan."""
-    rows = (
-        eval_docs.select(F.explode(word_ngram_hashes(text_col, n=n)).alias("h"))
-        .distinct()
-        .collect()
-    )
+    eval/benchmark set — the batch rules' eval gram set — collected once
+    for ``stream_decontaminate``'s plan literal. Sorted for a
+    deterministic plan."""
+    rows = _eval_grams(eval_docs, n, text_col).select("h").collect()
     return sorted(r["h"] for r in rows)
 
 

@@ -211,12 +211,7 @@ def simhash(docs: DataFrame, text_col: str = "text", bits: int = 32) -> DataFram
             h = F.concat(h, F.md5(F.concat(F.lit(f"{i}:"), tok)))
         return h
 
-    toks = F.array_distinct(
-        F.filter(
-            F.split(F.lower(text_col), r"\s+"),
-            lambda x: F.length(x) > 0,
-        )
-    )
+    toks = F.array_distinct(word_tokens(text_col))
     high = list("89abcdef")
     sketch = F.array_join(
         F.transform(
@@ -390,17 +385,41 @@ def embedding_near_duplicates(
     )
 
 
-def word_ngram_hashes(
-    text: Column | str, n: int = 8, lowercase: bool = True
-) -> Column:
-    """md5 hashes of overlapping word n-grams as an array column (empty
-    when the document has fewer than ``n`` tokens). Tokens are the
-    non-empty ``\\s+`` splits — the same tokenization as
-    quality.token_counts, so per-doc stats line up across operators."""
+def word_tokens(text: Column | str, lowercase: bool = True) -> Column:
+    """The word tokens of ``text`` as an array column: the non-empty
+    ``\\s+`` splits (so whitespace at either edge, tabs and newlines
+    included, yields no empty token), lowercased unless ``lowercase`` is
+    False. NULL text gives NULL; empty or blank text gives []. Every
+    word-level operator in textops tokenizes here, so per-doc counts line
+    up across operators."""
     t = text if isinstance(text, Column) else F.col(text)
     if lowercase:
         t = F.lower(t)
-    toks = F.filter(F.split(F.trim(t), r"\s+"), lambda x: x != F.lit(""))
+    return F.filter(F.split(t, r"\s+"), lambda x: x != F.lit(""))
+
+
+def span_excision(tokens: Column, starts: Column, n: int) -> tuple:
+    """(n_removed, clean_text) columns: cut the ``n``-token span at
+    every 0-based position in ``starts`` out of ``tokens`` (overlapping
+    spans merge) and join the survivors with single spaces. A map-side
+    higher-order filter, ``exists`` against the (small) start list.
+    NULL tokens give 0 removed and NULL text."""
+    clean = F.filter(
+        tokens, lambda x, i: ~F.exists(starts, lambda s: (i >= s) & (i < s + n))
+    )
+    return (
+        F.coalesce(F.size(tokens) - F.size(clean), F.lit(0)).alias("n_removed"),
+        F.array_join(clean, " ").alias("clean_text"),
+    )
+
+
+def word_ngram_hashes(
+    text: Column | str, n: int = 8, lowercase: bool = True
+) -> Column:
+    """md5 hashes of overlapping word n-grams (over ``word_tokens``) as
+    an array column, empty when the document has fewer than ``n``
+    tokens."""
+    toks = word_tokens(text, lowercase)
     # Spark's sequence(1, stop) DESCENDS for stop < 1 (it never yields an
     # empty array), so short docs need an explicit empty-array branch
     return F.when(
@@ -534,27 +553,14 @@ def excise_duplicate_spans(
         F.sort_array(F.flatten(F.collect_list("poss"))).alias("mstarts"),
         F.sum(F.size("poss")).alias("n_matched"),
     )
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-        lambda x: x != F.lit(""),
-    )
     withm = docs.join(per, "doc_id", "left").select(
         "doc_id",
-        toks.alias("tk"),
+        word_tokens(text_col).alias("tk"),
         F.coalesce("mstarts", F.array().cast("array<int>")).alias("ms"),
         F.coalesce("n_matched", F.lit(0)).alias("n_matched"),
     )
-    clean = F.filter(
-        F.col("tk"),
-        lambda x, i: ~F.exists(F.col("ms"), lambda s: (i >= s) & (i < s + n)),
-    )
     return withm.select(
-        "doc_id",
-        "n_matched",
-        F.when(F.col("tk").isNull(), F.lit(0))
-        .otherwise(F.size("tk") - F.size(clean))
-        .alias("n_removed"),
-        F.array_join(clean, " ").alias("clean_text"),
+        "doc_id", "n_matched", *span_excision(F.col("tk"), F.col("ms"), n)
     )
 
 

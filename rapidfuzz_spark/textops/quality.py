@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import word_tokens
+
 
 def char_trigrams(text: Column | str) -> Column:
     """All (non-distinct) lowercase character trigrams."""
@@ -86,11 +88,7 @@ def quality_features(docs: DataFrame, text_col: str = "text") -> DataFrame:
     density), all as codegen'd arithmetic."""
     t = F.col(text_col)
     n_chars = F.length(t)
-    # filter the [''] artifact: split(trim(''), '\s+') is [''] (size 1),
-    # which would report 1 token for empty/whitespace-only text
-    n_tokens = F.size(
-        F.filter(F.split(F.trim(t), r"\s+"), lambda x: x != F.lit(""))
-    )
+    n_tokens = F.size(word_tokens(t, lowercase=False))
     n_alpha = F.length(F.regexp_replace(F.lower(t), r"[^a-z]", ""))
     n_digit = F.length(F.regexp_replace(t, r"[^0-9]", ""))
     n_space = F.length(F.regexp_replace(t, r"[^ ]", ""))
@@ -142,10 +140,7 @@ def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     t = F.col(text_col)
     return docs.select(
         "doc_id",
-        # empty/whitespace-only text is 0 tokens, not the [''] artifact
-        F.size(
-            F.filter(F.split(F.trim(t), r"\s+"), lambda x: x != F.lit(""))
-        ).alias("ws_tokens"),
+        F.size(word_tokens(t, lowercase=False)).alias("ws_tokens"),
         F.regexp_count(F.lower(t), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]")).alias(
             "bpe_tokens"
         ),
@@ -200,12 +195,7 @@ def token_df_stats(
     and reproducible."""
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.filter(
-                F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-                lambda x: x != F.lit(""),
-            )
-        ).alias("token"),
+        F.explode(word_tokens(text_col)).alias("token"),
     )
     agg = toks.groupBy("token").agg(
         F.countDistinct("doc_id").alias("doc_freq"),
@@ -239,12 +229,7 @@ def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     toks = docs.select(
         "doc_id",
-        F.posexplode_outer(
-            F.filter(
-                F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-                lambda x: x != F.lit(""),
-            )
-        ).alias("pos", "tok"),
+        F.posexplode_outer(word_tokens(text_col)).alias("pos", "tok"),
     )
     w = W.partitionBy("doc_id").orderBy("pos")
     enriched = toks.select(
@@ -406,12 +391,7 @@ def bigram_logprob(
 
     toks = docs.select(
         "doc_id",
-        F.posexplode(
-            F.filter(
-                F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-                lambda x: x != F.lit(""),
-            )
-        ).alias("pos", "w1"),
+        F.posexplode(word_tokens(text_col)).alias("pos", "w1"),
     )
     w = W.partitionBy("doc_id").orderBy("pos")
     bg = toks.withColumn("w2", F.lead("w1").over(w)).where(
@@ -483,12 +463,7 @@ def unigram_logprob(
     picks a broadcast join instead."""
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.filter(
-                F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-                lambda x: x != F.lit(""),
-            )
-        ).alias("token"),
+        F.explode(word_tokens(text_col)).alias("token"),
     )
     vocab = toks.groupBy("token").agg(F.count("*").alias("tf"))
     n_total = vocab.agg(F.sum("tf").alias("n_total"))
@@ -633,9 +608,7 @@ def gopher_rules(
     from double noise).
     """
     t = F.col(text_col)
-    words = F.filter(
-        F.split(F.trim(F.lower(t)), r"\s+"), lambda x: x != F.lit("")
-    )
+    words = word_tokens(t)
     n_words = F.size(words)
     nz = F.nullif(n_words, F.lit(0)).cast("double")
     word_chars = F.aggregate(

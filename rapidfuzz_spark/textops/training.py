@@ -20,11 +20,11 @@ never a driver collect.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .dedup import word_ngram_hashes
+from .dedup import span_excision, word_ngram_hashes, word_tokens
 from .sampling import md5_uniform
 
 __all__ = [
@@ -60,6 +60,127 @@ __all__ = [
 TOY_BPE_MERGES = ("th", "er", "an", "is", "ou")
 
 
+def _eval_grams(eval_docs: DataFrame, n: int, text_col: str) -> DataFrame:
+    """(h, eval_id, et): the DISTINCT word-``n``-gram hashes of the eval
+    side, eval_id and et NULL — the gram rules' probe table. The eval
+    side is benchmarks, not corpus (a few million distinct grams at
+    most), so it broadcasts."""
+    none = F.lit(None).cast("string")
+    return (
+        eval_docs.select(F.explode(word_ngram_hashes(text_col, n=n)).alias("h"))
+        .distinct()
+        .select("h", none.alias("eval_id"), none.alias("et"))
+    )
+
+
+def _eval_anchors(eval_docs: DataFrame, n: int, text_col: str) -> DataFrame:
+    """(h, eval_id, et): one row per eval document of at least ``n``
+    tokens — its FIRST ``n``-gram hash (the anchor), its id, and its
+    normalized text (lowercased tokens joined by single spaces) — the
+    verbatim-containment probe table. A document containing an eval
+    document necessarily contains its anchor, so probing by anchor loses
+    no match."""
+    tk = word_tokens(text_col)
+    return eval_docs.where(F.size(tk) >= n).select(
+        F.element_at(word_ngram_hashes(text_col, n=n), 1).alias("h"),
+        F.col("doc_id").cast("string").alias("eval_id"),
+        F.array_join(tk, " ").alias("et"),
+    )
+
+
+def _gram_pass(
+    docs: DataFrame,
+    probe: DataFrame,
+    n: int,
+    text_col: str,
+    broadcast_eval: bool,
+    keep: tuple = (),
+    broadcast_hits: bool = False,
+) -> DataFrame:
+    """THE corpus gram pass every decontamination rule reads from: one
+    ``posexplode`` of the corpus word ``n``-grams, one probe join against
+    ``probe`` (``_eval_grams`` rows, ``_eval_anchors`` rows, or their
+    union), one per-doc aggregate of the matches, joined back to
+    ``docs.select("doc_id", *keep)``. Adds per document:
+
+    - ``n_hits``: DISTINCT matched eval grams;
+    - ``n_matched`` / ``ms``: matched gram positions, count and sorted
+      0-based starts;
+    - ``cands``: the eval documents whose anchor the document contains,
+      (eval_id, et) structs.
+
+    Only matched grams shuffle, and the per-doc DISTINCT runs after the
+    probe: a corpus-sized dedup shuffle before it would dominate the
+    job. A rule selects the columns it needs and the optimizer prunes
+    the rest from the aggregate and the join back, so each rule pays for
+    its own columns only; ``keep`` carries what a rule computes from the
+    document before the join back (the text, or a map-side count).
+    ``broadcast_eval=False`` makes the probe a hash join on the gram
+    hash, for eval sets too large to broadcast; ``broadcast_hits``
+    broadcasts the per-doc aggregate into the join back, so the
+    document side is never shuffled.
+    """
+    if broadcast_eval:
+        probe = F.broadcast(probe)
+    is_gram = F.col("et").isNull()
+    hits = (
+        docs.select(
+            "doc_id", F.posexplode(word_ngram_hashes(text_col, n=n)).alias("gpos", "h")
+        )
+        .join(probe, "h")
+        .groupBy("doc_id")
+        .agg(
+            F.countDistinct(F.when(is_gram, F.col("h"))).alias("hits"),
+            F.count(F.when(is_gram, F.lit(1))).alias("matched"),
+            F.sort_array(F.collect_list(F.when(is_gram, F.col("gpos")))).alias(
+                "starts"
+            ),
+            F.collect_set(F.when(~is_gram, F.struct("eval_id", "et"))).alias("cand"),
+        )
+    )
+    if broadcast_hits:
+        hits = F.broadcast(hits)
+    side = docs.select("doc_id", *keep)
+    return side.join(hits, "doc_id", "left").select(
+        *side.columns,
+        F.coalesce("hits", F.lit(0)).alias("n_hits"),
+        F.coalesce("matched", F.lit(0)).alias("n_matched"),
+        F.coalesce("starts", F.array().cast("array<int>")).alias("ms"),
+        F.coalesce(
+            "cand", F.array().cast("array<struct<eval_id:string,et:string>>")
+        ).alias("cands"),
+    )
+
+
+def _n_grams(tokens: Column, n: int) -> Column:
+    """Word ``n``-gram positions of a document's ``tokens``: tokens -
+    n + 1, at least 0 (NULL text has none)."""
+    return F.greatest(F.size(tokens) - (n - 1), F.lit(0))
+
+
+def _frac(n_grams: Column) -> Column:
+    """Distinct hits over gram positions, 6-dp rounded; 0.0 without
+    positions."""
+    return F.when(n_grams > 0, F.round(F.col("n_hits") / n_grams, 6)).otherwise(
+        F.lit(0.0)
+    )
+
+
+def _n_eval_hits(tokens: Column) -> Column:
+    """DISTINCT candidate eval documents whose normalized text the
+    document (its ``tokens``) contains on token boundaries (space-padded
+    ``contains``), tested once per candidate."""
+
+    def pad(c: Column) -> Column:
+        return F.concat(F.lit(" "), c, F.lit(" "))
+
+    nt = pad(F.array_join(tokens, " "))
+    found = F.filter("cands", lambda c: nt.contains(pad(c["et"])))
+    return F.size(F.array_distinct(F.transform(found, lambda c: c["eval_id"]))).cast(
+        "long"
+    )
+
+
 def decontaminate(
     docs: DataFrame,
     eval_docs: DataFrame,
@@ -78,39 +199,19 @@ def decontaminate(
     construction — same short-doc convention as
     dedup.duplicate_ngram_fraction.
 
-    Plan shape at 100 TB: the eval side is benchmarks, not corpus — a
-    few million distinct grams at most — so it reduces to a DISTINCT
-    hashed-gram set that broadcasts (``broadcast_eval``), and the corpus
-    pass is one scan + explode + broadcast probe; the per-doc DISTINCT
-    count runs AFTER the probe, so the only corpus-side exchange carries
-    the matched grams (normally a vanishing fraction — a corpus-sized
-    dedup shuffle before the probe would dominate the job). With
+    Plan shape at 100 TB: the eval gram set broadcasts and the corpus
+    pays the shared gram pass (``_gram_pass``: one scan + posexplode +
+    broadcast probe, the per-doc DISTINCT count AFTER the probe), so the
+    only corpus-side exchange carries the matched grams. With
     ``broadcast_eval=False`` the probe is a hash-partitioned join on the
-    gram hash for eval sets too large to broadcast (e.g. decontaminating
-    against another corpus).
+    gram hash for eval sets too large to broadcast (e.g.
+    decontaminating against another corpus).
     """
-    grams = docs.select(
-        "doc_id", F.explode(word_ngram_hashes(text_col, n=n)).alias("h")
+    p = _gram_pass(
+        docs, _eval_grams(eval_docs, n, text_col), n, text_col, broadcast_eval
     )
-    eval_grams = (
-        eval_docs.select(F.explode(word_ngram_hashes(text_col, n=n)).alias("h"))
-        .distinct()
-    )
-    if broadcast_eval:
-        eval_grams = F.broadcast(eval_grams)
-    hits = (
-        grams.join(eval_grams, "h")
-        .groupBy("doc_id")
-        .agg(F.countDistinct("h").alias("n_hits"))
-    )
-    return (
-        docs.select("doc_id")
-        .join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-            (F.coalesce("n_hits", F.lit(0)) >= min_hits).alias("contaminated"),
-        )
+    return p.select(
+        "doc_id", "n_hits", (F.col("n_hits") >= min_hits).alias("contaminated")
     )
 
 
@@ -132,50 +233,25 @@ def decontaminate_fraction(
     (false for docs shorter than ``n`` tokens, which have no grams).
 
     Definition kept deliberately shuffle-free on the corpus side:
-    ``n_grams`` is the number of n-gram POSITIONS (tokens - n + 1),
-    computable map-side from the token count, and ``n_hits`` counts
-    DISTINCT matched grams (same post-probe aggregation as
-    ``decontaminate``). frac = distinct-hits / positions therefore
-    UNDERESTIMATES the distinct-gram fraction for self-repetitive
-    documents — the conservative direction for a drop rule — and the
-    alternative (per-doc DISTINCT gram counts) would shuffle the entire
-    corpus gram stream before the probe, the exact cost
-    ``decontaminate``'s plan exists to avoid. Rounded to 6 dp so the
-    threshold compare is engine-exact (same policy as
+    ``n_grams`` is the number of n-gram POSITIONS (tokens - n + 1, over
+    the same tokens as the grams), computed map-side from the text
+    before the join back, so only an int crosses it; ``n_hits`` counts
+    DISTINCT matched grams (the shared gram pass). frac = distinct-hits
+    / positions therefore UNDERESTIMATES the distinct-gram fraction for
+    self-repetitive documents — the conservative direction for a drop
+    rule — and the alternative (per-doc DISTINCT gram counts) would
+    shuffle the entire corpus gram stream before the probe. Rounded to
+    6 dp so the threshold compare is engine-exact (same policy as
     temperature_resample's rate).
     """
-    grams = docs.select(
-        "doc_id", F.explode(word_ngram_hashes(text_col, n=n)).alias("h")
+    p = _gram_pass(
+        docs, _eval_grams(eval_docs, n, text_col), n, text_col, broadcast_eval,
+        keep=(_n_grams(word_tokens(text_col), n).alias("n_grams"),),
     )
-    eval_grams = (
-        eval_docs.select(F.explode(word_ngram_hashes(text_col, n=n)).alias("h"))
-        .distinct()
-    )
-    if broadcast_eval:
-        eval_grams = F.broadcast(eval_grams)
-    hits = (
-        grams.join(eval_grams, "h")
-        .groupBy("doc_id")
-        .agg(F.countDistinct("h").alias("n_hits"))
-    )
-    toks = F.when(
-        F.col(text_col).isNull() | (F.trim(F.col(text_col)) == ""), F.lit(0)
-    ).otherwise(F.size(F.split(F.trim(F.col(text_col)), r"\s+")))
-    base = docs.select(
-        "doc_id", F.greatest(toks - (n - 1), F.lit(0)).alias("n_grams")
-    )
-    frac = F.when(F.col("n_grams") > 0, F.round(
-        F.coalesce("n_hits", F.lit(0)) / F.col("n_grams"), 6
-    )).otherwise(F.lit(0.0))
-    return (
-        base.join(hits, "doc_id", "left")
-        .select(
-            "doc_id",
-            "n_grams",
-            F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-            frac.alias("frac"),
-            (frac >= max_frac).alias("contaminated"),
-        )
+    frac = _frac(F.col("n_grams"))
+    return p.select(
+        "doc_id", "n_grams", "n_hits", frac.alias("frac"),
+        (frac >= max_frac).alias("contaminated"),
     )
 
 
@@ -202,72 +278,20 @@ def substring_contamination(
     meaningful verbatim inclusion; the n-gram rules own that regime).
 
     Plan shape at 100 TB: a naive contains() is corpus × eval — never.
-    Instead each eval doc's FIRST ``anchor_n``-token gram is its anchor
-    (a doc containing the eval doc necessarily contains that gram, so
-    the prefilter is lossless): the corpus side is the same single
-    explode + broadcast-probe pass as ``decontaminate``, candidates are
-    the anchor matches (a vanishing fraction), and the full contains()
-    verification runs only on candidates after one doc_id join back for
-    the text. Only matched candidates ever shuffle.
+    The probe is each eval doc's first ``anchor_n``-token gram (a
+    lossless prefilter, ``_eval_anchors``), the corpus pays the shared
+    gram pass, and the per-doc candidate sets — anchor matches, a
+    vanishing fraction — BROADCAST into the join back, where the
+    contains() verification runs map-side on the candidates only. The
+    document text is never shuffled.
     """
-    def norm(c):
-        return F.array_join(
-            F.filter(
-                F.split(F.trim(F.lower(c)), r"\s+"), lambda x: x != F.lit("")
-            ),
-            " ",
-        )
-
-    nd = docs.select("doc_id", norm(F.col(text_col)).alias("nt"))
-    ev = (
-        eval_docs.select(
-            F.col("doc_id").alias("eval_id"), norm(F.col(text_col)).alias("et")
-        )
-        .where(F.size(F.split(F.col("et"), " ")) >= anchor_n)
-        .where(F.col("et") != "")
-        .select(
-            "eval_id",
-            "et",
-            F.element_at(
-                word_ngram_hashes(F.col("et"), n=anchor_n), 1
-            ).alias("anchor"),
-        )
+    p = _gram_pass(
+        docs, _eval_anchors(eval_docs, anchor_n, text_col), anchor_n, text_col,
+        broadcast_eval, keep=(F.col(text_col),), broadcast_hits=True,
     )
-    if broadcast_eval:
-        ev = F.broadcast(ev)
-    grams = nd.select(
-        "doc_id", F.explode(word_ngram_hashes(F.col("nt"), n=anchor_n)).alias("h")
-    )
-    cand = (
-        grams.join(ev, grams["h"] == ev["anchor"])
-        .select("doc_id", "eval_id", "et")
-        .distinct()
-    )
-    # the candidate side is anchor matches — a vanishing fraction by the
-    # lossless-prefilter argument above — so the verification join must
-    # BROADCAST it (plan-locked in tests/test_plans.py): left to AQE, a
-    # candidate-count misestimate would turn this into a corpus-wide
-    # doc_id shuffle. decontamination_report avoids even this second
-    # corpus scan by verifying map-side; this standalone op keeps the
-    # two-scan shape for API parity with the other standalone rules.
-    verified = (
-        F.broadcast(cand).join(nd, "doc_id")
-        .where(
-            F.concat(F.lit(" "), F.col("nt"), F.lit(" ")).contains(
-                F.concat(F.lit(" "), F.col("et"), F.lit(" "))
-            )
-        )
-        .groupBy("doc_id")
-        .agg(F.countDistinct("eval_id").alias("n_eval_hits"))
-    )
-    return (
-        docs.select("doc_id")
-        .join(verified, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("n_eval_hits", F.lit(0)).alias("n_eval_hits"),
-            (F.coalesce("n_eval_hits", F.lit(0)) > 0).alias("contaminated"),
-        )
+    hits = _n_eval_hits(word_tokens(text_col))
+    return p.select(
+        "doc_id", hits.alias("n_eval_hits"), (hits > 0).alias("contaminated")
     )
 
 
@@ -289,60 +313,59 @@ def excise_contaminated_spans(
     removes tokens [p, p+n-1], overlapping spans merge naturally, and
     ``clean_text`` is the surviving tokens joined by single spaces.
 
-    Works on the normalized token stream (lowercased, whitespace-split
-    — the shared convention of every gram operator here), so
-    ``clean_text`` is normalized text, not original bytes; pipelines
-    that must preserve raw bytes keep the (doc_id, removed-span) map
-    instead. NULL text stays NULL with zero counts.
+    Works on the normalized token stream (``dedup.word_tokens`` — the
+    shared convention of every gram operator here), so ``clean_text`` is
+    normalized text, not original bytes; pipelines that must preserve
+    raw bytes keep the (doc_id, removed-span) map instead. NULL text
+    stays NULL with zero counts.
 
-    Plan shape: same single corpus explode + broadcast-probe pass as
-    ``decontaminate`` — the only shuffled rows are MATCHED gram
-    positions (vanishing fraction), collected per doc as a sorted
-    start-offset array; the excision itself is a map-side higher-order
-    filter over the token array (exists() against the tiny per-doc
-    match list). The corpus is scanned once and never shuffled.
+    Plan shape: the shared gram pass — the only shuffled rows are
+    MATCHED gram positions (vanishing fraction), collected per doc as a
+    sorted start-offset array; the excision itself is the map-side
+    ``dedup.span_excision`` filter at the join back.
     """
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-        lambda x: x != F.lit(""),
-    )
-    g = docs.select(
+    p = _gram_pass(
+        docs, _eval_grams(eval_docs, n, text_col), n, text_col, broadcast_eval,
+        keep=(F.col(text_col),),
+    ).withColumn("tk", word_tokens(text_col))
+    return p.select("doc_id", "n_matched", *span_excision(F.col("tk"), F.col("ms"), n))
+
+
+def _report(
+    docs: DataFrame,
+    eval_docs: DataFrame,
+    n: int,
+    min_hits: int,
+    max_frac: float,
+    text_col: str,
+    broadcast_eval: bool,
+    anchors: bool,
+) -> DataFrame:
+    """``decontamination_report``'s columns from one gram pass; without
+    ``anchors`` the probe holds the eval gram set only and the substring
+    columns read 0/false."""
+    probe = _eval_grams(eval_docs, n, text_col)
+    if anchors:
+        probe = probe.unionByName(_eval_anchors(eval_docs, n, text_col))
+    p = _gram_pass(
+        docs, probe, n, text_col, broadcast_eval, keep=(F.col(text_col),)
+    ).withColumn("tk", word_tokens(text_col))
+    n_grams, n_eval_hits = _n_grams(F.col("tk"), n), _n_eval_hits(F.col("tk"))
+    frac = _frac(n_grams)
+    minhit, over = F.col("n_hits") >= min_hits, frac >= max_frac
+    verbatim = n_eval_hits > 0
+    return p.select(
         "doc_id",
-        F.posexplode(word_ngram_hashes(text_col, n=n)).alias("gpos", "h"),
-    )
-    eval_grams = (
-        eval_docs.select(F.explode(word_ngram_hashes(text_col, n=n)).alias("h"))
-        .distinct()
-    )
-    if broadcast_eval:
-        eval_grams = F.broadcast(eval_grams)
-    matched = (
-        g.join(eval_grams, "h")
-        .groupBy("doc_id")
-        .agg(
-            F.sort_array(F.collect_list("gpos")).alias("mstarts"),
-            F.count("*").alias("n_matched"),
-        )
-    )
-    withm = docs.join(matched, "doc_id", "left").select(
-        "doc_id",
-        toks.alias("tk"),
-        F.coalesce("mstarts", F.array().cast("array<int>")).alias("ms"),
-        F.coalesce("n_matched", F.lit(0)).alias("n_matched"),
-    )
-    clean = F.filter(
-        F.col("tk"),
-        lambda x, i: ~F.exists(
-            F.col("ms"), lambda s: (i >= s) & (i < s + n)
-        ),
-    )
-    return withm.select(
-        "doc_id",
+        n_grams.alias("n_grams"),
+        "n_hits",
+        frac.alias("frac"),
         "n_matched",
-        F.when(F.col("tk").isNull(), F.lit(0))
-        .otherwise(F.size("tk") - F.size(clean))
-        .alias("n_removed"),
-        F.array_join(clean, " ").alias("clean_text"),
+        *span_excision(F.col("tk"), F.col("ms"), n),
+        n_eval_hits.alias("n_eval_hits"),
+        minhit.alias("contaminated_minhit"),
+        over.alias("contaminated_frac"),
+        verbatim.alias("contaminated_substring"),
+        (minhit | over | verbatim).alias("contaminated_any"),
     )
 
 
@@ -371,152 +394,34 @@ def decontamination_report(
          clean_text, n_eval_hits, contaminated_minhit,
          contaminated_frac, contaminated_substring, contaminated_any)
 
-    Each column is bit-for-bit the corresponding standalone operator's
-    output (locked by tests/test_textops.py): ``n_hits``/``frac`` the
-    distinct-hit count and position-fraction, ``n_matched``/
-    ``n_removed``/``clean_text`` the excision triple, ``n_eval_hits``
-    the verified verbatim inclusions. One fusion constraint: the
-    substring rule's anchor length is ``n`` (the shared gram size)
-    instead of an independent ``anchor_n`` — eval docs shorter than
-    ``n`` tokens fall to the gram rules, which own that regime anyway.
+    Each column is the corresponding standalone operator's output by
+    construction: every rule is a selection from the same gram pass
+    (``_gram_pass``) with the same column expressions; the standalone
+    rules differ only in which eval table they probe and in what they
+    carry into the join back. One fusion
+    constraint: the substring rule's anchor length is ``n`` (the shared
+    gram size) instead of an independent ``anchor_n`` — eval docs
+    shorter than ``n`` tokens fall to the gram rules, which own that
+    regime anyway.
 
     Plan shape — the whole point:
 
     - The corpus text is gram-exploded EXACTLY ONCE (one
       ``posexplode``; positions serve excision, hashes serve
       everything), plan-locked by tests/test_plans.py.
-    - The eval side is ONE union table keyed by gram hash: the distinct
-      eval gram set (rows with NULL eval_id) plus one anchor row per
-      eval doc carrying (eval_id, normalized text). A single broadcast
-      probe join classifies every matched corpus gram as a gram-rule
-      hit, a containment candidate, or both.
+    - The probe is ONE union table keyed by gram hash: the distinct
+      eval gram set (rows with NULL et) plus one anchor row per eval
+      doc. A single broadcast probe join classifies every matched
+      corpus gram as a gram-rule hit, a containment candidate, or both.
     - ONE per-doc aggregation computes the distinct-hit count, the
-      sorted matched positions, and the candidate eval set
-      (``collect_set`` of the tiny anchor matches) together — matched
-      grams are the only shuffled rows, exactly as in each standalone
-      op.
-    - The containment verification is a map-side higher-order filter
-      (``exists``/``filter`` over the per-doc candidate array) at the
-      final doc_id join-back — the second corpus scan + join the
-      standalone ``substring_contamination`` pays for verification
-      does not exist here.
-
-    The final join back to ``docs`` re-reads (doc_id, text) — a plain
-    column-pruned scan, not a re-explode; same shape as every
-    standalone rule.
+      sorted matched positions, and the candidate eval set together —
+      matched grams are the only shuffled rows.
+    - Excision and containment verification are map-side higher-order
+      expressions at the doc_id join back, which re-reads (doc_id,
+      text) — a plain column-pruned scan, not a re-explode.
     """
-    def norm(c):
-        return F.array_join(
-            F.filter(
-                F.split(F.trim(F.lower(c)), r"\s+"), lambda x: x != F.lit("")
-            ),
-            " ",
-        )
-
-    # eval side: gram set ∪ anchor rows, one small broadcast table
-    ev_norm = eval_docs.select(
-        F.col("doc_id").cast("string").alias("eval_id"),
-        norm(F.col(text_col)).alias("et"),
-    )
-    eval_grams = (
-        ev_norm.select(F.explode(word_ngram_hashes(F.col("et"), n=n)).alias("h"))
-        .distinct()
-        .select(
-            "h",
-            F.lit(None).cast("string").alias("eval_id"),
-            F.lit(None).cast("string").alias("et"),
-        )
-    )
-    anchors = (
-        ev_norm.where(F.col("et") != "")
-        .where(F.size(F.split(F.col("et"), " ")) >= n)
-        .select(
-            F.element_at(word_ngram_hashes(F.col("et"), n=n), 1).alias("h"),
-            "eval_id",
-            "et",
-        )
-    )
-    probe_tbl = eval_grams.unionByName(anchors)
-    if broadcast_eval:
-        probe_tbl = F.broadcast(probe_tbl)
-
-    # THE corpus gram pass: one posexplode, one probe join, one agg
-    g = docs.select(
-        "doc_id",
-        F.posexplode(word_ngram_hashes(text_col, n=n)).alias("gpos", "h"),
-    )
-    is_gram = F.col("eval_id").isNull()
-    agg = (
-        g.join(probe_tbl, "h")
-        .groupBy("doc_id")
-        .agg(
-            F.countDistinct(F.when(is_gram, F.col("h"))).alias("n_hits"),
-            F.sort_array(
-                F.collect_list(F.when(is_gram, F.col("gpos")))
-            ).alias("mstarts"),
-            F.count(F.when(is_gram, F.lit(1))).alias("n_matched"),
-            F.collect_set(
-                F.when(~is_gram, F.struct("eval_id", "et"))
-            ).alias("cands"),
-        )
-    )
-
-    toks = F.filter(
-        F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-        lambda x: x != F.lit(""),
-    )
-    withm = docs.join(agg, "doc_id", "left").select(
-        "doc_id",
-        toks.alias("tk"),
-        norm(F.col(text_col)).alias("nt"),
-        F.col(text_col).isNull().alias("was_null"),
-        F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
-        F.coalesce("mstarts", F.array().cast("array<int>")).alias("ms"),
-        F.coalesce("n_matched", F.lit(0)).alias("n_matched"),
-        F.coalesce(
-            "cands", F.array().cast("array<struct<eval_id:string,et:string>>")
-        ).alias("cands"),
-    )
-    clean = F.filter(
-        F.col("tk"),
-        lambda x, i: ~F.exists(F.col("ms"), lambda s: (i >= s) & (i < s + n)),
-    )
-    n_grams = F.greatest(F.size("tk") - (n - 1), F.lit(0))
-    frac = F.when(
-        n_grams > 0, F.round(F.col("n_hits") / n_grams, 6)
-    ).otherwise(F.lit(0.0))
-    n_eval_hits = F.size(
-        F.array_distinct(
-            F.filter(
-                F.col("cands"),
-                lambda c: F.concat(F.lit(" "), F.col("nt"), F.lit(" ")).contains(
-                    F.concat(F.lit(" "), c["et"], F.lit(" "))
-                ),
-            )
-        )
-    ).cast("long")
-    out = withm.select(
-        "doc_id",
-        n_grams.alias("n_grams"),
-        "n_hits",
-        frac.alias("frac"),
-        "n_matched",
-        F.when(F.col("was_null"), F.lit(0))
-        .otherwise(F.size("tk") - F.size(clean))
-        .alias("n_removed"),
-        F.when(F.col("was_null"), F.lit(None).cast("string"))
-        .otherwise(F.array_join(clean, " "))
-        .alias("clean_text"),
-        n_eval_hits.alias("n_eval_hits"),
-        (F.col("n_hits") >= min_hits).alias("contaminated_minhit"),
-        (frac >= max_frac).alias("contaminated_frac"),
-        (n_eval_hits > 0).alias("contaminated_substring"),
-    )
-    return out.withColumn(
-        "contaminated_any",
-        F.col("contaminated_minhit")
-        | F.col("contaminated_frac")
-        | F.col("contaminated_substring"),
+    return _report(
+        docs, eval_docs, n, min_hits, max_frac, text_col, broadcast_eval, anchors=True
     )
 
 
@@ -787,7 +692,7 @@ def bpe_token_counts(
 
     @F.pandas_udf("long")
     def _count(texts: pd.Series) -> pd.Series:
-        def word_tokens(w: str) -> int:
+        def word_bpe_count(w: str) -> int:
             syms = list(w)
             while True:
                 best = None
@@ -818,7 +723,7 @@ def bpe_token_counts(
             t = t.strip()
             if not t:
                 return 0
-            return sum(word_tokens(w) for w in re.split(r"\s+", t))
+            return sum(word_bpe_count(w) for w in re.split(r"\s+", t))
 
         return texts.map(doc_tokens)
 
@@ -922,56 +827,40 @@ def training_export(
     cross shards, so the result is still whole-document packs, just
     ``pack_shards`` independent streams per language.
 
-    **Multi-rule decontamination** (round 5): ``decontam_rules`` picks
-    the drop rules from {"minhit", "fraction", "substring"} and
-    ``excise=True`` additionally CUTS matched spans from surviving
-    documents, with packing budgeted on the post-excision token counts.
-    The default ``("minhit",)`` keeps the classic single-rule path and
-    plan bit-for-bit. With more than one rule (or excision) the export
-    switches to ``decontamination_report`` — every requested rule from
-    the SAME single corpus gram pass, so a 3-rule-plus-excision export
-    still pays exactly ONE corpus-dominating decontamination stage
-    (the whole point of the fusion; composing standalone rules here
-    would re-explode the corpus once per rule). The checkpointed clean
-    list stays narrow either way: (doc_id) classic, (doc_id, n_removed)
-    with excision — never text.
+    **Decontamination rules**: ``decontam_rules`` picks the drop rules
+    from {"minhit", "fraction", "substring"} and ``excise=True``
+    additionally CUTS matched spans from surviving documents, with
+    packing budgeted on the post-excision token counts. Every
+    combination reads ``decontamination_report``'s columns from the SAME
+    single corpus gram pass, so a 3-rule-plus-excision export still pays
+    exactly ONE corpus-dominating decontamination stage; the eval anchor
+    rows join the probe only when "substring" is requested, and the
+    optimizer prunes the columns no requested rule reads (the default
+    ``("minhit",)`` export runs ``decontaminate``'s plan). The
+    checkpointed clean list stays narrow: (doc_id), plus n_removed with
+    excision — never text.
     """
-    bad = set(decontam_rules) - {"minhit", "fraction", "substring"}
+    flag = {
+        "minhit": "contaminated_minhit",
+        "fraction": "contaminated_frac",
+        "substring": "contaminated_substring",
+    }
+    bad = set(decontam_rules) - set(flag)
     if bad:
         raise ValueError(f"unknown decontam rules: {sorted(bad)}")
-    multi = excise or set(decontam_rules) != {"minhit"}
-    if not multi:
-        clean = (
-            decontaminate(
-                docs, eval_docs, n=decontam_n, min_hits=min_hits,
-                text_col=text_col,
-            )
-            .where(~F.col("contaminated"))
-            .select("doc_id")
-        )
-    else:
-        rep = decontamination_report(
-            docs,
-            eval_docs,
-            n=decontam_n,
-            min_hits=min_hits,
-            max_frac=max_frac,
-            text_col=text_col,
-        )
-        drop = F.lit(False)
-        if "minhit" in decontam_rules:
-            drop = drop | F.col("contaminated_minhit")
-        if "fraction" in decontam_rules:
-            drop = drop | F.col("contaminated_frac")
-        if "substring" in decontam_rules:
-            drop = drop | F.col("contaminated_substring")
-        cols = ["doc_id"] + (["n_removed"] if excise else [])
-        clean = rep.where(~drop).select(*cols)
+    rep = _report(
+        docs, eval_docs, decontam_n, min_hits, max_frac, text_col,
+        broadcast_eval=True, anchors="substring" in decontam_rules,
+    )
+    drop = F.lit(False)
+    for rule in decontam_rules:
+        drop = drop | F.col(flag[rule])
+    clean = rep.where(~drop).select("doc_id", *(["n_removed"] if excise else []))
     if persist_clean:
         clean = clean.localCheckpoint(eager=False)
     kept_docs = docs.join(clean, "doc_id")
     kept = temperature_resample(kept_docs, alpha=alpha, group_col=group_col)
-    if multi and excise:
+    if excise:
         # budget packs on the POST-excision token counts, computed
         # map-side from the raw text minus the checkpointed removal
         # count — the excised text itself never ships through the plan
@@ -1052,10 +941,7 @@ def dsir_weights(
     shuffle, which partial-aggregates map-side onto bucket ids.
     """
     def grams(df: DataFrame) -> DataFrame:
-        tk = F.filter(
-            F.split(F.trim(F.lower(F.col(text_col))), r"\s+"),
-            lambda x: x != F.lit(""),
-        )
+        tk = word_tokens(text_col)
         # size >= 2 guard BEFORE the transform: sequence(1, 0) in Spark
         # is the DESCENDING [1, 0], not empty, so a single-token doc
         # would index tk[1] out of bounds under ANSI mode

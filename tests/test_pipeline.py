@@ -1150,6 +1150,54 @@ def test_v_measure_known_values(spark):
     assert got == _vm_brute(single_t)
 
 
+def test_metrics_on_empty_assignment(spark):
+    """No docs: V-measure takes sklearn's conventions (both entropies
+    are 0, so h = c = v = 1.0) instead of failing on the missing N row,
+    and ARI reports zero counts with a NULL index (den = 0)."""
+    from rapidfuzz_spark.pipeline.metrics import adjusted_rand_index, v_measure
+
+    empty = spark.createDataFrame([], "doc_id string, pred string, truth string")
+    vm = {r.stat: r.value for r in v_measure(empty).collect()}
+    assert vm == {"homogeneity": 1.0, "completeness": 1.0, "v_measure": 1.0}
+    assert tuple(adjusted_rand_index(empty).first()) == (0, 0, 0, 0, None)
+
+
+def test_stats_frames_collect_without_a_job(spark):
+    """Each metric runs its own action(s) and returns its stats as a
+    local relation: collecting the returned frame starts no Spark job
+    (a frame from createDataFrame(list) is RDD-backed and runs one)."""
+    from rapidfuzz_spark.pipeline import metrics
+
+    labels = [("a", "x"), ("a", "x"), ("a", "y"), ("b", "y"), ("b", None)]
+    assign = spark.createDataFrame(
+        [(f"d{i}", p, t) for i, (p, t) in enumerate(labels)],
+        "doc_id string, pred string, truth string",
+    )
+    truth = assign.select("doc_id", F.col("truth").alias("entity_id"))
+    pairs = spark.createDataFrame(
+        [("d0", "d1"), ("d0", "d2"), ("d3", "d4")], "doc_id_1 string, doc_id_2 string"
+    )
+    sc = spark.sparkContext
+    frames = {
+        "bcubed": metrics.bcubed(assign),
+        "v_measure": metrics.v_measure(assign),
+        "ari": metrics.adjusted_rand_index(assign),
+        "blocking_quality": metrics.blocking_quality(pairs, truth),
+    }
+    for name, frame in frames.items():
+        group = f"stats-frame-{name}"
+        sc.setJobGroup(group, "collect a metric's stats frame")
+        try:
+            rows = frame.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rows, name
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+    # the frames hold the metric's numbers: d0-d1 is the one pair in a cell
+    ari = frames["ari"].first()
+    assert (ari.n_docs, ari.idx) == (5, 1)
+
+
 # ---------------------------------------------------------------------------
 # phonetic (Soundex) blocking key
 # ---------------------------------------------------------------------------

@@ -558,6 +558,20 @@ class TestBigramLogprob:
         assert out[3].n_bigrams == 0 and out[3].mean_logprob is None
 
 
+def _canon(df):
+    """A pandas result in a comparable form: columns and rows sorted,
+    NULL strings as a sentinel, floats to 6 dp, other numbers as float."""
+    df = df[sorted(df.columns)].copy()
+    for c in df.columns:
+        if df[c].dtype == object:
+            df[c] = df[c].where(df[c].notna(), "\x00N").astype(str)
+        elif "float" in str(df[c].dtype):
+            df[c] = df[c].round(6)
+        else:
+            df[c] = df[c].astype("float64")
+    return df.sort_values(by=list(df.columns)).reset_index(drop=True)
+
+
 def test_oracle_null_conventions_match_spark(spark):
     """ADVICE r3: the sf0.01 gate corpus has no NULL text/lang, so the
     oracles' NULL conventions were never exercised. This fixture has
@@ -583,17 +597,6 @@ def test_oracle_null_conventions_match_spark(spark):
     con.register("documents", docs.toPandas())
     oracles = E.oracle_sql()
 
-    def canon(df):
-        df = df[sorted(df.columns)].copy()
-        for c in df.columns:
-            if df[c].dtype == object:
-                df[c] = df[c].where(df[c].notna(), "\x00N").astype(str)
-            elif "float" in str(df[c].dtype):
-                df[c] = df[c].round(6)
-            else:
-                df[c] = df[c].astype("float64")
-        return df.sort_values(by=list(df.columns)).reset_index(drop=True)
-
     got = (
         training.temperature_resample(docs, alpha=0.5)
         .select("doc_id", "lang", F.round("u", 6).alias("u"), "rate")
@@ -603,14 +606,102 @@ def test_oracle_null_conventions_match_spark(spark):
     # at rate 1.0 and the 2-doc NULL group must have a rate, not vanish
     assert set(got["lang"].where(got["lang"].notna(), None)) >= {None} or True
     want = con.sql(oracles["temp_resample"]).df()
-    assert canon(got).equals(canon(want)), (got, want)
+    assert _canon(got).equals(_canon(want)), (got, want)
     assert any(r is None for r in want["lang"]), "oracle dropped NULL lang"
 
     got2 = training.pack_documents(docs, budget=256, n_shards=4).toPandas()
     want2 = con.sql(oracles["pack_docs"]).df()
-    assert canon(got2).equals(canon(want2)), (got2, want2)
+    assert _canon(got2).equals(_canon(want2)), (got2, want2)
     # NULL text really hit the convention: 0 tokens, still packed
     assert int(want2.set_index("doc_id").loc[2, "n_tokens"]) == 0
+
+
+def test_decontamination_oracles_on_adversarial_fixture(spark):
+    """The gate corpora hold no text with whitespace other than single
+    spaces at an edge, no NULL or blank text, and no eval doc shorter
+    than the anchor. This fixture has all of them, and the ACTUAL
+    oracle_sql() strings must reproduce every decontamination operator
+    on it. Doc ids 12, 13 and 19 fall in the oracles' 5% md5('eval:' ||
+    doc_id) draw. Doc 1 is the tab-led twin of eval doc 12: its 15
+    tokens give 3 13-gram positions, all hits (frac 1.0), however the
+    text's edges are spelled."""
+    import duckdb
+
+    import __spark_entry__ as E
+    from rapidfuzz_spark.streaming import collect_eval_grams, stream_decontaminate
+    from rapidfuzz_spark.textops import dedup
+    from rapidfuzz_spark.textops.sampling import md5_uniform
+    from rapidfuzz_spark.textops.training import (
+        decontaminate_fraction,
+        decontamination_report,
+        excise_contaminated_spans,
+        substring_contamination,
+    )
+
+    a = (
+        "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu nu xi"
+        " omicron"
+    )
+    b = (
+        "one two three four five six seven eight nine ten eleven twelve thirteen"
+        " fourteen"
+    )
+    rows = [
+        (1, "\t" + a),  # eval doc 12's twin behind a tab
+        (2, "Prefix words\n" + b.upper() + "\tsuffix\n"),  # contains eval doc 13
+        (3, None),
+        (4, "   "),
+        (5, "\t\n"),
+        (6, ""),
+        (7, "too short doc here"),  # < 8 tokens
+        (8, "x " + " ".join(a.split()[:13]) + " y"),  # one shared 13-gram
+        (9, a + "\n" + a),  # overlapping matched spans, contains eval doc 12
+        (10, "clean text with nothing in common at all but long enough for grams"),
+        (11, " ".join(a.split()[:8]) + "\t"),  # eval doc 12's 8-token anchor only
+        (12, "\t" + a),  # eval: tab at the start
+        (13, b + "\n"),  # eval: newline at the end
+        (14, "Short Eval Doc inside a longer document"),
+        (19, "short eval doc"),  # eval, shorter than any anchor
+    ]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    ev = docs.where(md5_uniform("doc_id", "eval") < 0.05)
+    assert sorted(r.doc_id for r in ev.collect()) == [12, 13, 19]
+    con = duckdb.connect()
+    con.register("documents", docs.toPandas())
+    oracles = E.oracle_sql()
+
+    report = decontamination_report(docs, ev, n=13, min_hits=1, max_frac=0.05)
+    rules = {
+        "decontaminate_eval": decontaminate(docs, ev, n=13),
+        "decontaminate_frac": decontaminate_fraction(docs, ev, n=13, max_frac=0.05),
+        "substring_contam": substring_contamination(docs, ev, anchor_n=8),
+        "excise_spans": excise_contaminated_spans(docs, ev, n=13),
+        "decon_report": report,
+        "stream_decontam": stream_decontaminate(
+            docs, collect_eval_grams(ev, n=13), n=13
+        ),
+        "excise_dup_spans": dedup.excise_duplicate_spans(docs, n=8, min_docs=2),
+    }
+    for name, df in rules.items():
+        got, want = df.toPandas(), con.sql(oracles[name]).df()
+        assert _canon(got).equals(_canon(want)), (name, got, want)
+
+    rep = {r.doc_id: r for r in report.collect()}
+    assert (rep[1].n_grams, rep[1].n_hits, rep[1].frac) == (3, 3, 1.0)
+    assert rep[2].contaminated_substring and not rep[11].contaminated_substring
+    # every standalone rule equals its report columns (substring at
+    # anchor_n = n, the report's one fusion constraint)
+    standalone = {
+        ("n_hits", "contaminated_minhit"): decontaminate(docs, ev, n=13),
+        ("n_grams", "n_hits", "frac", "contaminated_frac"): rules["decontaminate_frac"],
+        ("n_eval_hits", "contaminated_substring"): substring_contamination(
+            docs, ev, anchor_n=13
+        ),
+        ("n_matched", "n_removed", "clean_text"): rules["excise_spans"],
+    }
+    for cols, df in standalone.items():
+        got = {r.doc_id: tuple(r)[1:] for r in df.collect()}
+        assert got == {k: tuple(r[c] for c in cols) for k, r in rep.items()}, cols
 
 
 class TestToyBpe:

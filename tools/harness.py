@@ -17,7 +17,8 @@ The harness owns everything else:
   warm-up's digest fields, and ``agree`` fields must match across variants;
 - one JSON row per (workload, variant, level) on standard output;
 - per-stage task statistics of the best run's Spark jobs (max/p75/median
-  task ms, tasks, shuffle MB), read from Spark's event log with
+  task ms, tasks, shuffle MB; the ``TOP_STAGES`` longest stages), and the
+  shuffle MB written by all its stages, read from Spark's event log with
   ``perfbench.spans.read_event_log``.
 
 ``--size`` defaults to the size of the BENCH.md row the workload records
@@ -143,7 +144,8 @@ def session(executors: int, wl: Workload, events: str):
 
 
 def stage_stats(jobs: list, t0: float, t1: float) -> list:
-    """Task statistics per stage of the jobs submitted in [t0, t1]."""
+    """Task statistics per stage of the jobs submitted in [t0, t1],
+    longest task first."""
     stages: dict = {}
     for submitted, tasks in jobs:
         if t0 <= submitted <= t1:
@@ -170,7 +172,7 @@ def stage_stats(jobs: list, t0: float, t1: float) -> list:
                 "shuffle_mb": round(written / MB, 2),
             }
         )
-    return sorted(out, key=lambda r: -r["max_task_ms"])[:TOP_STAGES]
+    return sorted(out, key=lambda r: -r["max_task_ms"])
 
 
 def run(name: str, executors: int, size=None, spark=None) -> list:
@@ -231,7 +233,9 @@ def run(name: str, executors: int, size=None, spark=None) -> list:
     jobs = read_event_log(events) if own else []
     shutil.rmtree(work, ignore_errors=True)
     for r in rows:
-        r["stages"] = stage_stats(jobs, *r.pop("window"))
+        stages = stage_stats(jobs, *r.pop("window"))
+        r["shuffle_mb"] = round(sum(s["shuffle_mb"] for s in stages), 2)
+        r["stages"] = stages[:TOP_STAGES]
     return rows
 
 
@@ -726,14 +730,11 @@ def quoting_corpus(spark, n_docs: int) -> dict:
     return {"docs": docs, "eval": ev, "n_docs": docs.count()}
 
 
-def consume(df) -> int:
-    """Materialize every row: a count plus sums over 4 numeric columns."""
-    num = [
-        f.name
-        for f in df.schema.fields
-        if f.dataType.typeName() in ("long", "integer", "double")
-    ]
-    return df.agg(F.count("*"), *[F.sum(c) for c in num[:4]]).collect()[0][0]
+def consume(df) -> list:
+    """Materialize every row and every column: [row count, bit_xor of
+    each row's xxhash64] — exact and independent of row order, so it
+    doubles as a digest of the output."""
+    return list(df.agg(F.count("*"), F.bit_xor(F.xxhash64(*df.columns))).first())
 
 
 def decon_fused(i) -> dict:
@@ -745,25 +746,37 @@ def decon_fused(i) -> dict:
     return {"rows": consume(report)}
 
 
+# the four standalone rules, at the fused report's settings
+DECON_RULES = (
+    ("decontaminate", {"n": 13, "min_hits": 1}),
+    ("decontaminate_fraction", {"n": 13, "max_frac": 0.05}),
+    ("substring_contamination", {"anchor_n": 13}),
+    ("excise_contaminated_spans", {"n": 13}),
+)
+
+
+def decon_rule(name: str, kw: dict):
+    def job(i) -> dict:
+        from rapidfuzz_spark.textops import training
+
+        return {"rows": consume(getattr(training, name)(i["docs"], i["eval"], **kw))}
+
+    return job
+
+
 def decon_composed(i) -> dict:
     """The four standalone rules, each re-exploding the corpus grams."""
-    from rapidfuzz_spark.textops import training
-
-    d, ev = i["docs"], i["eval"]
-    return {
-        "rows": [
-            consume(training.decontaminate(d, ev, n=13, min_hits=1)),
-            consume(training.decontaminate_fraction(d, ev, n=13, max_frac=0.05)),
-            consume(training.substring_contamination(d, ev, anchor_n=13)),
-            consume(training.excise_contaminated_spans(d, ev, n=13)),
-        ]
-    }
+    return {"rows": [decon_rule(*r)(i)["rows"] for r in DECON_RULES]}
 
 
 register(
     "decon_fusion",
     build=quoting_corpus,
-    jobs={"fused_report": decon_fused, "composed_4_rules": decon_composed},
+    jobs={
+        "fused_report": decon_fused,
+        "composed_4_rules": decon_composed,
+        **{name: decon_rule(name, kw) for name, kw in DECON_RULES},
+    },
     size=60_000,
     digest=("rows",),
     cluster=False,
